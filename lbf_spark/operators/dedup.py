@@ -18,38 +18,53 @@ broadcast-free, skew-safe by construction.
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame, functions as F
 
 TOKEN_RE = "[^a-z0-9]+"
 
-# Frames persisted by jaccard_pairs, oldest first. The results are
-# lazy, so the function cannot unpersist its own intermediates; callers
-# that run MANY dedup passes in one session release them explicitly.
-_SCOPED_CACHES: list[DataFrame] = []
 
-# Eagerly-materialized local checkpoints whose data outlives their
-# builder (dup_clusters' returned labels): release_caches frees their
-# blocks too — after the consuming actions, per the same contract.
-_SCOPED_CHECKPOINTS: list[DataFrame] = []
+class _ReleaseScope(threading.local):
+    # Frames persisted or checkpointed for the CALLING thread; the
+    # results are lazy, so release_caches frees them after the
+    # consuming actions. Per thread: a foreachBatch callback runs on
+    # its own thread and must not free a concurrent batch pass's state.
+    def __init__(self):
+        self.frames: list[DataFrame] = []
+
+
+_SCOPE = _ReleaseScope()
+
+
+def _persist_scoped(frame: DataFrame) -> DataFrame:
+    from pyspark import StorageLevel
+
+    frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
+    _SCOPE.frames.append(frame)
+    return frame
 
 
 def release_caches() -> int:
-    """Unpersist every frame jaccard_pairs persisted so far (and free
-    the blocks of every scope-registered local checkpoint) and return
-    how many were released. Call after the consuming action(s) of a
-    dedup pass complete — the scoped-ownership answer to the default
-    session-lifetime persist (`spark.catalog.clearCache()` also works
-    but nukes unrelated caches — and does NOT free checkpoint blocks)."""
+    """Free every frame the dedup operators persisted or checkpointed
+    (``dup_clusters``' returned labels) on the CALLING thread — the
+    scope is per thread — and return how many were freed. Call after
+    the consuming action(s) of a dedup pass complete: acting on a
+    returned labels frame after release raises, its local-checkpoint
+    blocks being gone for good. (`spark.catalog.clearCache()` nukes
+    unrelated caches and does NOT free checkpoint blocks.)"""
     from lbf_spark.util import free_local_checkpoint
 
     n = 0
-    while _SCOPED_CACHES:
-        # blocking: callers (and tests) may immediately assert on the
-        # persisted-RDD count; the async default leaves a removal race
-        _SCOPED_CACHES.pop().unpersist(blocking=True)
-        n += 1
-    while _SCOPED_CHECKPOINTS:
-        n += 1 if free_local_checkpoint(_SCOPED_CHECKPOINTS.pop()) else 0
+    while _SCOPE.frames:
+        frame = _SCOPE.frames.pop()
+        if frame.is_cached:
+            # blocking: callers (and tests) may immediately assert on the
+            # persisted-RDD count; the async default leaves a removal race
+            frame.unpersist(blocking=True)
+            n += 1
+        else:
+            n += free_local_checkpoint(frame)
     return n
 
 
@@ -187,33 +202,26 @@ def lsh_candidate_pairs(
     signed: DataFrame,
     bands: int = 4,
     id_col: str = "doc_id",
-) -> DataFrame:
+) -> tuple[DataFrame, bool]:
     """Band the signature, equi-join on (band_id, band_hash) → candidate
-    pairs (a < b). One shuffle; hot buckets are real near-dup clusters."""
-    from pyspark import StorageLevel
-
+    pairs (a < b). One shuffle; hot buckets are real near-dup clusters.
+    Returns ``(pairs, broadcast)``, the flag being the pair join's
+    dispatch (``_indexed_pair_counts``) for the verify step to follow."""
     # The postings feed both sides of the pair join — persist them so
     # the signature computation (one md5 + k permutations per shingle)
     # runs once, and fill eagerly in the broadcast regime (concurrent
     # build jobs would race the unmaterialized cache — see
     # _indexed_pair_counts).
-    banded = lsh_postings(signed, bands, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SCOPED_CACHES.append(banded)
+    banded = _persist_scoped(lsh_postings(signed, bands, id_col))
     # groupBy-with-count ≡ distinct here (the count is dropped); the
     # shared helper's broadcast-aware dispatch then lets the candidate
     # dedup reuse the stream side's id partitioning with no exchange
-    pairs, regime = _indexed_pair_counts(
+    pairs, broadcast = _indexed_pair_counts(
         banded, id_col, "_n_bands", keys=("band_id", "band_hash")
     )
-    if regime:
+    if broadcast:
         banded.count()
-    out = pairs.select("id_a", "id_b")
-    # verify consumers read this to keep their per-doc lookups
-    # broadcast in the same regime (see jaccard_pairs)
-    out._lbf_broadcast_regime = regime
-    return out
+    return pairs.select("id_a", "id_b"), broadcast
 
 
 def lsh_index(
@@ -263,17 +271,9 @@ def lsh_incremental_pairs(
     Equivalent by construction to running the full LSH dedup on
     corpus ∪ batch and keeping pairs touching the batch (q181 proves
     the equivalence bit-exactly against that relational replay)."""
-    from pyspark import StorageLevel
-
-    shingled_new = with_shingles(new_docs, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SCOPED_CACHES.append(shingled_new)
+    shingled_new = _persist_scoped(with_shingles(new_docs, id_col, text_col, n))
     signed_new = minhash_signature(shingled_new, num_hashes, id_col)
-    new_post = lsh_postings(signed_new, bands, id_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SCOPED_CACHES.append(new_post)
+    new_post = _persist_scoped(lsh_postings(signed_new, bands, id_col))
     np_a = new_post.alias("a")
     cross = (
         np_a.join(
@@ -315,6 +315,11 @@ def lsh_incremental_pairs(
     return {"pairs": pairs, "postings": new_post}
 
 
+#: optimizer size estimate (bytes) of an inverted index at or under
+#: which ``_indexed_pair_counts`` broadcasts it (see its docstring).
+INDEX_BROADCAST_BYTES = 256 * 1024 * 1024
+
+
 def _indexed_pair_counts(
     inv: DataFrame,
     id_col: str,
@@ -328,7 +333,7 @@ def _indexed_pair_counts(
     Physical-plan dispatch (results identical either way), decided
     from the OPTIMIZER'S size estimate of the index frame (driver-side
     plan stats, nothing executes): when the estimate is under
-    ``$LBF_INDEX_BROADCAST_BYTES`` (default 256 MB), the index side is
+    ``INDEX_BROADCAST_BYTES`` (256 MB), the index side is
     broadcast EXPLICITLY and the stream side is hash-partitioned by
     its doc id: every constructed pair (a, b) then lands in the
     partition owning the stream doc, the count aggregation's
@@ -388,18 +393,13 @@ def _indexed_pair_counts(
             .agg(*aggs)
         )
 
-    import os
-
     try:
         est = int(
             inv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:
         est = None
-    limit = int(
-        os.environ.get("LBF_INDEX_BROADCAST_BYTES", str(256 * 1024 * 1024))
-    )
-    if est is not None and 0 <= est <= limit:
+    if est is not None and 0 <= est <= INDEX_BROADCAST_BYTES:
         carry = carry_size_col is not None
         # x streams hash-partitioned by id; y is the broadcast index
         return _shape(
@@ -414,13 +414,13 @@ def jaccard_pairs(
     id_col: str = "doc_id",
     candidates: DataFrame | None = None,
     max_df: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard ≥ threshold pairs.
 
     Without `candidates`: inverted-index join on shingle (the exact,
     scalable path — |pairs sharing a shingle| ≪ n²). With `candidates`
-    (e.g. from LSH): verify only those. Output: (id_a, id_b, jaccard).
+    (e.g. from LSH): verify only those, by shuffle joins on the doc
+    ids. Output: (id_a, id_b, jaccard).
 
     ``max_df`` (the 100-TB guard): shingles appearing in more than
     ``max_df`` documents are dropped from the *inverted index* before
@@ -442,22 +442,27 @@ def jaccard_pairs(
     more than caching it (at warehouse scale this is the materialized
     shingle index every near-dup system builds anyway). Cache
     ownership: the result is lazy, so this function cannot unpersist
-    its own intermediates — every frame it persists is registered in a
-    module-level scope; call ``dedup.release_caches()`` when the
-    consuming actions of a pass are done (jobs/run_dedup.py does).
-    A long-lived session can also opt out entirely with
-    ``cache=False`` (lineage recomputes, nothing retained).
+    its own intermediates — every frame it persists is registered in
+    the calling thread's release scope; call ``dedup.release_caches()``
+    when the consuming actions of a pass are done (jobs/run_dedup.py
+    does).
     """
-    from pyspark import StorageLevel
+    return _jaccard_pairs(
+        _persist_scoped(shingled), threshold, id_col, candidates, max_df
+    )
 
-    def _maybe_persist(frame):
-        if not cache:
-            return frame
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        _SCOPED_CACHES.append(frame)
-        return frame
 
-    shingled = _maybe_persist(shingled)
+def _jaccard_pairs(
+    shingled: DataFrame,
+    threshold: float,
+    id_col: str,
+    candidates: DataFrame | None = None,
+    max_df: int | None = None,
+    broadcast: bool = False,
+) -> DataFrame:
+    """``jaccard_pairs`` over an already persisted ``shingled``. With
+    ``candidates``, ``broadcast`` is their generator's pair-join
+    dispatch (``_indexed_pair_counts``); the verify lookups follow it."""
     sh = shingled.select(
         F.col(id_col), F.col("shingles"), F.size("shingles").alias("n_sh")
     )
@@ -466,7 +471,7 @@ def jaccard_pairs(
         # string): when the pair join takes the no-exchange shape it is
         # carried through the aggregation and the per-doc size lookup
         # joins on the (huge) pair stream disappear.
-        inv = _maybe_persist(
+        inv = _persist_scoped(
             shingled.select(
                 id_col,
                 F.explode("shingles").alias("sh"),
@@ -478,7 +483,7 @@ def jaccard_pairs(
         # rare self-join via the anti-join, plus hot_doc) — unpersisted,
         # the df aggregation over inv re-ran once per subtree (measured
         # r7: ~4 full inv passes per q23 run).
-        hot_sh = _maybe_persist(
+        hot_sh = _persist_scoped(
             inv.groupBy("sh")
             .agg(F.count(F.lit(1)).alias("df"))
             .filter(F.col("df") > max_df)
@@ -490,15 +495,15 @@ def jaccard_pairs(
         # zero — skip the anti-join probes on every posting and the
         # per-pair array-intersect expression, which otherwise
         # evaluates (on empty arrays) once per constructed pair
-        # (114 M rows at sf1.0). Only with cache on: the count is a
-        # one-job aggregation over the (persisted) index that the
-        # broadcast-regime fill runs anyway.
-        n_hot = hot_sh.count() if cache else None
+        # (114 M rows at sf1.0). The count is a one-job aggregation
+        # over the (persisted) index that the broadcast-regime fill
+        # runs anyway.
+        n_hot = hot_sh.count()
         rare = inv if n_hot == 0 else inv.join(hot_sh, "sh", "left_anti")
         pairs_rare, sizes_carried = _indexed_pair_counts(
             rare, id_col, "n_rare", carry_size_col="n_sh"
         )
-        if sizes_carried and cache:
+        if sizes_carried:
             # Eager one-shot fill: the broadcast shape launches its
             # build jobs concurrently and each would otherwise re-run
             # the full tokenize+shingle lineage into the unmaterialized
@@ -514,12 +519,12 @@ def jaccard_pairs(
             # by definition); exact n_common = n_rare + |hot_a ∩ hot_b|.
             # Persisted: it is joined twice (hot_a / hot_b) and each
             # unpersisted copy re-joined inv against hot_sh.
-            hot_doc = _maybe_persist(
+            hot_doc = _persist_scoped(
                 inv.join(hot_sh, "sh")
                 .groupBy(id_col)
                 .agg(F.collect_set("sh").alias("hot_arr"))
             )
-            if sizes_carried and cache:
+            if sizes_carried:
                 hot_doc.count()
             empty = F.array().cast("array<string>")
             pairs = (
@@ -559,10 +564,10 @@ def jaccard_pairs(
         pairs, sizes_carried = _indexed_pair_counts(
             inv, id_col, "n_common", carry_size_col="n_sh"
         )
-        if sizes_carried and cache:
+        if sizes_carried:
             shingled.count()  # eager fill, same race avoidance as above
-    elif getattr(candidates, "_lbf_broadcast_regime", False):
-        # Broadcast regime (stamped by the candidate generator): ONE
+    elif broadcast:
+        # Broadcast regime (the candidate generator's dispatch): ONE
         # broadcast of (id, shingles, n_sh), aliased into both lookups
         # so the exchange is built once and reused; sizes ride along.
         # Leaving these joins to the planner flipped them to sort-merge
@@ -612,7 +617,7 @@ def jaccard_pairs(
         pairs = pairs.join(
             sizes.withColumnsRenamed({id_col: "id_a", "n_sh": "n_a"}), "id_a"
         ).join(sizes.withColumnsRenamed({id_col: "id_b", "n_sh": "n_b"}), "id_b")
-    out = (
+    return (
         pairs.withColumn(
             "jaccard",
             F.col("n_common")
@@ -621,14 +626,12 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    return out
 
 
 def jaccard_pairs_prefix(
     shingled: DataFrame,
     threshold: float,
     id_col: str = "doc_id",
-    cache: bool = True,
 ) -> DataFrame:
     """Exact Jaccard ≥ threshold pairs via PPJoin-style PREFIX
     filtering — the high-threshold scale path (threshold ≳ 0.5; at
@@ -654,16 +657,7 @@ def jaccard_pairs_prefix(
     inverted-index self-join (the shrunken exchange), and a verify
     join that shuffles full shingle arrays ONLY for candidate docs.
     """
-    from pyspark import StorageLevel
-
-    def _maybe_persist(frame):
-        if not cache:
-            return frame
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK)
-        _SCOPED_CACHES.append(frame)
-        return frame
-
-    shingled = _maybe_persist(shingled)
+    shingled = _persist_scoped(shingled)
     inv = shingled.select(id_col, F.explode("shingles").alias("sh"))
     dfs = inv.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
     # per-doc shingles in (df, sh) order; prefix = |d| − ⌈t·|d|⌉ + 1
@@ -687,7 +681,7 @@ def jaccard_pairs_prefix(
         - F.ceil(F.lit(t) * F.col("n_sh") - F.lit(1e-9))
         + 1
     ).cast("int")
-    prefixes = _maybe_persist(
+    prefixes = _persist_scoped(
         ordered.select(
             F.col(id_col),
             F.col("n_sh"),
@@ -730,18 +724,17 @@ def jaccard_pairs_prefix(
         return len_ok & (ubound >= c_min)
 
     # distinct via the shared broadcast-aware pair helper (count dropped)
-    pairs, regime = _indexed_pair_counts(
+    pairs, broadcast = _indexed_pair_counts(
         prefixes, id_col, "_n_pref", extra_cond=_ppjoin_prune
     )
-    if regime and cache:
+    if broadcast:
         # eager fills — concurrent broadcast builds would otherwise
         # race the unmaterialized caches (see _indexed_pair_counts)
         shingled.count()
         prefixes.count()
-    cands = pairs.select("id_a", "id_b")
-    cands._lbf_broadcast_regime = regime
-    return jaccard_pairs(
-        shingled, threshold, id_col, candidates=cands, cache=cache
+    return _jaccard_pairs(
+        shingled, threshold, id_col, pairs.select("id_a", "id_b"),
+        broadcast=broadcast,
     )
 
 
@@ -756,7 +749,6 @@ def jaccard_pairs_auto(
     threshold: float,
     id_col: str = "doc_id",
     max_df: int | None = None,
-    cache: bool = True,
 ) -> DataFrame:
     """Unified exact-Jaccard entry point: callers state the THRESHOLD,
     the engine picks the physical plan. ``threshold ≥ 0.5`` routes to
@@ -773,10 +765,8 @@ def jaccard_pairs_auto(
     shingle has maximal df, sorts LAST in every document's df-ordered
     shingle list, and falls outside every prefix)."""
     if threshold >= PREFIX_DISPATCH_THRESHOLD:
-        return jaccard_pairs_prefix(shingled, threshold, id_col, cache=cache)
-    return jaccard_pairs(
-        shingled, threshold, id_col, max_df=max_df, cache=cache
-    )
+        return jaccard_pairs_prefix(shingled, threshold, id_col)
+    return jaccard_pairs(shingled, threshold, id_col, max_df=max_df)
 
 
 def minhash_dedup_pairs(
@@ -792,19 +782,16 @@ def minhash_dedup_pairs(
     the scale path for near-dup dedup (LSH prunes n² to near-linear;
     the verify join keeps precision exact). The shingle index is
     persisted once and feeds signatures, banding, and verification."""
-    from pyspark import StorageLevel
-
-    shingled = with_shingles(df, id_col, text_col, n).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    _SCOPED_CACHES.append(shingled)
+    shingled = _persist_scoped(with_shingles(df, id_col, text_col, n))
     # eager fill: signatures, postings (both join sides) and the
     # verify lookups all read this cache — one tokenize pass, no
     # concurrent-fill race (see _indexed_pair_counts)
     shingled.count()
     signed = minhash_signature(shingled, num_hashes, id_col)
-    cands = lsh_candidate_pairs(signed, bands, id_col)
-    return jaccard_pairs(shingled, threshold, id_col, candidates=cands)
+    cands, broadcast = lsh_candidate_pairs(signed, bands, id_col)
+    return _jaccard_pairs(
+        shingled, threshold, id_col, cands, broadcast=broadcast
+    )
 
 
 def simhash64(
@@ -901,6 +888,11 @@ def simhash_near_dup_pairs(
     )
 
 
+#: measured node count at or under which ``dup_clusters`` broadcasts
+#: its node-sized frames into every propagation round's joins.
+CLUSTER_BROADCAST_NODES = 2_000_000
+
+
 def dup_clusters(
     pairs: DataFrame,
     max_iters: int = 25,
@@ -943,8 +935,8 @@ def dup_clusters(
       backing RDD unpersisted via py4j; the r7 builder note that this
       was impossible was wrong), the edge checkpoint is freed after
       the last round, and the RETURNED labels frame is registered in
-      the module release scope — ``release_caches()`` frees it after
-      the consuming actions (measured r7: without this, three same-JVM
+      the calling thread's release scope — ``release_caches()`` frees
+      it after the consuming actions (measured r7: without this, three same-JVM
       q55@10x repeats grew the pair stage 246 → 566 s CPU from
       accumulated storage + GC pressure). An evicted/lost block is
       NOT recoverable (local checkpoints truncate the recompute
@@ -988,19 +980,14 @@ def dup_clusters(
     # Node frames (labels, per-node neighbor minima) are usually tiny
     # next to the edge list; when the MEASURED node count (free — the
     # checkpoint just materialized labels) is under
-    # $LBF_CLUSTER_BROADCAST_NODES, broadcast them into both per-round
+    # CLUSTER_BROADCAST_NODES, broadcast them into both per-round
     # joins: the edge list is then never re-shuffled or sorted — one
     # small per-node exchange per round instead of three exchanges +
     # four sorts (checkpointed RDDs lose their partitioning under AQE,
     # so co-partitioning cannot be pinned across rounds; measured r7).
     # Components with more nodes than the threshold keep the
     # shuffle-join rounds — the 100-TB shape.
-    import os as _os
-
-    n_nodes = labels.count()
-    bcast = n_nodes <= int(
-        _os.environ.get("LBF_CLUSTER_BROADCAST_NODES", "2000000")
-    )
+    bcast = labels.count() <= CLUSTER_BROADCAST_NODES
     _b = F.broadcast if bcast else (lambda f: f)
 
     def _one_step(lbls: DataFrame, keep_prev: str | None) -> DataFrame:
@@ -1053,7 +1040,7 @@ def dup_clusters(
         free_local_checkpoint(edges)
         # the RETURNED labels stay live until the caller's consuming
         # actions finish — scope-registered, freed by release_caches()
-        _SCOPED_CHECKPOINTS.append(ck)
+        _SCOPE.frames.append(ck)
     if not converged:
         msg = (
             f"dup_clusters did not converge in max_iters={max_iters} rounds; "

@@ -141,40 +141,36 @@ def curate_corpus(
     return {"kept": kept, "stages": stages}
 
 
-def stage_counts(
-    stages: list[tuple[str, DataFrame]], cache: bool = True
-) -> DataFrame:
-    """Survivor count per stage as one unioned aggregate frame.
+def stage_counts(stages: list[tuple[str, DataFrame]]) -> DataFrame:
+    """Survivor count per stage as one small materialized frame.
 
     Each stage frame shares its predecessors' lineage, so counting them
     naively replays the whole chain once PER stage (with near-dup that
-    re-runs LSH + connected components several times). ``cache=True``
-    (default) persists every stage frame first: the union's branches
-    then each execute one incremental step on top of the previous
-    stage's cache — the chain runs once. Frames are unpersisted after
-    the counts materialize; pass ``cache=False`` only when the caller
-    already persisted the stages itself."""
+    re-runs LSH + connected components several times). Every stage
+    frame is persisted first: the union's branches then each execute
+    one incremental step on top of the previous stage's cache — the
+    chain runs once. The frames are unpersisted once the counts are
+    collected, or when collecting them fails."""
     from pyspark import StorageLevel
 
     if not stages:
         raise ValueError("stage_counts needs at least one stage frame")
     frames = [df for _, df in stages]
-    if cache:
-        for df in frames:
-            df.persist(StorageLevel.MEMORY_AND_DISK)
+    for df in frames:
+        df.persist(StorageLevel.MEMORY_AND_DISK)
     out = None
     for name, df in stages:
         c = df.agg(F.count(F.lit(1)).alias("n_docs")).select(
             F.lit(name).alias("stage"), "n_docs"
         )
         out = c if out is None else out.unionAll(c)
-    if cache:
+    try:
         rows = out.collect()
+    finally:
         for df in frames:
             df.unpersist()
-        spark = frames[0].sparkSession
-        return spark.createDataFrame(rows, "stage string, n_docs long")
-    return out
+    spark = frames[0].sparkSession
+    return spark.createDataFrame(rows, "stage string, n_docs long")
 
 
 def curate_pairs(

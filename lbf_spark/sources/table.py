@@ -209,9 +209,11 @@ def write_table(
             _spread = True  # probe failed: preserve old behavior
         if not _spread:
             pdf = pdf.repartition("entity_bucket", "ts_day")
-    added = _land_data_files(spark, pdf, path)
-    if _layout_cache is not None:
-        _layout_cache.unpersist()
+    try:
+        added = _land_data_files(spark, pdf, path)
+    finally:
+        if _layout_cache is not None:
+            _layout_cache.unpersist()
     fsio.mkdirs(spark, meta_dir)
     existing = [f for f in fsio.list_names(spark, meta_dir) if f.startswith("snap-") and f.endswith(".json")]
     parent = existing[-1] if existing else None
@@ -478,10 +480,9 @@ def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
         return None
     else:
         base = data_dir
-    limit = int(_os.environ.get("LBF_STATS_DRIVER_BYTES", STATS_DRIVER_BYTES))
     paths = [_os.path.join(base, f) for f in files]
     try:
-        if sum(_os.path.getsize(p) for p in paths) > limit:
+        if sum(_os.path.getsize(p) for p in paths) > STATS_DRIVER_BYTES:
             return None
     except OSError:
         return None

@@ -86,20 +86,22 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     (a ``LogicalRDD`` plan). The frame's data is UNRECOVERABLE
     afterwards — local checkpoints truncate the recompute lineage — so
     only call on frames nothing will act on again (a superseded
-    iteration round, a released scope). Returns False (doing nothing)
-    when the plan is not a LogicalRDD, e.g. a RELIABLE ``checkpoint``
-    (its DFS files are owned by the checkpoint-dir lifecycle, not block
-    storage). This is the release half of the iterative-algorithm
-    lineage-truncation rule (CLAUDE.md): without it every round's
-    node-sized blocks (and each bench repeat's edge list) stay resident
-    until the session dies — measured r7: the q55@10x pair stage's CPU
-    grew 246 → 566 s across three same-JVM repeats from the
-    accumulated storage + GC pressure."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        plan.rdd().unpersist(False)
-        return True
-    except Exception:
+    iteration round, a released scope). Returns True only when it freed
+    persisted blocks: False for a plan that is not a LogicalRDD, a
+    RELIABLE ``checkpoint`` (its DFS files are owned by the
+    checkpoint-dir lifecycle, not block storage) or an already freed
+    frame. A moved py4j/Catalyst surface raises. This is the release
+    half of the iterative-algorithm lineage-truncation rule
+    (CLAUDE.md): without it every round's node-sized blocks (and each
+    bench repeat's edge list) stay resident until the session dies —
+    measured r7: the q55@10x pair stage's CPU grew 246 → 566 s across
+    three same-JVM repeats from the accumulated storage + GC
+    pressure."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() != "LogicalRDD":
         return False
+    rdd = plan.rdd()
+    if not rdd.getStorageLevel().isValid():
+        return False
+    rdd.unpersist(False)
+    return True

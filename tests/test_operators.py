@@ -1117,8 +1117,9 @@ def test_jaccard_prefix_equals_full_index(spark, docs):
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
         for r in frame.collect()
     )
-    full = run(dedup.jaccard_pairs(sh, threshold=0.8, cache=False))
-    pref = run(dedup.jaccard_pairs_prefix(sh, threshold=0.8, cache=False))
+    full = run(dedup.jaccard_pairs(sh, threshold=0.8))
+    pref = run(dedup.jaccard_pairs_prefix(sh, threshold=0.8))
+    dedup.release_caches()
     assert pref == full
     assert len(pref) >= 4  # every clone found
     # the prefix index is a strict subset of the full posting list
@@ -1382,10 +1383,61 @@ def test_dup_clusters_frees_checkpoint_blocks(spark):
     dedup.release_caches()
 
 
-def test_train_bpe_frees_superseded_rounds(spark):
+def test_release_caches_scope_is_per_thread(spark, tmp_path):
+    """A streaming micro-batch's release_caches() (foreachBatch runs on
+    its own thread) must not free the dup_clusters labels a batch pass
+    on another thread built but has not consumed yet — their local
+    checkpoint blocks are unrecoverable once freed."""
+    import threading
+
+    from lbf_spark.streaming.stream_features import dedup_ingest_batch
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (7, 8)], "id_a long, id_b long"
+    )
+    built, released = threading.Event(), threading.Event()
+    out = {}
+
+    def batch_pass():
+        try:
+            labels = dedup.dup_clusters(pairs)
+            built.set()
+            if released.wait(300):
+                out["labels"] = sorted(
+                    (r.doc_id, r.cluster_id) for r in labels.collect()
+                )
+                out["freed"] = dedup.release_caches()
+        except Exception as e:  # surfaced by the asserts below
+            out["error"] = e
+        finally:
+            built.set()
+
+    worker = threading.Thread(target=batch_pass)
+    worker.start()
+    assert built.wait(300)
+    base = "the quick brown fox jumps over the lazy dog again tonight ok"
+    batch = spark.createDataFrame(
+        [(1, base + " one"), (2, base + " two"),
+         (10, "completely different text about streaming ingest")],
+        "doc_id long, text string",
+    )
+    stats = dedup_ingest_batch(batch, 0, str(tmp_path / "store"), threshold=0.5)
+    released.set()
+    worker.join(300)
+    assert not worker.is_alive()
+    assert stats["n_in"] == 3 and stats["n_kept"] == 2
+    assert "error" not in out, out.get("error")
+    assert out["labels"] == [(1, 1), (2, 1), (3, 1), (7, 7), (8, 7)]
+    assert out["freed"] == 1  # the labels were still in the worker's scope
+
+
+def test_train_bpe_frees_superseded_rounds(spark, tmp_path):
     """BPE training keeps at most the LIVE symbol frame in block
     storage — one frame per merge round would otherwise pile up for
-    the session; merges must equal the single-process reference."""
+    the session; merges must equal the single-process reference.
+    free_local_checkpoint reports True only when it freed persisted
+    blocks: a second free of the same frame, and a reliable
+    checkpoint (DFS files, no blocks), report False."""
     from lbf_spark.operators import text as T
 
     spark.catalog.clearCache()
@@ -1402,3 +1454,6 @@ def test_train_bpe_frees_superseded_rounds(spark):
 
     assert free_local_checkpoint(syms)
     assert len(jsc.getRDDStorageInfo()) <= base
+    assert not free_local_checkpoint(syms)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    assert not free_local_checkpoint(words.checkpoint(eager=True))

@@ -277,6 +277,23 @@ def test_curate_corpus_stages_and_near_dup(spark):
     assert len(kept2) == 1 and kept2[0] == 1    # only 'web' listed; 1 survives
 
 
+def test_stage_counts_failed_count_releases_stage_caches(spark):
+    """stage_counts persists every stage frame; when counting them
+    fails the persists must still be released (persisted-RDD set back
+    at its baseline)."""
+    from pyspark.sql import functions as F
+
+    from lbf_spark.plans.corpus import stage_counts
+
+    jsc = spark.sparkContext._jsc
+    base = len(jsc.getPersistentRDDs())
+    df = spark.range(32)
+    broken = df.select(F.assert_true(F.col("id") < 0, "stage broke"))
+    with pytest.raises(Exception, match="stage broke"):
+        stage_counts([("input", df), ("broken", broken)])
+    assert len(jsc.getPersistentRDDs()) <= base
+
+
 def test_curate_corpus_quality_ranked_keeper(spark):
     """rep_score_col flips the near-dup keeper from min-id to
     argmax(score): the LONGER near-copy survives even with the larger

@@ -304,9 +304,10 @@ def test_prefix_jaccard_equals_full_property(spark, docs, threshold):
     run = lambda f: sorted(
         (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in f.collect()
     )
-    assert run(
-        dedup.jaccard_pairs_prefix(sh, threshold, cache=False)
-    ) == run(dedup.jaccard_pairs(sh, threshold, cache=False))
+    assert run(dedup.jaccard_pairs_prefix(sh, threshold)) == run(
+        dedup.jaccard_pairs(sh, threshold)
+    )
+    dedup.release_caches()
 
 
 dyad_strategy = st.lists(

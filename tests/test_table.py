@@ -1006,6 +1006,25 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     entities counted in n_rows/ts bounds but never ranked."""
     import pandas as pd
 
+    def both_paths(rows, name, **kw):
+        df = spark.createDataFrame(pd.DataFrame(rows))
+        path = str(tmp_path / name)
+        snap = TBL.write_table(
+            df, path, mode="overwrite", ts_unit_day=10_000, **kw
+        )
+        data_dir, files = path + "/data", snap["added_files"]
+        local = TBL._file_ts_stats_local(data_dir, files)
+        assert local is not None and set(local) == set(files)
+        with monkeypatch.context() as m:
+            # threshold 0 disables the fast path: the Spark job runs
+            m.setattr(TBL, "STATS_DRIVER_BYTES", 0)
+            assert TBL._file_ts_stats_local(data_dir, files) is None
+            via_spark = TBL._file_ts_stats_inner(spark, data_dir, files)
+        assert local == via_spark
+        # the committed snapshot used one of the two — also identical
+        assert snap["file_stats"] == via_spark
+        return local
+
     rows = []
     # >8 entities incl. ties and a null-entity group, spread over ts
     for i, (ent, n) in enumerate(
@@ -1015,29 +1034,48 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     ):
         for j in range(n):
             rows.append({"entity": ent, "ts": 1000 * i + j, "v": float(j)})
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    path = str(tmp_path / "stats_tbl")
-    snap = TBL.write_table(df, path, mode="overwrite", ts_unit_day=10_000)
-    files = snap["added_files"]
-    data_dir = path + "/data"
-
-    local = TBL._file_ts_stats_local(data_dir, files)
-    assert local is not None and set(local) == set(files)
-    # force the Spark job (threshold 0 disables the fast path)
-    monkeypatch.setenv("LBF_STATS_DRIVER_BYTES", "0")
-    via_spark = TBL._file_ts_stats_inner(spark, data_dir, files)
-    assert local == via_spark
-    # the committed snapshot used one of the two — also identical
-    assert snap["file_stats"] == via_spark
     # hot ordering: ties broken by string order, capped at 8
-    for st in local.values():
+    for st in both_paths(rows, "stats_tbl").values():
         assert len(st[3]) <= 8
     # string-entity table exercises the str cast equivalence
     rows2 = [{"entity": f"s{i % 3}", "ts": i, "v": 0.0} for i in range(30)]
-    df2 = spark.createDataFrame(pd.DataFrame(rows2))
-    path2 = str(tmp_path / "stats_tbl2")
-    snap2 = TBL.write_table(df2, path2, mode="overwrite", ts_unit_day=10_000)
-    monkeypatch.delenv("LBF_STATS_DRIVER_BYTES")
-    l2 = TBL._file_ts_stats_local(path2 + "/data", snap2["added_files"])
-    s2 = TBL._file_ts_stats_inner(spark, path2 + "/data", snap2["added_files"])
-    assert l2 == s2 == snap2["file_stats"]
+    both_paths(rows2, "stats_tbl2")
+    # long entities, negative ones included, in ONE file with a count
+    # tie straddling the top-8 cut: string order ("-10" < "-3" < "0" <
+    # "10" < "7") decides which of the count-2 entities make the cut
+    rows3 = [
+        {"entity": ent, "ts": 100 * k + j, "v": 0.0}
+        for k, (ent, n) in enumerate(
+            [(-1, 3), (-10, 3), (2, 3), (-2, 3), (10, 2), (-3, 2),
+             (0, 2), (7, 2), (-7, 2), (70, 2)]
+        )
+        for j in range(n)
+    ]
+    (st3,) = both_paths(rows3, "stats_tbl3", n_buckets=1).values()
+    assert st3[3] == {"-1": 3, "-10": 3, "-2": 3, "2": 3,
+                      "-3": 2, "-7": 2, "0": 2, "10": 2}
+
+
+def test_write_table_failed_land_releases_layout_cache(spark, tmp_path, monkeypatch):
+    """A land that fails after filling the layout cache must still
+    unpersist it: the session's persisted-RDD set returns to its
+    baseline instead of holding the frame until the session dies."""
+    import pandas as pd
+    import pytest
+
+    jsc = spark.sparkContext._jsc
+    base = len(jsc.getPersistentRDDs())
+    df = spark.createDataFrame(pd.DataFrame(
+        {"entity": ["e0"] * 64, "ts": range(64), "x": range(64), "y": range(64)}
+    ))
+
+    def failing_land(spark_, pdf, path):
+        pdf.count()  # the land's jobs ran and filled the layout cache
+        raise OSError("disk full")
+
+    monkeypatch.setattr(TBL, "_land_data_files", failing_land)
+    with pytest.raises(OSError, match="disk full"):
+        TBL.write_table(
+            df, str(tmp_path / "tbl"), mode="overwrite", layout_cols=["x", "y"]
+        )
+    assert len(jsc.getPersistentRDDs()) <= base
