@@ -32,6 +32,7 @@ from lbf_spark.operators import windows as W
 from lbf_spark.operators.asof import asof_join, interval_join
 from lbf_spark.operators.images import decode_stats
 from lbf_spark.operators.normalize import flanking_normalize
+from lbf_spark.util import codegen_counters
 
 
 @dataclasses.dataclass(frozen=True)
@@ -556,11 +557,14 @@ def run_pipeline(
 
     def staged(name: str, df_fn):
         reused = load_manifest(checkpoint_dir, rid, name, spark) is not None
-        t0 = time.time()
+        t0, (n0, ms0) = time.time(), codegen_counters(spark)
         out = checkpoint(df_fn(), checkpoint_dir, rid, name, spark)
+        n1, ms1 = codegen_counters(spark)
         metrics["stages"][name] = {
             "wall_sec": round(time.time() - t0, 3),
             "reused": reused,
+            "codegen_compiles": n1 - n0,
+            "codegen_compile_ms": round(ms1 - ms0, 3),
         }
         return out
 

@@ -16,6 +16,23 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 
+# Entries of Spark's generated-class cache (static conf, default 100).
+# One perfbench dedup_table pass alone fills ~190 entries of it,
+# so the default LRU recompiled nearly all of them on every repeat
+# (Janino, then a fresh round of JIT). Measured on Spark 4.1.2 with an
+# unbounded cache: the two perfbench workloads plus every bench.py line
+# (sf0.1, flagship, 10x docs) fill 517 entries in one JVM; 1500 covers
+# that with 2.9x headroom.
+CODEGEN_CACHE_ENTRIES = 1500
+
+
+def default_driver_memory(ram_bytes: int) -> str:
+    """``spark.driver.memory`` for a host with ``ram_bytes`` of RAM: the
+    smaller of 24g and 60 % of it, in MiB. In local mode the driver JVM
+    is also the executor, and a heap allowed past physical RAM gets the
+    process OOM-killed instead of spilling."""
+    return f"{min(24 << 10, int(ram_bytes * 0.6) >> 20)}m"
+
 
 def get_spark(
     app_name: str = "lbf_spark",
@@ -28,6 +45,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
     in the sandbox; on a real cluster the caller passes nothing and
     spark-submit supplies the master.
+
+    Static confs (the codegen cache size, the driver memory) only take
+    effect when this call creates the JVM: an already running
+    SparkContext keeps its own values, and the codegen cache, built
+    once per JVM, also outlives a ``stop()`` + ``get_spark()`` restart.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -79,10 +101,24 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Local mode: the driver JVM IS the executor. 8g forced the q23
         # pair aggregation through ~1.7 GB of map+reduce spill (measured
-        # r7); 24g on the 128 GiB sandbox keeps hash aggregations
-        # in-memory. On a real cluster executor memory is sized by
-        # spark-submit, not here (guide §5).
-        .config("spark.driver.memory", os.environ.get("LBF_DRIVER_MEM", "24g"))
+        # r7 on a 128 GiB host, where 24g kept hash aggregations
+        # in-memory); smaller hosts get 60 % of their RAM. On a real
+        # cluster executor memory is sized by spark-submit, not here
+        # (guide §5).
+        .config(
+            "spark.driver.memory",
+            os.environ.get("LBF_DRIVER_MEM")
+            or default_driver_memory(
+                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+            ),
+        )
+        # Generated code compiles once per JVM (CODEGEN_CACHE_ENTRIES).
+        # The cache key is the source text. By default each whole-stage
+        # class name carries its codegen stage id, which AQE hands out
+        # in stage-completion order, so a repeat of the same stage under
+        # another id would miss the cache.
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

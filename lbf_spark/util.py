@@ -105,3 +105,14 @@ def free_local_checkpoint(df: DataFrame) -> bool:
         return False
     rdd.unpersist(False)
     return True
+
+
+def codegen_counters(spark) -> tuple[int, float]:
+    """JVM-global generated-code counters: (classes compiled, compile
+    ms) since the JVM started. Free to read (no job, no UI); take
+    deltas around a unit of work. A cache hit compiles nothing, so a
+    repeated identical plan should add 0."""
+    jvm = spark.sparkContext._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return compiles.getCount(), gen.compileTime() / 1e6

@@ -89,6 +89,11 @@ def test_checkpoint_resume_reuses_stages(spark, tiny_events, tiny_anchors, tmp_p
 
     m3 = P.run_pipeline(ev, an, cfg, ckdir, spark)           # full resume
     assert all(s["reused"] for s in m3["stages"].values())
+    # a reused stage reads its checkpoint lazily: no generated code
+    assert all(s["codegen_compiles"] == 0 for s in m3["stages"].values())
+    assert all(s["codegen_compile_ms"] == 0 for s in m3["stages"].values())
+    with open(m3["metrics_path"]) as fh:
+        assert json.load(fh)["stages"] == m3["stages"]
 
     m4 = P.run_pipeline(ev, an, P.FeatureConfig(span=1500, bucket_w=100), ckdir, spark)
     assert m4["run_id"] != m1["run_id"]
