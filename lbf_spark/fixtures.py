@@ -16,7 +16,6 @@ intra-entity gaps exceed ``session_gap`` (dyad-segmentation analog,
 
 from __future__ import annotations
 
-import os
 
 import numpy as np
 import pandas as pd
@@ -224,19 +223,3 @@ def events_to_spark(spark, events: pd.DataFrame):
 
 def anchors_to_spark(spark, anchors: pd.DataFrame):
     return spark.createDataFrame(anchors, schema=anchors_spark_schema())
-
-
-def cached_events_parquet(
-    path: str, n_rows: int, n_entities: int, seed: int = SEED, with_payload: bool = True
-) -> str:
-    """Generate once, cache as parquet (bench-scale tables)."""
-    if not os.path.exists(path):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        df = generate_events(n_rows, n_entities, seed=seed, with_payload=with_payload)
-        tbl = pa.Table.from_pandas(df, preserve_index=False)
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        pq.write_table(tbl, path + ".tmp", compression="zstd", row_group_size=10_000)
-        os.replace(path + ".tmp", path)
-    return path

@@ -191,8 +191,8 @@ _FVC_SIG = b"FVC1"
 def video_encode(frames: list[np.ndarray], fps: int = 30) -> bytes:
     """DETERMINISTIC FAKE video container: header + length-prefixed
     lossy-encoded frames. The length prefixes make O(1)-per-hop frame
-    seeking possible without decoding — what sample_video_frames
-    relies on."""
+    seeking possible without decoding — what the frame-sampling
+    operators (``images.video_frame_diffs``) rely on."""
     from lbf_spark.functions.codec import encode_lossy
 
     out = [_FVC_SIG, struct.pack("<IH", len(frames), fps)]

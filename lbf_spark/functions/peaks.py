@@ -2,10 +2,9 @@
 ``/root/reference/src/lbfextract/fextract/cli_lib.py:58-73``).
 
 The reference smooths a (tiny) global fragment-length histogram with a
-Savitzky-Golay filter and picks peaks with scipy.signal.find_peaks. The
-arrays here are n_bins-sized (hundreds of values) — driver-side numpy
-is the right tool; no scipy in this container, so both kernels are
-implemented directly (standard published formulas).
+Savitzky-Golay filter. The arrays are n_bins-sized (hundreds of
+values) — driver-side numpy is the right tool; without scipy the
+kernel is implemented directly (the standard published formula).
 """
 
 from __future__ import annotations
@@ -35,67 +34,3 @@ def savgol_smooth(y: np.ndarray, window: int = 11, polyorder: int = 3) -> np.nda
             Ae = np.vander(xe, min(polyorder, hi - lo - 1) + 1, increasing=True)
             out[i] = float(np.linalg.pinv(Ae)[0] @ y[lo:hi])
     return out
-
-
-def find_peaks(
-    y: np.ndarray,
-    min_height: float | None = None,
-    min_distance: int = 1,
-) -> np.ndarray:
-    """Local-maxima peak indices (plateaus take their center), filtered
-    by height and minimum spacing (tallest-first greedy, matching
-    scipy.signal.find_peaks semantics)."""
-    y = np.asarray(y, dtype=np.float64)
-    n = len(y)
-    candidates = []
-    i = 1
-    while i < n - 1:
-        if y[i] > y[i - 1]:
-            j = i
-            while j < n - 1 and y[j + 1] == y[j]:
-                j += 1
-            if j < n - 1 and y[j + 1] < y[j]:
-                candidates.append((i + j) // 2)
-            i = j + 1
-        else:
-            i += 1
-    peaks = np.array(candidates, dtype=int)
-    if min_height is not None:
-        peaks = peaks[y[peaks] >= min_height]
-    if min_distance > 1 and len(peaks) > 1:
-        order = np.argsort(-y[peaks], kind="mergesort")
-        keep: list[int] = []
-        for p in peaks[order]:
-            if all(abs(p - k) >= min_distance for k in keep):
-                keep.append(int(p))
-        peaks = np.array(sorted(keep), dtype=int)
-    return peaks
-
-
-def histogram_peaks(
-    df, value_col: str, bin_width: float, min_height_frac: float = 0.05,
-    smooth_window: int = 11,
-) -> dict:
-    """Global histogram of a column → smooth → peaks. The aggregation is
-    distributed (one groupBy); only the n_bins-sized histogram reaches
-    the driver — the reference's reference-FLD peak workflow
-    (``fextract_fragment_length_distribution/plugin.py:27-42``)."""
-    from pyspark.sql import functions as F
-
-    hist = (
-        df.groupBy(F.floor(F.col(value_col) / bin_width).alias("bin"))
-        .count()
-        .orderBy("bin")
-        .toPandas()
-    )
-    bins = hist["bin"].to_numpy()
-    full = np.zeros(int(bins.max()) - int(bins.min()) + 1)
-    full[(bins - bins.min()).astype(int)] = hist["count"].to_numpy()
-    smooth = savgol_smooth(full, smooth_window)
-    peaks = find_peaks(smooth, min_height=min_height_frac * smooth.max(), min_distance=2)
-    return {
-        "bin_offset": int(bins.min()),
-        "histogram": full,
-        "smoothed": smooth,
-        "peak_bins": (peaks + int(bins.min())).tolist(),
-    }

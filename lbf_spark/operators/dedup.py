@@ -311,7 +311,7 @@ def lsh_incremental_pairs(
         corpus_docs.join(touched, id_col, "left_semi"), id_col, text_col, n
     )
     shingled = shingled_old.unionByName(shingled_new)
-    pairs = jaccard_pairs(shingled, threshold, id_col, candidates=cands)
+    pairs = _jaccard_pairs(_persist_scoped(shingled), threshold, id_col, cands)
     return {"pairs": pairs, "postings": new_post}
 
 
@@ -393,63 +393,14 @@ def _indexed_pair_counts(
             .agg(*aggs)
         )
 
-    try:
-        est = int(
-            inv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est = None
-    if est is not None and 0 <= est <= INDEX_BROADCAST_BYTES:
+    est = int(inv._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if 0 <= est <= INDEX_BROADCAST_BYTES:
         carry = carry_size_col is not None
         # x streams hash-partitioned by id; y is the broadcast index
         return _shape(
             inv.repartition(F.col(id_col)), F.broadcast(inv), carry
         ), True
     return _shape(inv, inv, False), False
-
-
-def jaccard_pairs(
-    shingled: DataFrame,
-    threshold: float,
-    id_col: str = "doc_id",
-    candidates: DataFrame | None = None,
-    max_df: int | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard ≥ threshold pairs.
-
-    Without `candidates`: inverted-index join on shingle (the exact,
-    scalable path — |pairs sharing a shingle| ≪ n²). With `candidates`
-    (e.g. from LSH): verify only those, by shuffle joins on the doc
-    ids. Output: (id_a, id_b, jaccard).
-
-    ``max_df`` (the 100-TB guard): shingles appearing in more than
-    ``max_df`` documents are dropped from the *inverted index* before
-    the self-join — a single stopword-like shingle in k docs otherwise
-    produces k² join rows. Jaccard values are UNAFFECTED by the cap:
-    n_common is recovered exactly as (shared-RARE count, aggregated
-    inside the self-join) + (intersection of the per-doc HOT-shingle
-    arrays, which are tiny — ≤ total_shingle_instances / max_df hot
-    shingles exist globally). Only pairs whose every common shingle is
-    hot are missed — the standard trade in every warehouse-scale
-    near-dup system. This shape never shuffles full shingle arrays for
-    candidate verification (that re-intersect cost +41 % at bench
-    scale). Without ``max_df`` the original one-shot index join
-    computes n_common directly.
-
-    The shingle index (and in the capped path the exploded inverted
-    index) is persisted: it feeds the self-join (twice) and both size
-    lookups — recomputing the regex/shingle expression 4-6× costs far
-    more than caching it (at warehouse scale this is the materialized
-    shingle index every near-dup system builds anyway). Cache
-    ownership: the result is lazy, so this function cannot unpersist
-    its own intermediates — every frame it persists is registered in
-    the calling thread's release scope; call ``dedup.release_caches()``
-    when the consuming actions of a pass are done (jobs/run_dedup.py
-    does).
-    """
-    return _jaccard_pairs(
-        _persist_scoped(shingled), threshold, id_col, candidates, max_df
-    )
 
 
 def _jaccard_pairs(
@@ -460,13 +411,22 @@ def _jaccard_pairs(
     max_df: int | None = None,
     broadcast: bool = False,
 ) -> DataFrame:
-    """``jaccard_pairs`` over an already persisted ``shingled``. With
-    ``candidates``, ``broadcast`` is their generator's pair-join
-    dispatch (``_indexed_pair_counts``); the verify lookups follow it."""
+    """Exact n-gram Jaccard ≥ threshold pairs (id_a, id_b, jaccard)
+    over an already persisted ``shingled``, in one of three shapes:
+
+    - no ``candidates``: inverted-index self-join on shingle (the
+      exact, scalable path — |pairs sharing a shingle| ≪ n²), with
+      n_common counted inside the join and optionally df-capped by
+      ``max_df`` (see ``jaccard_pairs_auto``);
+    - ``candidates`` with ``broadcast`` (their generator's pair-join
+      dispatch, ``_indexed_pair_counts``): verify them against ONE
+      broadcast of the shingle arrays;
+    - ``candidates`` without: verify them by shuffle joins on the doc
+      ids."""
     sh = shingled.select(
         F.col(id_col), F.col("shingles"), F.size("shingles").alias("n_sh")
     )
-    if candidates is None and max_df is not None:
+    if candidates is None:
         # n_sh rides on every posting row (8 B next to the shingle
         # string): when the pair join takes the no-exchange shape it is
         # carried through the aggregation and the per-doc size lookup
@@ -478,27 +438,31 @@ def _jaccard_pairs(
                 F.size("shingles").alias("n_sh"),
             )
         )
-        # shingles are per-doc distinct ⇒ df = count(*); split hot/rare.
-        # hot_sh is persisted: it feeds FOUR subtrees (both sides of the
-        # rare self-join via the anti-join, plus hot_doc) — unpersisted,
-        # the df aggregation over inv re-ran once per subtree (measured
-        # r7: ~4 full inv passes per q23 run).
-        hot_sh = _persist_scoped(
-            inv.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_df)
-            .select("sh")
-        )
-        # Runtime short-circuit (AQE-style, decided from the
-        # materialized tiny hot set, results identical): with NO hot
-        # shingles, rare ≡ inv and the hot correction is identically
-        # zero — skip the anti-join probes on every posting and the
-        # per-pair array-intersect expression, which otherwise
-        # evaluates (on empty arrays) once per constructed pair
-        # (114 M rows at sf1.0). The count is a one-job aggregation
-        # over the (persisted) index that the broadcast-regime fill
-        # runs anyway.
-        n_hot = hot_sh.count()
+        if max_df is None:
+            n_hot = 0  # no cap: every shingle is rare
+        else:
+            # shingles are per-doc distinct ⇒ df = count(*); split
+            # hot/rare. hot_sh is persisted: it feeds FOUR subtrees
+            # (both sides of the rare self-join via the anti-join, plus
+            # hot_doc) — unpersisted, the df aggregation over inv re-ran
+            # once per subtree (measured r7: ~4 full inv passes per q23
+            # run).
+            hot_sh = _persist_scoped(
+                inv.groupBy("sh")
+                .agg(F.count(F.lit(1)).alias("df"))
+                .filter(F.col("df") > max_df)
+                .select("sh")
+            )
+            # Runtime short-circuit (AQE-style, decided from the
+            # materialized tiny hot set, results identical): with NO
+            # hot shingles, rare ≡ inv and the hot correction is
+            # identically zero — skip the anti-join probes on every
+            # posting and the per-pair array-intersect expression,
+            # which otherwise evaluates (on empty arrays) once per
+            # constructed pair (114 M rows at sf1.0). The count is a
+            # one-job aggregation over the (persisted) index that the
+            # broadcast-regime fill runs anyway.
+            n_hot = hot_sh.count()
         rare = inv if n_hot == 0 else inv.join(hot_sh, "sh", "left_anti")
         pairs_rare, sizes_carried = _indexed_pair_counts(
             rare, id_col, "n_rare", carry_size_col="n_sh"
@@ -555,17 +519,6 @@ def _jaccard_pairs(
                     ).alias("n_common"),
                 )
             )
-    elif candidates is None:
-        inv = shingled.select(
-            id_col,
-            F.explode("shingles").alias("sh"),
-            F.size("shingles").alias("n_sh"),
-        )
-        pairs, sizes_carried = _indexed_pair_counts(
-            inv, id_col, "n_common", carry_size_col="n_sh"
-        )
-        if sizes_carried:
-            shingled.count()  # eager fill, same race avoidance as above
     elif broadcast:
         # Broadcast regime (the candidate generator's dispatch): ONE
         # broadcast of (id, shingles, n_sh), aliased into both lookups
@@ -628,7 +581,7 @@ def _jaccard_pairs(
     )
 
 
-def jaccard_pairs_prefix(
+def _jaccard_pairs_prefix(
     shingled: DataFrame,
     threshold: float,
     id_col: str = "doc_id",
@@ -648,9 +601,9 @@ def jaccard_pairs_prefix(
     candidates. Re-intersecting full arrays costs more per candidate
     than the index join's count aggregation — worth it exactly when
     the prefix filter has already collapsed the candidate set, which
-    is why ``jaccard_pairs`` (full index, count-based) remains the
-    low-threshold path (q23's t = 0.1 prefix would be 0.9·|d| — no
-    pruning).
+    is why the full-index shape of ``_jaccard_pairs`` (count-based)
+    remains the low-threshold path (q23's t = 0.1 prefix would be
+    0.9·|d| — no pruning).
 
     Shape at 100 TB: one df aggregation (map-side partial), one
     per-doc sort of its own shingle list (row-local), a prefix-only
@@ -750,23 +703,48 @@ def jaccard_pairs_auto(
     id_col: str = "doc_id",
     max_df: int | None = None,
 ) -> DataFrame:
-    """Unified exact-Jaccard entry point: callers state the THRESHOLD,
-    the engine picks the physical plan. ``threshold ≥ 0.5`` routes to
-    the PPJoin prefix-filtered path (``jaccard_pairs_prefix`` — the
+    """Exact n-gram Jaccard ≥ threshold pairs (id_a, id_b, jaccard) —
+    the one exact-Jaccard entry point: callers state the THRESHOLD, the
+    engine picks the physical plan. ``threshold ≥ 0.5`` routes to the
+    PPJoin prefix-filtered path (``_jaccard_pairs_prefix`` — the
     candidate set collapses when prefixes are short), lower thresholds
-    to the full inverted-index path (``jaccard_pairs`` — count-based
+    to the full inverted-index path (``_jaccard_pairs`` — count-based
     n_common, optionally df-capped with ``max_df``). Both branches
     return identical pairs for the same threshold (property-tested);
     only the plan differs — the Catalyst philosophy applied to a
     custom operator.
 
-    ``max_df`` only applies on the full-index branch: the prefix path
-    already bounds hot-shingle fan-out structurally (a stopword-like
-    shingle has maximal df, sorts LAST in every document's df-ordered
-    shingle list, and falls outside every prefix)."""
+    ``max_df`` (the 100-TB guard, full-index branch): shingles
+    appearing in more than ``max_df`` documents are dropped from the
+    *inverted index* before the self-join — a single stopword-like
+    shingle in k docs otherwise produces k² join rows. Jaccard values
+    are UNAFFECTED by the cap: n_common is recovered exactly as
+    (shared-RARE count, aggregated inside the self-join) +
+    (intersection of the per-doc HOT-shingle arrays, which are tiny —
+    ≤ total_shingle_instances / max_df hot shingles exist globally).
+    Only pairs whose every common shingle is hot are missed — the
+    standard trade in every warehouse-scale near-dup system. This shape
+    never shuffles full shingle arrays for candidate verification (that
+    re-intersect cost +41 % at bench scale). The prefix path ignores
+    ``max_df``: it already bounds hot-shingle fan-out structurally (a
+    stopword-like shingle has maximal df, sorts LAST in every
+    document's df-ordered shingle list, and falls outside every
+    prefix).
+
+    The shingle index and the exploded inverted index are persisted:
+    they feed the self-join (twice) and the size lookups — recomputing
+    the regex/shingle expression 4-6× costs far more than caching it
+    (at warehouse scale this is the materialized shingle index every
+    near-dup system builds anyway). Cache ownership: the result is
+    lazy, so this function cannot unpersist its own intermediates —
+    every frame it persists is registered in the calling thread's
+    release scope; call ``dedup.release_caches()`` when the consuming
+    actions of a pass are done (jobs/run_dedup.py does)."""
     if threshold >= PREFIX_DISPATCH_THRESHOLD:
-        return jaccard_pairs_prefix(shingled, threshold, id_col)
-    return jaccard_pairs(shingled, threshold, id_col, max_df=max_df)
+        return _jaccard_pairs_prefix(shingled, threshold, id_col)
+    return _jaccard_pairs(
+        _persist_scoped(shingled), threshold, id_col, max_df=max_df
+    )
 
 
 def minhash_dedup_pairs(
@@ -1223,13 +1201,13 @@ def tile_overlap_pairs(
     whole-image hash misses.
 
     Physical shape is the inverted-index join (the image analog of
-    ``jaccard_pairs``): distinct (image, tile-digest) postings, an
-    equi-join per digest (bucketed — candidate volume is Σ df(tile)²,
+    ``jaccard_pairs_auto``'s full-index path): distinct (image,
+    tile-digest) postings, an equi-join per digest (bucketed — candidate volume is Σ df(tile)²,
     never n²), one map-side-combined groupBy counting shared tiles.
     ``max_df`` drops digests present in more than that many images —
     flat-color tiles are the image analog of stopword shingles and the
     cap is what bounds the posting-list blowup at corpus scale
-    (identical role to ``jaccard_pairs(max_df=…)``). Payload never
+    (identical role to ``jaccard_pairs_auto(max_df=…)``). Payload never
     enters: the patch table carries 32-char digests only.
     """
     post = (
@@ -1366,7 +1344,7 @@ def containment_pairs(
     denominators stay exact (|S(p)| is measured before the cap) and
     the capped result is a LOWER bound per pair — a containment hit
     can only be missed if every shared shingle is hot, the same trade
-    ``jaccard_pairs`` documents.
+    ``jaccard_pairs_auto`` documents.
 
     Output: (probe_id, corpus_id, n_common, n_probe, containment
     round(6)). One shuffle on the shingle key + one pair groupBy."""

@@ -83,32 +83,6 @@ def decode_stats(df: DataFrame, keep_bytes: bool = False) -> DataFrame:
     return df.mapInPandas(batches, schema)
 
 
-def resize(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize; re-encodes in the row's own format."""
-    schema = df.schema
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ys = None
-        for pdf in it:
-            new_bytes = []
-            for data, fmt in zip(pdf["bytes"], pdf["fmt"]):
-                if data is None:
-                    new_bytes.append(None)
-                    continue
-                img = decode_image(bytes(data), fmt)
-                h, w, _ = img.shape
-                yi = (np.arange(out_h) * h // out_h)
-                xi = (np.arange(out_w) * w // out_w)
-                new_bytes.append(encode_image(img[yi][:, xi], fmt))
-            out = pdf.copy()
-            out["bytes"] = new_bytes
-            out["w"] = np.int32(out_w)
-            out["h"] = np.int32(out_h)
-            yield out
-
-    return df.mapInPandas(batches, schema)
-
-
 def transcode(df: DataFrame, to_fmt: str) -> DataFrame:
     """Re-encode every image into ``to_fmt`` (decode → encode inside one
     Arrow batch stage — the payload never moves between stages). The
@@ -214,58 +188,6 @@ def audio_frame_features(
                     "centroid_hz": stacked[:, 2],
                 }
             )
-
-    return df.mapInPandas(batches, schema)
-
-
-def sample_video_frames(
-    df: DataFrame,
-    every_n: int = 30,
-    id_col: str = "video_id",
-    keep_frames: bool = False,
-) -> DataFrame:
-    """Video frame sampling: decode every ``every_n``-th frame ONLY
-    (the FVC1 container's length prefixes make frame seeks cheap —
-    the keyframe-hop shape real samplers use) and emit per-frame pixel
-    stats; ``keep_frames`` adds the sampled frame re-encoded as PNG.
-
-    Payload discipline as everywhere: by default only scalar stats
-    leave the stage — at 10¹² clips the decoded frames would dominate
-    every downstream shuffle."""
-    from lbf_spark.functions.audio import video_decode_frame, video_info
-    from lbf_spark.functions.codec import png_encode
-
-    fields = [
-        T.StructField(id_col, T.StringType(), True),
-        T.StructField("frame_idx", T.IntegerType(), False),
-        T.StructField("pixel_mean", T.DoubleType(), False),
-        T.StructField("pixel_std", T.DoubleType(), False),
-    ]
-    if keep_frames:
-        fields.append(T.StructField("frame_png", T.BinaryType(), True))
-    schema = T.StructType(fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _id, data in zip(pdf[id_col], pdf["bytes"]):
-                if data is None:
-                    continue
-                blob = bytes(data)
-                n, _fps = video_info(blob)
-                for k in range(0, n, every_n):
-                    img = video_decode_frame(blob, k)
-                    x = img.astype(np.float64)
-                    rec = [
-                        _id,
-                        np.int32(k),
-                        round(float(x.mean()), 6),
-                        round(float(x.std()), 6),
-                    ]
-                    if keep_frames:
-                        rec.append(png_encode(img))
-                    rows.append(rec)
-            yield pd.DataFrame(rows, columns=[f.name for f in fields])
 
     return df.mapInPandas(batches, schema)
 

@@ -11,20 +11,14 @@ the previously-materialized feature rows. The result is bit-identical
 to a full recompute (proved by the q121 driver oracle and
 tests/test_incremental.py).
 
-Two refresh granularities:
-
-* ``incremental_entity_refresh`` — recompute the full history of the
-  entities the batch touches; exact for ANY deterministic per-entity
-  ``feature_fn`` (ffill, cumulative counts, sessionize — unbounded
-  lookback is fine). Cost: O(touched entities' history).
-* ``incremental_range_refresh`` — for features with a bounded backward
-  horizon (``rangeBetween(-lookback, 0)`` et al.): recompute only each
-  touched entity's suffix from ``min(batch ts) - lookback`` on, reading
-  one extra ``lookback`` of context rows so every recomputed row sees
-  its full window. Rows before the suffix are provably unchanged (the
-  window is backward-looking and every batch row has
-  ``ts >= min(batch ts)``), so their old features are kept verbatim.
-  Cost: O(touched suffixes), independent of history length.
+``incremental_range_refresh`` covers features with a bounded backward
+horizon (``rangeBetween(-lookback, 0)`` et al.): it recomputes only each
+touched entity's suffix from ``min(batch ts) - lookback`` on, reading
+one extra ``lookback`` of context rows so every recomputed row sees its
+full window. Rows before the suffix are provably unchanged (the window
+is backward-looking and every batch row has ``ts >= min(batch ts)``),
+so their old features are kept verbatim. Cost: O(touched suffixes),
+independent of history length.
 
 Scale notes (100 TB): the touched-entity/start frame is tiny (one row
 per touched entity) and is broadcast — no shuffle of the big side
@@ -58,31 +52,6 @@ def refresh_lower_bound(batch: DataFrame, *, lookback: int, order: str = "ts") -
     """
     row = batch.agg(F.min(order).alias("lo")).first()
     return None if row is None or row["lo"] is None else row["lo"] - lookback
-
-
-def incremental_entity_refresh(
-    base: DataFrame,
-    batch: DataFrame,
-    feature_fn: Callable[[DataFrame], DataFrame],
-    *,
-    by: str | list[str] = "entity",
-    old_features: DataFrame | None = None,
-) -> DataFrame:
-    """Exact refresh at entity granularity: untouched entities keep
-    their old feature rows, touched entities are recomputed over their
-    full (base ∪ batch) history.
-
-    ``feature_fn`` must be deterministic and per-entity (a row's
-    features may depend on any rows of the SAME ``by`` group, nothing
-    else) and must retain the ``by`` column(s) in its output. Unbounded
-    lookback (ffill, cumulative sums, sessionize) is allowed.
-    """
-    by = [by] if isinstance(by, str) else list(by)
-    old = feature_fn(base) if old_features is None else old_features
-    touched = batch.select(*by).distinct()
-    region = base.unionByName(batch).join(F.broadcast(touched), by, "inner")
-    kept = old.join(F.broadcast(touched), by, "left_anti")
-    return kept.unionByName(feature_fn(region))
 
 
 def refresh_region_rows(

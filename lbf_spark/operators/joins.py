@@ -1,41 +1,13 @@
-"""Join strategies for scale: bucketed co-located joins and
-deterministic salting for skewed keys.
+"""Join strategies for scale: deterministic salting for skewed keys.
 
 Complements the as-of/interval joins in ``asof.py`` (which handle the
 time axis): these are the generic equi-join tools the 100-TB story
-needs — bucketing removes the shuffle from repeated big×big joins on a
-stable key; salting splits one hot key's rows across ``salt`` reducers.
+needs — salting splits one hot key's rows across ``salt`` reducers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    buckets: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a Spark bucketed table (``bucketBy`` + sortBy on the
-    key). Two tables bucketed the same way equi-join with ZERO
-    exchanges (plan-tested) — the pre-partitioning answer for joins
-    that repeat every run (e.g. events ⋈ per-entity dimensions).
-    Bucket count is a table property: pick it once per key domain
-    (2-4× total executor cores is the usual start)."""
-    (
-        df.write.mode(mode)
-        .format("parquet")
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-    )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
+from pyspark.sql import DataFrame, functions as F
 
 
 def row_salt(columns, salt: int):

@@ -268,35 +268,3 @@ def psi_drift(
     return j.groupBy("feature").agg(
         (F.round(F.sum((p - q) * F.log(p / q)), 6) + F.lit(0.0)).alias("psi")
     )
-
-
-def group_quantiles_approx(
-    df: DataFrame,
-    value_col: str,
-    by: str,
-    probs: list[float] = (0.25, 0.5, 0.75, 0.99),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Per-group approximate quantiles — the 100-TB twin of the exact
-    ``percentile`` path (queries.q68): ``percentile_approx`` keeps a
-    mergeable Greenwald-Khanna-style sketch per group, partial-
-    aggregating map-side in O(accuracy·log n) state instead of sorting
-    the group, with a guaranteed RANK error ≤ 1/accuracy: the returned
-    value's empirical CDF position is within that of the requested
-    prob (it returns a real data value; the exact type-7 estimator
-    interpolates, so compare by rank, not by value —
-    tests/test_profile_approx.py pins exactly that bound).
-
-    Column names match q68's exact output (q25/q50/...) so the two are
-    drop-in twins."""
-    def _name(p: float) -> str:
-        return "q" + str(int(p * 100) if (p * 100).is_integer() else p)
-
-    return df.groupBy(by).agg(
-        *[
-            F.round(
-                F.percentile_approx(value_col, F.lit(p), F.lit(accuracy)), 6
-            ).alias(_name(p))
-            for p in probs
-        ]
-    )

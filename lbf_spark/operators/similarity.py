@@ -2,21 +2,19 @@
 
 Baseline: brute-force cosine top-k, fully JVM-side via
 ``F.zip_with``/``F.aggregate`` dot products (no Python in the hot
-path). Scale path: seeded random-hyperplane LSH bucketing — candidates
-come from an equi-join on bucket signature, so the n² blowup never
-materializes; recall is tunable with (n_planes, n_tables).
+path). Scale path: IVF — a broadcast nearest-centroid assignment
+(``nearest_centroid_join``) blocks the corpus into cells, so pair
+work is per cell and the n² blowup never materializes; the PQ variants
+(``ivfpq_topk``) compress the vectors inside each cell.
 
 At 10^12 rows the baseline is only used query-side (small probe set ×
-big corpus, probe set broadcast); the LSH variant is the corpus-scale
-path. An IVF variant would swap the hash for a learned centroid
-assignment — same join shape.
+big corpus, probe set broadcast); the IVF variants are the
+corpus-scale path.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def _norm_col(vec):
@@ -86,89 +84,6 @@ def brute_force_topk(
     )
 
 
-def _hyperplanes(dim: int, n_planes: int, seed: int, table: int) -> np.ndarray:
-    rng = np.random.default_rng(seed + 7919 * table)
-    return rng.standard_normal((n_planes, dim))
-
-
-def lsh_bucket_ids(
-    df: DataFrame,
-    dim: int,
-    n_planes: int = 12,
-    n_tables: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Random-hyperplane LSH: (table, bucket) signature per vector.
-    Vectorized numpy matmul per Arrow batch — one Python pass, tiny
-    output (two ints per table per row)."""
-    planes = [_hyperplanes(dim, n_planes, seed, t) for t in range(n_tables)]
-    schema = T.StructType(
-        [
-            T.StructField("vid", T.LongType(), False),
-            T.StructField("table_id", T.IntegerType(), False),
-            T.StructField("bucket", T.LongType(), False),
-        ]
-    )
-    pows = (2 ** np.arange(n_planes)).astype(np.int64)
-
-    def batches(it):
-        for pdf in it:
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            ids = pdf[id_col].to_numpy()
-            out = []
-            for t, P in enumerate(planes):
-                bits = (vecs @ P.T) > 0
-                buckets = (bits @ pows).astype(np.int64)
-                out.append(
-                    pd.DataFrame(
-                        {"vid": ids, "table_id": np.int32(t), "bucket": buckets}
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    return df.select(id_col, vec_col).mapInPandas(batches, schema)
-
-
-def lsh_near_dup_pairs(
-    df: DataFrame,
-    dim: int,
-    threshold: float = 0.95,
-    n_planes: int = 12,
-    n_tables: int = 3,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 4,
-) -> DataFrame:
-    """Embedding near-duplicate pairs: LSH-bucket candidates (any table)
-    → exact cosine verify ≥ threshold. Output (id_a, id_b, sim)."""
-    buckets = lsh_bucket_ids(df, dim, n_planes, n_tables, seed, id_col, vec_col)
-    a, b = buckets.alias("a"), buckets.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.table_id") == F.col("b.table_id"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .distinct()
-    )
-    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"))
-    sim = cosine_similarity_col(F.col("va"), F.col("vb"))
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    return (
-        cands.join(vecs.withColumnsRenamed({id_col: "id_a", "v": "va"}), "id_a")
-        .join(vecs.withColumnsRenamed({id_col: "id_b", "v": "vb"}), "id_b")
-        .withColumn("sim", sim)
-        .filter(F.col("sim") >= threshold)
-        .select("id_a", "id_b", "sim")
-    )
-
-
 def exact_near_dup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -177,7 +92,8 @@ def exact_near_dup_pairs(
     round_digits: int | None = 4,
 ) -> DataFrame:
     """O(n²) exact cosine pairs ≥ threshold — correctness oracle / small
-    tables only (the DuckDB-checkable ground truth for the LSH path)."""
+    tables only (the DuckDB-checkable ground truth for the IVF-blocked
+    path)."""
     from lbf_spark.util import fan_out
 
     # per-row norm precompute + scan fan-out: same reasoning (and the
@@ -208,169 +124,6 @@ def exact_near_dup_pairs(
 # ------------------------------------------------------------- IVF ANN
 
 
-def kmeans_fit(
-    df: DataFrame,
-    dim: int,
-    n_centroids: int = 16,
-    n_iters: int = 5,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> np.ndarray:
-    """Distributed Lloyd's k-means on L2-normalized vectors.
-
-    Per iteration: ONE mapInPandas pass emits per-partition partial sums
-    (centroid_id, sum_vec, count); the driver combines (n_centroids ×
-    dim floats — tiny) and re-broadcasts. Deterministic: the init sample
-    is taken in `id_col` order (an unordered limit() would pick whatever
-    rows arrive first and break run-to-run reproducibility)."""
-    sample = np.stack(
-        df.select(id_col, vec_col)
-        .orderBy(id_col)
-        .limit(max(n_centroids * 20, 500))
-        .toPandas()[vec_col]
-        .to_numpy()
-    ).astype(np.float64)
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    rng = np.random.default_rng(seed)
-    centroids = sample[rng.choice(len(sample), size=n_centroids, replace=False)]
-
-    schema = T.StructType(
-        [
-            T.StructField("cid", T.IntegerType()),
-            T.StructField("vec_sum", T.ArrayType(T.DoubleType())),
-            T.StructField("cnt", T.LongType()),
-        ]
-    )
-    for _ in range(n_iters):
-        C = centroids  # captured by value in the closure below
-
-        def partials(it):
-            acc_sum = np.zeros((len(C), dim))
-            acc_cnt = np.zeros(len(C), dtype=np.int64)
-            for pdf in it:
-                vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                vecs /= np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-                cid = (vecs @ C.T).argmax(axis=1)  # cosine on unit vectors
-                np.add.at(acc_sum, cid, vecs)
-                np.add.at(acc_cnt, cid, 1)
-            rows = [
-                (int(c), acc_sum[c].tolist(), int(acc_cnt[c]))
-                for c in range(len(C))
-                if acc_cnt[c] > 0
-            ]
-            yield pd.DataFrame(rows, columns=["cid", "vec_sum", "cnt"])
-
-        parts = df.select(vec_col).mapInPandas(partials, schema).toPandas()
-        new = centroids.copy()
-        for cid, grp in parts.groupby("cid"):
-            s = np.sum(np.stack(grp["vec_sum"].to_numpy()), axis=0)
-            n = grp["cnt"].sum()
-            v = s / max(n, 1)
-            new[cid] = v / max(np.linalg.norm(v), 1e-12)
-        centroids = new
-    return centroids
-
-
-def ivf_assign(
-    df: DataFrame,
-    centroids: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector to its nearest centroid (the IVF inverted
-    list id) — one vectorized pass, output is (id, cluster, vec)."""
-    C = centroids
-    schema = T.StructType(
-        [
-            T.StructField("vid", T.LongType()),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-
-    def assign(it):
-        for pdf in it:
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vecs /= np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-            yield pd.DataFrame(
-                {"vid": pdf[id_col].to_numpy(), "cluster": (vecs @ C.T).argmax(axis=1)}
-            )
-
-    clusters = df.select(id_col, vec_col).mapInPandas(assign, schema)
-    return df.join(
-        clusters.withColumnRenamed("vid", id_col), id_col
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    centroids: np.ndarray,
-    k: int = 5,
-    n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 4,
-) -> DataFrame:
-    """IVF approximate top-k: each probe searches only its `n_probe`
-    nearest inverted lists — the corpus-scale ANN path (candidates come
-    from an equi-join on cluster id; exact cosine only within them).
-
-    Recall is tunable via (n_centroids, n_probe); with n_probe =
-    n_centroids this is exactly brute force. Like any IVF index, recall
-    depends on the corpus actually clustering — on near-uniform random
-    vectors partial probing is a poor approximation (measured ~0.4
-    recall on the synthetic sf embeddings vs ≥0.9 on clustered data);
-    prefer the LSH or brute-force path for unstructured corpora."""
-    assigned = ivf_assign(corpus, centroids, id_col, vec_col)
-    C = centroids
-    probe_schema = T.StructType(
-        [
-            T.StructField("probe_id", T.LongType()),
-            T.StructField("cluster", T.IntegerType()),
-        ]
-    )
-
-    def probe_clusters(it):
-        for pdf in it:
-            vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            vecs /= np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
-            top = np.argsort(-(vecs @ C.T), axis=1)[:, :n_probe]
-            ids = np.repeat(pdf[id_col].to_numpy(), n_probe)
-            yield pd.DataFrame({"probe_id": ids, "cluster": top.ravel()})
-
-    plists = probes.select(id_col, vec_col).mapInPandas(probe_clusters, probe_schema)
-    pvecs = probes.select(
-        F.col(id_col).alias("probe_id"), F.col(vec_col).alias("probe_vec")
-    )
-    cands = (
-        plists.join(F.broadcast(pvecs), "probe_id")
-        .join(
-            assigned.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col("cluster"),
-                F.col(vec_col).alias("cand_vec"),
-            ),
-            "cluster",
-        )
-        .filter(F.col("probe_id") != F.col("neighbor_id"))
-    )
-    sim = cosine_similarity_col(
-        F.col("probe_vec").cast("array<double>"), F.col("cand_vec").cast("array<double>")
-    )
-    if round_digits is not None:
-        sim = F.round(sim, round_digits)
-    scored = cands.withColumn("sim", sim).select("probe_id", "neighbor_id", "sim").distinct()
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("probe_id", "neighbor_id", "sim", "rnk")
-    )
-
-
 def nearest_centroid_join(
     df: DataFrame,
     centroids: DataFrame,
@@ -384,10 +137,9 @@ def nearest_centroid_join(
     list assignment) with zero Python: broadcast the k centroids, fold
     squared-L2 per (vector, centroid) JVM-side, argmin per vector with
     a (rounded dist, centroid-id) total order so any engine selects
-    identically. Complements ``ivf_assign`` (the Arrow fast path) with
-    an oracle-able plan: BroadcastNestedLoop over k rows is k·n work —
-    the same cost as the dense distance matrix, just expressed
-    relationally.
+    identically. The plan is oracle-able: BroadcastNestedLoop over k
+    rows is k·n work — the same cost as the dense distance matrix, just
+    expressed relationally.
 
     Distances fold left-to-right over the array (``F.aggregate``) in
     float64; the fold order is element order, so engines agree bit-wise
@@ -742,7 +494,7 @@ def semantic_dedup(
     pick identical survivors. Scale: centroid side broadcasts (k×dim
     driver state, same as IVF); the pair join shuffles on cluster_id —
     cell skew is the k-means balance question, handled upstream by
-    choosing k (cells ~n/k) exactly as in ``ivf_topk``.
+    choosing k (cells ~n/k).
 
     Returns (id, cluster_id, dist2, is_kept) for EVERY input row —
     auditable drop decisions; filter ``is_kept`` for the surviving set.
@@ -872,7 +624,7 @@ def pq_codes(
     codeword id). The codebook side broadcasts (k×dim). One ranking
     window per (vector, subspace) — the same exchange the assignment
     shuffle already needs. Codebooks here are caller-provided full-dim
-    rows (seed rows / kmeans_fit output) sliced per subspace, matching
+    rows (seed rows or trained centroids) sliced per subspace, matching
     the IVF convention.
 
     Returns long-form (id, subspace, code, dist2) — ``groupBy(id)``

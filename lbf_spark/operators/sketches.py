@@ -116,7 +116,7 @@ def heavy_hitter_violations(
       * ``bound``: exact − estimate > n/(k+1).
 
     Pass a precomputed ``(sketch, n)`` (e.g. the persisted state of
-    ``streaming.stream_features.stream_heavy_hitters``) to certify an
+    ``streaming.stream_features.heavy_hitter_batch_merge``) to certify an
     externally-built summary; when ``n`` disagrees with the exact row
     count (a replay double-count or a lost batch) every row is off by
     the same shift, so the bound rows surface it — and callers can

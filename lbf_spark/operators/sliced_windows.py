@@ -21,11 +21,13 @@ while producing **bit-identical** results to the unsliced operators
   (``/root/reference/src/lbfextract/fextract/lib.py:72-76``) and that
   ``asof_join_sliced``/``interval_join`` already apply to joins.
 
-- **Sessionize** (unbounded gap-cumsum): two-phase prefix sums. Phase 1
-  computes per-(entity, slice) local boundary cumsums (skew-safe
-  window). Phase 2 reduces one tiny row per slice (first/last ts,
-  local boundary count) per entity — n_slices rows, not n_rows — into
-  a per-slice session offset, broadcast-joined back.
+- **Sessionize** (unbounded gap-cumsum), fused with the rolling mean
+  and the hamming drift in ``fused_bounded_sliced``: two-phase prefix
+  sums. Phase 1 computes per-(entity, slice) local boundary cumsums
+  (skew-safe window; the one-row halo gives each slice's first row its
+  true predecessor). Phase 2 reduces one tiny row per slice (local
+  boundary count) per entity — n_slices rows, not n_rows — into a
+  per-slice session offset, broadcast-joined back.
 
 Cost model: halo duplication is ≤ (window-1) × n_slices extra rows per
 entity (0.1 % at window=100, 10⁶ rows/slice); phase-2 state is n_slices
@@ -190,14 +192,14 @@ def fused_bounded_sliced(
     exchange (the flagship's three row-bounded kernels; values identical
     to the unsliced ops, property-tested).
 
-    Chaining ``rolling_sliced`` → ``hamming_to_prev_sliced`` →
-    ``sessionize_sliced`` costs three full-data shuffles of the hot
-    subset; all three only need the *same* (entity, slice) partitioning
-    with a halo of max(rolling_w−1, 1) prior rows, so one exchange
-    serves them all. The halo also simplifies sessionize: each real
-    row's lag-predecessor inside the slice IS its true predecessor, so
-    the gap test is locally exact and phase 2 reduces to a per-slice
-    prefix sum of boundary counts (one tiny row per slice).
+    Three separately sliced kernels would cost three full-data shuffles
+    of the hot subset; all three only need the *same* (entity, slice)
+    partitioning with a halo of max(rolling_w−1, 1) prior rows, so one
+    exchange serves them all. The halo also simplifies sessionize: each
+    real row's lag-predecessor inside the slice IS its true
+    predecessor, so the gap test is locally exact and phase 2 reduces
+    to a per-slice prefix sum of boundary counts (one tiny row per
+    slice).
 
     The post-window frame stays persisted for the session (both the
     output and the offsets consume it; unpersisting inside the operator
@@ -259,35 +261,6 @@ def fused_bounded_sliced(
     return res.drop("_slice", "_halo", "_new", "_local_cum", "_offset")
 
 
-def hamming_to_prev_sliced(
-    df: DataFrame,
-    col: str = "phash",
-    out: str = "phash_drift",
-    by="entity",
-    order="ts",
-    ts_col: str | None = None,
-    slice_width: int | None = None,
-) -> DataFrame:
-    """Sliced ``windows.hamming_to_prev``: lag-1 is a bounded kernel
-    with window=2, so the halo is exactly one row per slice."""
-    by, order = _norm(by, order)
-    ts = ts_col or order[0]
-    if slice_width is None:
-        slice_width = _auto_slice_width(df, ts)
-    sliced = _with_slice(df, ts, slice_width)
-    halos = _halo_rows(sliced, 2, by, order).withColumn("_halo", F.lit(1))
-    full = sliced.withColumn("_halo", F.lit(0)).unionByName(halos)
-    w = Window.partitionBy(*by, "_slice").orderBy(*order)
-    prev = F.lag(col, 1).over(w)
-    res = full.withColumn(
-        out,
-        F.when(prev.isNull(), F.lit(None).cast("int")).otherwise(
-            F.bit_count(F.col(col).bitwiseXOR(prev))
-        ),
-    )
-    return res.filter(F.col("_halo") == 0).drop("_slice", "_halo")
-
-
 def rolling_count_range_sliced(
     df: DataFrame,
     out: str,
@@ -324,121 +297,3 @@ def rolling_count_range_sliced(
     )
     res = exploded.withColumn(out, F.count(F.lit(1)).over(w_rng))
     return res.filter(F.col("_halo") == 0).drop("_slice", "_halo")
-
-
-def ffill_sliced(
-    df: DataFrame,
-    col: str,
-    out: str | None = None,
-    by="entity",
-    order="ts",
-    ts_col: str | None = None,
-    slice_width: int | None = None,
-    _backward: bool = False,
-) -> DataFrame:
-    """Sliced ``windows.ffill`` (last non-null carry): local fill within
-    each (entity, slice) + a per-slice carry value resolved in one tiny
-    per-entity pass (one row per slice, like sessionize's offsets).
-    ``_backward=True`` gives bfill (first non-null carried backwards)."""
-    by, order = _norm(by, order)
-    ts = ts_col or order[0]
-    if slice_width is None:
-        slice_width = _auto_slice_width(df, ts)
-    sliced = _with_slice(df, ts, slice_width)
-
-    ocols = [F.col(c).desc() for c in order] if _backward else [F.col(c) for c in order]
-    w_loc = Window.partitionBy(*by, "_slice").orderBy(*ocols).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    local = sliced.withColumn("_lf", F.last(col, ignorenulls=True).over(w_loc))
-
-    # per-slice boundary value: the slice's last (ffill) / first (bfill)
-    # non-null value in `order` — min_by/max_by skip null keys, so rows
-    # with a null `col` never win
-    key = F.when(
-        F.col(col).isNotNull(),
-        F.struct(*[F.col(c).alias(f"_o{i}") for i, c in enumerate(order)]),
-    )
-    edge = F.min_by(F.col(col), key) if _backward else F.max_by(F.col(col), key)
-    summ = sliced.groupBy(*by, "_slice").agg(edge.alias("_edge"))
-    sdir = F.col("_slice").desc() if _backward else F.col("_slice").asc()
-    w_ent = Window.partitionBy(*by).orderBy(sdir).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    carry = summ.withColumn(
-        "_carry", F.last("_edge", ignorenulls=True).over(w_ent)
-    ).select(*by, "_slice", "_carry")
-
-    res = local.join(F.broadcast(carry), [*by, "_slice"], "inner").withColumn(
-        out or col, F.coalesce("_lf", "_carry")
-    )
-    return res.drop("_slice", "_lf", "_carry")
-
-
-def bfill_sliced(df, col, out=None, by="entity", order="ts",
-                 ts_col=None, slice_width=None):
-    """Sliced ``windows.bfill`` — see ``ffill_sliced``."""
-    return ffill_sliced(
-        df, col, out=out, by=by, order=order, ts_col=ts_col,
-        slice_width=slice_width, _backward=True,
-    )
-
-
-def sessionize_sliced(
-    df: DataFrame,
-    gap: int,
-    out: str = "session_id",
-    by="entity",
-    order="ts",
-    ts_col: str | None = None,
-    slice_width: int | None = None,
-) -> DataFrame:
-    """Exact sessionize (== ``windows.sessionize``) with the gap-cumsum
-    split into per-slice local cumsums + per-slice prefix-sum offsets.
-
-    The only per-entity serial state is one row per slice (first_ts,
-    last_ts, local boundary count) — the offset pass is a window over
-    n_slices rows, not n_rows, so the hot entity costs O(slices) in one
-    task instead of O(rows)."""
-    by, order = _norm(by, order)
-    ts = ts_col or order[0]
-    if slice_width is None:
-        slice_width = _auto_slice_width(df, ts)
-    sliced = _with_slice(df, ts, slice_width)
-
-    w_loc = Window.partitionBy(*by, "_slice").orderBy(*order)
-    w_cum = w_loc.rowsBetween(Window.unboundedPreceding, 0)
-    is_new = F.when(
-        (F.col(ts) - F.lag(ts, 1).over(w_loc)) > gap, F.lit(1)
-    ).otherwise(F.lit(0))  # first row of a slice: decided in phase 2
-    local = sliced.withColumn("_new", is_new).withColumn(
-        "_local_cum", F.sum("_new").over(w_cum)
-    )
-
-    summ = local.groupBy(*by, "_slice").agg(
-        F.min(ts).alias("_first_ts"),
-        F.max(ts).alias("_last_ts"),
-        F.sum("_new").alias("_n_local"),
-    )
-    w_ent = Window.partitionBy(*by).orderBy("_slice")
-    prev_last = F.lag("_last_ts", 1).over(w_ent)
-    first_new = F.when(
-        prev_last.isNotNull() & ((F.col("_first_ts") - prev_last) > gap),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-    offsets = summ.withColumn(
-        "_offset",
-        F.coalesce(
-            F.sum(first_new).over(w_ent.rowsBetween(Window.unboundedPreceding, 0)),
-            F.lit(0),
-        )
-        + F.coalesce(
-            F.sum("_n_local").over(w_ent.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    ).select(*by, "_slice", "_offset")
-
-    res = local.join(F.broadcast(offsets), [*by, "_slice"], "inner").withColumn(
-        out, F.col("_offset") + F.col("_local_cum")
-    )
-    return res.drop("_slice", "_new", "_local_cum", "_offset")

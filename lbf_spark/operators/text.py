@@ -805,43 +805,6 @@ def train_bpe_reference(
     return merges
 
 
-def encode_with_vocab(
-    docs: DataFrame,
-    trained_syms: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Tokenize documents with a trained BPE symbol table: explode docs
-    to (doc, position, word), join the word→symbols mapping (the
-    closed-vocab fast path — a broadcastable-or-shuffled equi-join,
-    never a per-word merge replay), and emit one row per (doc,
-    word position, symbol position, token). OOV words fall back to
-    character symbols (the base alphabet is always encodable)."""
-    from lbf_spark.util import fan_out
-
-    wpos = fan_out(docs.select(id_col, text_col)).select(
-        id_col,
-        F.posexplode(F.split(F.col(text_col), " ")).alias("word_pos", "word"),
-    ).filter(F.col("word") != "")
-    mapped = wpos.join(
-        trained_syms.select("word", F.col("syms").alias("__syms")),
-        "word",
-        "left",
-    ).withColumn(
-        "__syms",
-        F.coalesce(
-            F.col("__syms"),
-            F.concat(F.split(F.col("word"), ""), F.array(F.lit("</w>"))),
-        ),
-    )
-    return mapped.select(
-        id_col,
-        "word_pos",
-        "word",
-        F.posexplode(F.col("__syms")).alias("sym_pos", "token"),
-    )
-
-
 def augment_tokens(
     df: DataFrame,
     text_col: str = "text",

@@ -2,8 +2,8 @@
 
 Re-expresses the reference's positional kernels (SURVEY.md §2.4/2.5):
 rolling mean with ``min_count=1`` (``signal_transformer.py:176``),
-rolling median (``signal_transformer.py:276``), lag/lead fragment-end
-offsets (A3/A4/A7), dyad-gap segmentation → sessionize
+rolling median (``signal_transformer.py:276``), lag-1 drift
+(``hamming_to_prev``), dyad-gap segmentation → sessionize
 (``signal_transformer.py:50-113``), and the backfill/ffill stage of the
 north_rule. Everything that Spark's JVM window machinery can express
 stays JVM-side (whole-stage codegen); only the exact rolling median
@@ -52,23 +52,6 @@ def rolling_min_max(df, col, out_min, out_max, window, by="entity", order="ts"):
     )
 
 
-def lag_lead(
-    df: DataFrame, col: str, offsets: list[int], by="entity", order="ts",
-    prefix: str | None = None,
-) -> DataFrame:
-    """Add `{col}_lag{k}` / `{col}_lead{k}` columns (A3/A4 offset analog)."""
-    w = _w(by, order)
-    p = prefix or col
-    for k in offsets:
-        if k == 0:
-            continue
-        if k > 0:
-            df = df.withColumn(f"{p}_lead{k}", F.lead(col, k).over(w))
-        else:
-            df = df.withColumn(f"{p}_lag{-k}", F.lag(col, -k).over(w))
-    return df
-
-
 def ffill(df: DataFrame, col: str, out: str | None = None, by="entity", order="ts"):
     """Forward-fill nulls with the last non-null value (backfill stage)."""
     w = _w(by, order).rowsBetween(Window.unboundedPreceding, 0)
@@ -99,20 +82,6 @@ def sessionize(
     ).otherwise(F.lit(0))
     # first row of each entity: lag is null ⇒ otherwise(0) ⇒ session 0
     return df.withColumn(out, F.sum(is_new).over(wc))
-
-
-def session_bounds(
-    df: DataFrame, gap: int, by="entity", order="ts", session_col="session_id"
-) -> DataFrame:
-    """Per-session aggregate frame (start/end/n_events/duration)."""
-    by = [by] if isinstance(by, str) else list(by)
-    s = sessionize(df, gap, out=session_col, by=by, order=order)
-    return s.groupBy(*by, session_col).agg(
-        F.min(order).alias("session_start"),
-        F.max(order).alias("session_end"),
-        F.count(F.lit(1)).alias("n_events"),
-        (F.max(order) - F.min(order)).alias("session_span"),
-    )
 
 
 def rolling_median(

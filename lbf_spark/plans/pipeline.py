@@ -23,7 +23,6 @@ from __future__ import annotations
 import dataclasses
 import hashlib
 import json
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -600,21 +599,3 @@ def run_pipeline(
     fsio.write_text_atomic(spark, mpath, json.dumps(metrics, indent=1))
     metrics["metrics_path"] = mpath
     return metrics
-
-
-def extract_features_batch(
-    events: DataFrame,
-    anchor_sets: dict[str, DataFrame],
-    cfg: FeatureConfig | None = None,
-    persist_features: bool = False,
-) -> dict[str, DataFrame]:
-    """Multi-anchor-set mode (the `in_batch` analog, SURVEY.md §3.2):
-    all anchor sets are unioned with their set name FIRST, so the whole
-    batch costs ONE event-side pass and one set of shuffles — the
-    reference's single-samtools-pass scan sharing
-    (``fextract_batch_coverage/plugin.py:136-158``). Per-set summaries
-    come out keyed by `name`."""
-    from lbf_spark.sources.anchors import union_tagged
-
-    anchors = union_tagged(anchor_sets)
-    return extract_features(events, anchors, cfg, persist_features)

@@ -1,63 +1,15 @@
 """Anchor-set sources (the BED-file analog, SURVEY.md §2.1 S3-S5).
 
-The reference loads BED6 files, whitelists chromosomes, keeps top-N by
-score, recenters to midpoints and expands windows
-(``/root/reference/src/lbfextract/utils.py:238-288``), and concatenates
-multi-BED directories tagged by name
-(``fextract_batch_coverage/plugin.py:136-149``). Same semantics here as
-declarative DataFrame ops — top-N compiles to TakeOrderedAndProject,
-the whitelist filter pushes down to the scan.
+The reference recenters BED intervals to midpoints and expands windows
+(``utils.py:238-288``); same semantics here as a declarative DataFrame
+op. Multi-set runs need no helper: a name-tagged ``unionByName`` of the
+sets is one anchor frame, and ``extract_features`` keys its per-set
+summaries by ``name``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
-
-ANCHOR_SCHEMA = T.StructType(
-    [
-        T.StructField("entity", T.StringType()),
-        T.StructField("anchor_ts", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("score", T.IntegerType()),
-        T.StructField("strand", T.StringType()),
-    ]
-)
-
-
-def load_anchor_csv(
-    spark: SparkSession, path: str, sep: str = "\t", tag_from_file: bool = False
-) -> DataFrame:
-    """Read anchor sets from delimited files (glob ok). With
-    ``tag_from_file`` the source filename becomes the set name
-    (multi-BED dir analog, ``input_file_name()``)."""
-    df = spark.read.csv(path, sep=sep, schema=ANCHOR_SCHEMA, header=True)
-    if tag_from_file:
-        df = df.withColumn(
-            "name",
-            F.regexp_extract(F.input_file_name(), r"([^/]+)\.[^./]+$", 1),
-        )
-    return df
-
-
-def whitelist_entities(df: DataFrame, entities: list[str]) -> DataFrame:
-    """Entity whitelist (chromosome whitelist analog, ``utils.py:270-272``)."""
-    return df.filter(F.col("entity").isin(entities))
-
-
-def top_n_by_score(df: DataFrame, n: int, per_name: bool = False) -> DataFrame:
-    """Keep the n highest-score anchors (``utils.py:284``), ties broken
-    by (entity, anchor_ts) for determinism. Global top-N compiles to
-    TakeOrderedAndProject — no full sort at scale."""
-    order = [F.col("score").desc(), F.col("entity").asc(), F.col("anchor_ts").asc()]
-    if per_name:
-        w = Window.partitionBy("name").orderBy(*order)
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= n)
-            .drop("__rn")
-        )
-    return df.orderBy(*order).limit(n)
-
+from pyspark.sql import DataFrame, functions as F
 
 def recenter_expand(
     df: DataFrame, start: str = "start_ts", end: str = "end_ts", extra: int = 0
@@ -68,16 +20,3 @@ def recenter_expand(
     return df.withColumn(
         "anchor_ts", F.floor((F.col(start) + F.col(end)) / 2).cast("long")
     ).withColumn("slack", F.lit(extra).cast("long"))
-
-
-def union_tagged(frames: dict[str, DataFrame]) -> DataFrame:
-    """Union several anchor sets, each tagged with its set name —
-    the single-pass multi-BED scan-sharing strategy (one shuffle
-    downstream instead of one per set)."""
-    out = None
-    for name, df in sorted(frames.items()):
-        tagged = df.withColumn("name", F.lit(name))
-        out = tagged if out is None else out.unionByName(tagged)
-    if out is None:
-        raise ValueError("no frames given")
-    return out

@@ -113,7 +113,6 @@ def write_table(
     layout_cols: list[str] | None = None,
     layout_bits: int = 8,
     layout_files: int = 8,
-    layout: str = "zorder",
     extra: dict | None = None,
 ) -> dict:
     """Partitioned write + snapshot manifest. Returns the snapshot.
@@ -167,12 +166,7 @@ def write_table(
     if layout_cols:
         from lbf_spark.util import fan_out
 
-        if layout == "hilbert":
-            keyed = hilbert_key(pdf, layout_cols, bits=layout_bits, out="__z")
-        elif layout == "zorder":
-            keyed = zorder_key(pdf, layout_cols, bits=layout_bits, out="__z")
-        else:
-            raise ValueError("layout must be 'zorder' or 'hilbert'")
+        keyed = zorder_key(pdf, layout_cols, bits=layout_bits, out="__z")
         # fan_out: repartitionByRange first runs a SAMPLE job over its
         # child — on a narrow single-row-group scan that sampling (and
         # the range shuffle's map side) runs on ONE task (measured r7:
@@ -200,14 +194,9 @@ def write_table(
         # already shuffled (repartition/groupBy upstream) has chosen
         # its layout — leave it alone (same plan-string probe as
         # util.fan_out; nothing executes).
-        from lbf_spark.util import _FULL_PARALLEL_MARKERS
+        from lbf_spark.util import _plan_probe
 
-        try:
-            _plan = pdf._jdf.queryExecution().executedPlan().toString().lower()
-            _spread = any(m in _plan for m in _FULL_PARALLEL_MARKERS)
-        except Exception:
-            _spread = True  # probe failed: preserve old behavior
-        if not _spread:
+        if not _plan_probe(pdf)[0]:
             pdf = pdf.repartition("entity_bucket", "ts_day")
     try:
         added = _land_data_files(spark, pdf, path)
@@ -254,59 +243,6 @@ def write_table(
 #: added list — UNSAFE under concurrent writers/retries; retained ONLY
 #: as the control arm of the staged-write A/B benchmark).
 LAND_MODE = "staged"
-
-class ExpectationsError(RuntimeError):
-    """A quality-gated write refused to land: one or more expectations
-    failed (or saw no data). ``self.failed`` carries the failing
-    verdict rows (kind, col_name, metric, lo, hi)."""
-
-    def __init__(self, failed: list[dict]):
-        self.failed = failed
-        msg = "; ".join(
-            f"{r['kind']}({r['col_name']}) metric={r['metric']} "
-            f"lo={r['lo']} hi={r['hi']}"
-            for r in failed
-        )
-        super().__init__(f"{len(failed)} expectation(s) failed: {msg}")
-
-
-def write_table_gated(
-    df: DataFrame, path: str, checks: list[dict], **kw
-) -> dict:
-    """``write_table`` behind a declarative quality gate
-    (``profile.expectations``): evaluate every check FIRST; if any
-    thresholded check fails — including the fail-closed NULL metrics
-    an empty input produces — raise :class:`ExpectationsError` and
-    land NOTHING (no staging, no manifest, no snapshot). On pass, the
-    snapshot's ``extra`` records the full gate verdict
-    (``quality_gate``: per-check metrics), so downstream readers can
-    audit WHAT was measured at landing time, not just that a gate ran.
-
-    Cost: one extra aggregation pass over ``df`` before the write —
-    but the gate scans ONLY the checked columns (column pruning
-    reaches the parquet source), so at scale it reads a thin
-    projection, not the payload. The driver collects |checks| verdict
-    rows, never data."""
-    from lbf_spark.operators.profile import expectations
-
-    verdict = [r.asDict() for r in expectations(df, checks).collect()]
-    failed = [
-        {k: r[k] for k in ("kind", "col_name", "metric", "lo", "hi")}
-        for r in verdict
-        if not r["passed"]
-    ]
-    if failed:
-        raise ExpectationsError(failed)
-    extra = dict(kw.pop("extra", None) or {})
-    extra["quality_gate"] = {
-        "n_checks": len(verdict),
-        "all_passed": True,
-        "metrics": {
-            f"{r['kind']}:{r['col_name']}": r["metric"] for r in verdict
-        },
-    }
-    return write_table(df, path, extra=extra, **kw)
-
 
 #: component timings (seconds) of the most recent write_table /
 #: merge_upsert on this driver: {"land": …, "stats": …, "commit": …}.
@@ -1557,10 +1493,11 @@ def hilbert_key(
     (Iceberg ships both): the Hilbert curve is CONTINUOUS, so
     consecutive key values are always spatially adjacent cells, where
     Morton's bit-interleave jumps across the whole space at power-of-
-    two seams. Sorting files by it makes range reads touch ~perimeter
-    many files; the locality advantage over Morton on a grid walk is
-    law-tested (and the q187 certificate re-verifies the key itself
-    against an independent per-row twin).
+    two seams. Sorting files by it would make range reads touch
+    ~perimeter many files (``write_table`` sorts by ``zorder_key``);
+    the locality advantage over Morton on a grid walk is law-tested
+    (and the q187 certificate re-verifies the key itself against an
+    independent per-row twin).
 
     Implementation: the classical xy2d state machine (reflect+swap per
     bit level, most-significant first) folded over the bit levels with

@@ -11,9 +11,17 @@ and over-fetches ``extra_bases`` to tolerate boundary-straddling reads
   via Spark's native ``session_window`` (merge-on-gap semantics);
 * tumbling windowed aggregates = positional binning on the time axis.
 
-Batch parity: each function also accepts a static DataFrame — the same
-plan runs in either mode (the Structured Streaming unification), which
-is how the tests verify streaming results equal the batch oracle.
+Batch parity: each frame-returning function also accepts a static
+DataFrame — the same plan runs in either mode (the Structured Streaming
+unification), which is how the tests verify streaming results equal the
+batch oracle.
+
+Sinks: the ``*_batch*`` functions take ``(batch_df, batch_id, ...)``
+and are the ``foreachBatch`` callbacks of a stream into the table
+layer, a feature table, a heavy-hitter state or a dedup store; each is
+idempotent on ``batch_id``, so the stream is exactly-once end to end:
+``stream.writeStream.foreachBatch(lambda b, i: table_batch_commit(b, i,
+path)).option("checkpointLocation", ckpt).start()``.
 """
 
 from __future__ import annotations
@@ -114,179 +122,6 @@ def run_stream_to_memory(
     q.awaitTermination()
 
 
-def stream_asof_enrich(
-    tagged: DataFrame,
-    by: str = "entity",
-    ts_col: str = "ts",
-    value_col: str = "v",
-    kind_col: str = "kind",
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: the
-    point-in-time (backward, ts ≤ anchor_ts) as-of join, incrementalized
-    — the streaming restatement of ``operators.asof.asof_join``'s
-    union+last-carry plan (the engine's core operator; the union
-    strategy's "last feature carried forward" IS the group state here).
-
-    Input: ONE tagged stream per entity — feature rows
-    (``kind='f'``: ts + value) interleaved with anchor rows
-    (``kind='a'``). Each anchor emits the latest feature at or before
-    its ts; an anchor before any feature emits nulls (exactly the batch
-    left-join semantics). State per entity: one (last_ts, last_value)
-    pair — O(1), carried across micro-batches.
-
-    Ordering contract (same as ``stream_rolling_mean_stateful``): rows
-    arrive in non-decreasing ts per entity ACROSS triggers; within a
-    batch they are sorted (feature-before-anchor at equal ts, matching
-    DuckDB/batch ASOF tie semantics).
-    """
-    import pandas as pd
-
-    out_schema = f"{by} string, anchor_ts long, matched_ts long, matched_v double"
-    state_schema = "last_ts long, last_v double"
-
-    def fn(key, pdf_iter, state):
-        (entity,) = key
-        last_ts, last_v = state.get if state.exists else (None, None)
-        for pdf in pdf_iter:
-            pdf = pdf.copy()
-            # feature sorts before anchor at equal ts ⇒ inclusive match
-            pdf["_k"] = (pdf[kind_col] != "f").astype(int)
-            pdf = pdf.sort_values([ts_col, "_k"], kind="mergesort")
-            rows = []
-            for k, t, v in zip(pdf["_k"], pdf[ts_col], pdf[value_col]):
-                if k == 0:
-                    last_ts, last_v = int(t), float(v)
-                else:
-                    rows.append((entity, int(t), last_ts, last_v))
-            yield pd.DataFrame(
-                rows, columns=[by, "anchor_ts", "matched_ts", "matched_v"]
-            )
-        if last_ts is not None:
-            state.update((last_ts, last_v))
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return tagged.groupBy(by).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
-
-
-def stream_rolling_mean_stateful(
-    events: DataFrame,
-    window: int = 16,
-    by: str = "entity",
-    ts_col: str = "ts",
-    value_col: str = "v",
-) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: exact
-    trailing rolling mean over the last ``window`` rows per entity,
-    with the last ``window-1`` (ts, value) pairs carried in group state
-    ACROSS micro-batches — the incremental restatement of
-    ``windows.rolling_mean`` (A6, ``signal_transformer.py:158-177``).
-
-    Ordering contract: rows must arrive in non-decreasing ``ts_col``
-    order per entity across triggers (rows are sorted within each
-    batch; cross-batch order is the source's responsibility — e.g. a
-    file source fed time-partitioned files with maxFilesPerTrigger).
-    State is O(window) per entity, the same bound the reference's lazy
-    per-group iterator gives it (``fextract_batch_coverage/
-    plugin.py:40-111``)."""
-    import pandas as pd
-
-    out_schema = (
-        f"{by} string, {ts_col} long, {value_col} double, roll_mean double"
-    )
-    state_schema = "tss array<long>, vals array<double>"
-
-    def fn(key, pdf_iter, state):
-        (entity,) = key
-        tss, vals = state.get if state.exists else ([], [])
-        tss, vals = list(tss), list(vals)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values([ts_col], kind="mergesort")
-            out_rows = []
-            for t, v in zip(pdf[ts_col], pdf[value_col]):
-                tss.append(int(t))
-                vals.append(float(v))
-                tail = vals[-window:]
-                out_rows.append(
-                    (entity, int(t), float(v), sum(tail) / len(tail))
-                )
-            yield pd.DataFrame(
-                out_rows, columns=[by, ts_col, value_col, "roll_mean"]
-            )
-        # window=1 needs an empty carry: [-0:] would keep ALL history
-        tail_n = window - 1
-        state.update(
-            (tss[-tail_n:] if tail_n else [], vals[-tail_n:] if tail_n else [])
-        )
-
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return events.groupBy(by).applyInPandasWithState(
-        fn,
-        out_schema,
-        state_schema,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def stream_dedup(
-    df: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Streaming exact deduplication: keep the first arrival of each
-    key, dropping re-deliveries that arrive within ``watermark_delay``
-    of the stream's max event time. ``dropDuplicatesWithinWatermark``
-    expires key state once the watermark passes it, so state is
-    O(distinct keys per watermark window) — the unbounded-state-safe
-    streaming analog of batch ``dropDuplicates(keys)`` (which this
-    equals whenever true duplicates arrive inside the delay)."""
-    src = _with_event_time(df, ts_col)
-    return src.withWatermark("event_time", watermark_delay).dropDuplicatesWithinWatermark(
-        keys
-    )
-
-
-def stream_table_sink(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    n_buckets: int = 16,
-    ts_unit_day: int = 86_400,
-    trigger_available_now: bool = True,
-):
-    """Stream → snapshot table: every micro-batch appends one snapshot
-    via the table layer (``sources.table.write_table``), giving the
-    stream's output time travel, incremental reads, and manifest
-    lineage for free.
-
-    Exactly-once: Structured Streaming replays a failed micro-batch
-    (foreachBatch is at-least-once), so the sink is made IDEMPOTENT
-    the standard way — each snapshot manifest records its ``batch_id``
-    and a replayed batch whose id is already committed is skipped.
-    Combined with the streaming checkpoint this yields end-to-end
-    exactly-once into the table.
-
-    Returns the StreamingQuery (caller awaits termination)."""
-
-    def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table_batch_commit(
-            batch_df, batch_id, path,
-            n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def _batch_high_water(spark, path: str, prev: dict | None) -> int | None:
     """Highest batch_id already durable in the table at ``path`` —
     O(1) in snapshot count: since round 6 every batch commit carries
@@ -322,9 +157,8 @@ def table_batch_commit(
 ) -> dict | None:
     """One micro-batch → one table snapshot, idempotently: the manifest
     records ``batch_id`` and a replayed (already-committed) batch id is
-    a no-op. Factored out of ``stream_table_sink`` so the replay
-    contract is directly testable. Returns the snapshot, or None if
-    skipped/empty.
+    a no-op, so a replayed ``foreachBatch`` call is harmless. Returns
+    the snapshot, or None if skipped/empty.
 
     ``batch_id`` rides in ``write_table``'s SINGLE exclusive manifest
     commit (the ``extra`` fields) — never patched in afterwards: a
@@ -450,40 +284,6 @@ def cdc_batch_apply(
     )
 
 
-def stream_cdc_apply(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    keys: list[str],
-    ts_col: str = "ts",
-    delete_col: str | None = None,
-    n_buckets: int = 16,
-    ts_unit_day: int = 86_400,
-    trigger_available_now: bool = True,
-):
-    """Changelog stream → continuously-merged snapshot table: each
-    micro-batch applies as one MERGE snapshot via ``cdc_batch_apply``
-    (exactly-once; replay-idempotent), so readers always see the
-    latest-per-key state with full time travel across batch boundaries.
-    The streaming twin of a warehouse ``MERGE INTO`` pipeline.
-
-    Returns the StreamingQuery (caller awaits termination)."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        cdc_batch_apply(
-            batch_df, batch_id, path, keys,
-            ts_col=ts_col, delete_col=delete_col,
-            n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def incremental_feature_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -594,40 +394,6 @@ def incremental_feature_batch(
         batch_df, batch_id, raw_path,
         n_buckets=n_buckets, ts_unit_day=ts_unit_day,
     )
-
-
-def stream_incremental_features(
-    stream_df: DataFrame,
-    raw_path: str,
-    feat_path: str,
-    checkpoint_dir: str,
-    feature_fn,
-    *,
-    lookback: int,
-    keys: list[str] | None = None,
-    n_buckets: int = 16,
-    ts_unit_day: int = 86_400,
-    trigger_available_now: bool = True,
-):
-    """Event stream → continuously-maintained feature table: each
-    micro-batch lands via ``incremental_feature_batch`` (exact suffix
-    refresh + exactly-once dual-table commit), so readers always see
-    features bit-identical to a from-scratch recompute over the raw
-    history, at delta cost per batch. Returns the StreamingQuery."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        incremental_feature_batch(
-            batch_df, batch_id, raw_path, feat_path, feature_fn,
-            lookback=lookback, keys=keys,
-            n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-        )
-
-    writer = stream_df.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_attribution_pairs(
@@ -750,29 +516,6 @@ def heavy_hitter_batch_merge(
     fsio.mkdirs(spark, state_path)
     fsio.write_text_atomic(spark, sfile, json.dumps(new_state, sort_keys=True))
     return new_state
-
-
-def stream_heavy_hitters(
-    stream_df: DataFrame,
-    col: str,
-    state_path: str,
-    checkpoint_dir: str,
-    k: int = 64,
-    trigger_available_now: bool = True,
-):
-    """Streaming heavy hitters: every micro-batch folds into the
-    bounded MG state at ``state_path`` via
-    ``heavy_hitter_batch_merge``. Returns the StreamingQuery."""
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        heavy_hitter_batch_merge(batch_df, batch_id, state_path, col, k=k)
-
-    writer = stream_df.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_heavy_hitter_state(spark, state_path: str) -> dict:
@@ -916,25 +659,3 @@ def dedup_ingest_batch(
         _json.dumps({"batch_hwm": batch_id}, sort_keys=True),
     )
     return stats
-
-
-def stream_dedup_ingest(
-    stream_df: DataFrame,
-    store_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-    **kwargs,
-):
-    """Streaming wrapper: every micro-batch flows through
-    ``dedup_ingest_batch`` against the standing store. Returns the
-    StreamingQuery."""
-
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(batch_df, batch_id, store_dir, **kwargs)
-
-    writer = stream_df.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -14,7 +14,18 @@ _FULL_PARALLEL_MARKERS = (
 )
 
 
-def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
+def _plan_probe(df: DataFrame) -> tuple[bool, str]:
+    """``(spread, plan)`` for ``df`` without executing it: ``plan`` is
+    the lowercased ``executedPlan`` string and ``spread`` says a
+    full-parallelism shuffle (hash/range/round-robin exchange) is
+    already in it. Reads the private py4j ``queryExecution`` surface;
+    if that surface moves this raises — callers must not guess a
+    physical shape from a probe that did not run."""
+    plan = df._jdf.queryExecution().executedPlan().toString().lower()
+    return any(m in plan for m in _FULL_PARALLEL_MARKERS), plan
+
+
+def fan_out(df: DataFrame) -> DataFrame:
     """Round-robin repartition when the incoming plan has fewer
     partitions than the cluster has cores.
 
@@ -40,8 +51,8 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
     - ``SinglePartition`` exchange with no full-parallelism shuffle
       (global sort / limit / scalar aggregate) → ONE task feeds every
       downstream stage, the exact pathology fan_out exists to fix →
-      unconditionally ``repartition(target)`` (a narrow round-robin of
-      the — usually small — post-collapse rows);
+      unconditionally repartitioned to the default parallelism (a
+      narrow round-robin of the — usually small — post-collapse rows);
     - broadcast exchange only, or an Exchange spelling this version
       doesn't recognize → ``df.rdd`` would materialize upstream stages
       at plan-build time under AQE, so fall back to ``inputFiles()``
@@ -52,30 +63,20 @@ def fan_out(df: DataFrame, target: int | None = None) -> DataFrame:
       ``df.rdd.getNumPartitions()`` directly (safe: nothing to
       execute).
 
-    If the private plan-string probe itself fails (API moved), the
-    ``inputFiles()`` fallback is used.
+    If the private plan-string probe itself fails (API moved), this
+    raises (``_plan_probe``).
     """
-    sc = df.sparkSession.sparkContext
-    target = target or sc.defaultParallelism
-
-    def _files_fallback() -> DataFrame:
-        n_files = len(df.inputFiles())
-        if 0 < n_files < target:
-            return df.repartition(target)
-        return df
-
-    try:
-        plan = df._jdf.queryExecution().executedPlan().toString().lower()
-    except Exception:
-        return _files_fallback()
-    if any(m in plan for m in _FULL_PARALLEL_MARKERS):
+    target = df.sparkSession.sparkContext.defaultParallelism
+    spread, plan = _plan_probe(df)
+    if spread:
         return df
     if "singlepartition" in plan:
         return df.repartition(target)
     if "exchange" in plan:
         # BroadcastExchange, or a renamed/unknown exchange node: never
         # risk the df.rdd probe over a plan that contains an exchange.
-        return _files_fallback()
+        n = len(df.inputFiles())
+        return df.repartition(target) if 0 < n < target else df
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df

@@ -33,3 +33,17 @@ def tiny_anchors(tiny_events) -> pd.DataFrame:
 @pytest.fixture(scope="session")
 def small_anchors(small_events) -> pd.DataFrame:
     return fixtures.generate_anchors(small_events, n_per_entity=15)
+
+
+def foreach_batch(stream, fn, checkpoint_dir: str):
+    """Run ``stream`` to completion (trigger availableNow) with
+    ``fn(batch_df, batch_id)`` as its ``foreachBatch`` sink and a
+    checkpoint at ``checkpoint_dir`` — how a deployment drives the
+    per-batch sinks of ``streaming.stream_features``."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination(120)
+    )

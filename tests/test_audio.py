@@ -110,31 +110,3 @@ def test_video_container_seek_equals_full_decode():
     assert np.abs(got.astype(int) - exp.astype(int)).max() <= 4
     with pytest.raises(IndexError):
         A.video_decode_frame(blob, 10)
-
-
-def test_sample_video_frames_operator(spark):
-    from lbf_spark.functions.codec import png_decode
-    from lbf_spark.operators.images import sample_video_frames
-
-    vids = [
-        ("v0", A.synth_video(seed=1, n_frames=12)),
-        ("v1", A.synth_video(seed=2, n_frames=5)),
-        ("v_null", None),
-    ]
-    df = spark.createDataFrame(pd.DataFrame(vids, columns=["video_id", "bytes"]))
-    got = (
-        sample_video_frames(df, every_n=4, keep_frames=True)
-        .toPandas()
-        .sort_values(["video_id", "frame_idx"], ignore_index=True)
-    )
-    # v0: frames 0,4,8; v1: frames 0,4
-    assert list(zip(got["video_id"], got["frame_idx"])) == [
-        ("v0", 0), ("v0", 4), ("v0", 8), ("v1", 0), ("v1", 4)
-    ]
-    for _, r in got.iterrows():
-        img = A.video_decode_frame(
-            bytes(dict(vids)[r["video_id"]]), int(r["frame_idx"])
-        )
-        assert r["pixel_mean"] == pytest.approx(img.mean(), abs=1e-6)
-        # keep_frames round-trips through the real PNG codec
-        assert np.array_equal(png_decode(bytes(r["frame_png"])), img)

@@ -93,45 +93,6 @@ def test_psi_empty_slice_is_max_drift(spark):
     assert got["x"] > 1.0
 
 
-def test_write_table_gated_blocks_and_audits(spark, quality_df, tmp_path):
-    """Failing gate -> ExpectationsError and NOTHING lands; passing
-    gate -> snapshot extra carries the per-check metrics audit."""
-    from lbf_spark import fsio
-    from lbf_spark.sources import table as TBL
-
-    path = str(tmp_path / "gated")
-    with pytest.raises(TBL.ExpectationsError, match="uniqueness"):
-        TBL.write_table_gated(
-            quality_df.withColumnRenamed("id", "entity").withColumn(
-                "ts", F.col("entity")
-            ),
-            path,
-            [{"kind": "uniqueness", "column": "cat", "lo": 0.9}],
-            mode="overwrite",
-            n_buckets=2,
-            ts_unit_day=10,
-        )
-    assert not fsio.exists(spark, fsio.join(path, "metadata"))
-
-    snap = TBL.write_table_gated(
-        quality_df.withColumnRenamed("id", "entity").withColumn(
-            "ts", F.col("entity")
-        ),
-        path,
-        [
-            {"kind": "uniqueness", "column": "entity", "lo": 1.0},
-            {"kind": "completeness", "column": "cat", "lo": 1.0},
-        ],
-        mode="overwrite",
-        n_buckets=2,
-        ts_unit_day=10,
-    )
-    gate = snap["quality_gate"]
-    assert gate["all_passed"] and gate["n_checks"] == 2
-    assert gate["metrics"]["uniqueness:entity"] == 1.0
-    assert TBL.scan(spark, path).count() == quality_df.count()
-
-
 def test_expectations_unknown_kind_raises(spark, quality_df):
     with pytest.raises(ValueError, match="unknown expectation kind"):
         expectations(quality_df, [{"kind": "nope", "column": "id"}])

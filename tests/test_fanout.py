@@ -10,6 +10,7 @@ marker list) fails loudly instead of silently changing routing:
 - SinglePartition (scalar agg)    -> repartitioned (was: untouched, which
                                      left row-heavy downstream stages
                                      serialized on one task)
+- plan probe fails (API moved)    -> raises; no shape is guessed
 """
 
 import pandas as pd
@@ -86,3 +87,26 @@ def test_many_partition_narrow_plan_untouched(spark):
     df = spark.range(0, 1000, 1, 16).select(F.col("id"))
     out = fan_out(df)
     assert out is df
+
+
+class _SurfaceMoved(Exception):
+    pass
+
+
+class _MovedJdf:
+    """A frame's Java handle after the private plan surface moved: the
+    probe raises, and every other call a fallback could make answers
+    quietly."""
+
+    def queryExecution(self):
+        raise _SurfaceMoved("queryExecution moved")
+
+    def inputFiles(self):
+        return []
+
+
+def test_plan_probe_failure_raises(spark):
+    df = spark.range(0, 10, 1, 1)
+    df._jdf = _MovedJdf()
+    with pytest.raises(_SurfaceMoved):
+        fan_out(df)

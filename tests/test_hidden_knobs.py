@@ -1,16 +1,21 @@
-"""Static guard against hidden knobs in ``lbf_spark``.
+"""Static guards against hidden knobs and unreached code in ``lbf_spark``.
 
 Decisions travel as values — module constants, arguments, return
 values. Two hidden forms are refused: an ``LBF_*`` environment read
 outside ``session.py`` (the one module that reads deployment
 settings), and a fact stashed on an object as a ``_lbf_*`` attribute
 (a DataFrame attribute is silently dropped by any caller's
-``.select()``)."""
+``.select()``).
+
+And no public code that only tests reach: every public top-level name
+in ``lbf_spark`` must be referenced by production code or sit on
+``REACH_ALLOWLIST`` with its reason."""
 
 import ast
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "lbf_spark"
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PKG = ROOT / "lbf_spark"
 
 
 def _is_environ(node) -> bool:
@@ -84,3 +89,134 @@ def test_no_hidden_knobs_in_package():
         for line, what in hidden_knobs(path.read_text())
     ]
     assert offenders == []
+
+
+#: Public names that no production code references, each kept on
+#: purpose. Keys are ``<path under lbf_spark/>:<name>``.
+REACH_ALLOWLIST = {
+    "parity.py:run_parity": "the parity gate run after any catalog edit (CLAUDE.md)",
+    "parity.py:duckdb_conn": "parity tooling: DuckDB views over a testdata dir",
+    "parity.py:oracle_output_types": "parity tooling: an oracle's DESCRIBE types",
+    "parity.py:wide_type_leaks": "parity tooling: the oracle wide-type sweep",
+    "sources/iceberg_interop.py:from_iceberg_metadata":
+        "the exporter's round-trip reference reader",
+    "sources/table.py:scan_files": "probe of manifest pruning: the files a scan reads",
+    "streaming/stream_features.py:run_stream_to_memory":
+        "harness for stream-equals-batch runs",
+    "operators/windows.py:rolling_sum": "unsliced twin of rolling_sliced(kernel='sum')",
+    "functions/audio.py:snr_db": "probe of the lossy audio codec's fidelity",
+    "functions/audio.py:synth_video": "generator of FVC1 video clips",
+}
+
+
+def _production_files() -> list[pathlib.Path]:
+    return [
+        ROOT / "__spark_entry__.py",
+        *sorted(ROOT.glob("bench*.py")),
+        *sorted((ROOT / "jobs").rglob("*.py")),
+        *sorted((ROOT / "perfbench").rglob("*.py")),
+    ]
+
+
+def _refs(node) -> set[str]:
+    """Names a subtree refers to: identifiers, attribute names and
+    ``from … import`` names — never strings, comments or docstrings."""
+    out = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.ImportFrom):
+            out.update(a.name for a in n.names)
+    return out
+
+
+def _defined_names(stmt) -> list[str]:
+    if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [stmt.name]
+    if isinstance(stmt, ast.Assign):
+        return [t.id for t in stmt.targets if isinstance(t, ast.Name)]
+    if isinstance(stmt, ast.AnnAssign) and isinstance(stmt.target, ast.Name):
+        return [stmt.target.id]
+    return []
+
+
+def _registered(stmt) -> bool:
+    """A catalog entry: the ``@q(...)`` decorator registers it."""
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", "") == "q"
+        for d in getattr(stmt, "decorator_list", [])
+    )
+
+
+def unreached_public_names(
+    sources: dict[str, str], production: list[str], allowed=()
+) -> list[str]:
+    """``<module>:<name>`` for every public top-level name of the
+    ``sources`` modules ({relative path: source}) that no production
+    code reaches. A module's other top-level statements and the
+    ``production`` sources are the roots; a definition's body counts
+    only once the definition itself is reached (iterated to a
+    fixpoint, so code reached only from unreached code is unreached
+    too), and never for its own name. The ``allowed`` keys count as
+    reached. Module-level imports are not references: the use is."""
+    defs = {}
+    live = set()
+    for mod, src in sources.items():
+        for stmt in ast.parse(src).body:
+            names = _defined_names(stmt)
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                continue
+            if not names or _registered(stmt):
+                live |= _refs(stmt)
+                continue
+            for name in names:
+                defs[f"{mod}:{name}"] = (name, _refs(stmt) - {name})
+    for src in production:
+        live |= _refs(ast.parse(src))
+    live |= {key.split(":")[1] for key in allowed}
+    reached = set()
+    grew = True
+    while grew:
+        grew = False
+        for key, (name, refs) in defs.items():
+            if key not in reached and name in live:
+                reached.add(key)
+                live |= refs
+                grew = True
+    return sorted(
+        key for key, (name, _) in defs.items()
+        if key not in reached and not name.startswith("_")
+    )
+
+
+def test_no_public_code_only_tests_reach():
+    sample = {
+        "m.py": "\n".join([
+            "import os",
+            "from x import y",
+            "def used(): return _helper()",
+            "def _helper(): return only_dead()",
+            "def only_dead(): return 1",
+            "def dead(): return only_dead() + dead()",
+            "def recursive(): return recursive()",
+            '"""mentions dead and recursive"""',
+            "CONST = 3",
+            "@q('q1_entry', None)",
+            "def q1_entry(): return CONST",
+        ]),
+    }
+    prod = ["from lbf_spark.m import used\nused()"]
+    assert unreached_public_names(sample, prod) == ["m.py:dead", "m.py:recursive"]
+    assert unreached_public_names(sample, prod, {"m.py:dead"}) == ["m.py:recursive"]
+    sources = {
+        path.relative_to(PKG).as_posix(): path.read_text()
+        for path in sorted(PKG.rglob("*.py"))
+    }
+    production = [p.read_text() for p in _production_files()]
+    assert unreached_public_names(sources, production, REACH_ALLOWLIST) == []
+    # every allowlist entry names a definition production does not reach
+    unreached = unreached_public_names(sources, production)
+    assert [k for k in REACH_ALLOWLIST if k not in unreached] == []
+    assert all(reason.strip() for reason in REACH_ALLOWLIST.values())

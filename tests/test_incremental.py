@@ -9,7 +9,6 @@ import pytest
 from pyspark.sql import Window, functions as F
 
 from lbf_spark.operators.incremental import (
-    incremental_entity_refresh,
     incremental_range_refresh,
     refresh_lower_bound,
 )
@@ -28,22 +27,6 @@ def _feat_range(df):
             6,
         ).alias("f_mean"),
         F.count(F.lit(1)).over(w).alias("f_cnt"),
-    )
-
-
-def _feat_unbounded(df):
-    # ffill-style feature: unbounded lookback ⇒ only the entity-level
-    # refresh is exact for it
-    w = (
-        Window.partitionBy("entity")
-        .orderBy("ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.select(
-        "entity",
-        "ts",
-        F.sum(F.col("duration").cast("decimal(18,4)")).over(w).alias("cum"),
-        F.count(F.lit(1)).over(w).alias("seen"),
     )
 
 
@@ -67,18 +50,14 @@ def _collect(df):
     )
 
 
-@pytest.mark.parametrize("fn,kind", [(_feat_range, "range"), (_feat_unbounded, "entity")])
-def test_refresh_equals_full_recompute(spark, tiny_events, fn, kind):
+def test_refresh_equals_full_recompute(spark, tiny_events):
     df = _df(spark, tiny_events)
     base, batch = _split(df, 7)
     assert batch.count() > 0 and base.count() > 0
-    full = _collect(fn(df))
-    if kind == "range":
-        got = incremental_range_refresh(
-            base, batch, fn, lookback=LOOKBACK, by="entity", order="ts"
-        )
-    else:
-        got = incremental_entity_refresh(base, batch, fn, by="entity")
+    full = _collect(_feat_range(df))
+    got = incremental_range_refresh(
+        base, batch, _feat_range, lookback=LOOKBACK, by="entity", order="ts"
+    )
     pd.testing.assert_frame_equal(_collect(got), full)
 
 
@@ -307,7 +286,8 @@ def test_stream_incremental_features_e2e(spark, tiny_events, tmp_path):
     import pyarrow.parquet as pq
 
     from lbf_spark.sources import table as TBL
-    from lbf_spark.streaming.stream_features import stream_incremental_features
+    from lbf_spark.streaming.stream_features import incremental_feature_batch
+    from tests.conftest import foreach_batch
 
     pdf = tiny_events[["entity", "ts", "duration"]]
     src = tmp_path / "inc_src"
@@ -326,10 +306,12 @@ def test_stream_incremental_features_e2e(spark, tiny_events, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = stream_incremental_features(
-        stream, raw, feat, str(tmp_path / "inc_ckpt"), _feat_range,
-        lookback=LOOKBACK,
+    foreach_batch(
+        stream,
+        lambda b, i: incremental_feature_batch(
+            b, i, raw, feat, _feat_range, lookback=LOOKBACK,
+        ),
+        str(tmp_path / "inc_ckpt"),
     )
-    q.awaitTermination(120)
     got = _collect(_feat_cols(TBL.scan(spark, feat)))
     pd.testing.assert_frame_equal(got, _collect(_feat_range(_df(spark, tiny_events))))

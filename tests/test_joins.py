@@ -1,5 +1,4 @@
-"""Bucketed co-located joins (zero-exchange, plan-asserted) and
-deterministic salted joins for skewed keys."""
+"""Deterministic salted joins for skewed keys."""
 
 import pandas as pd
 import numpy as np
@@ -8,45 +7,6 @@ from pyspark.sql import functions as F
 
 from lbf_spark import fixtures
 from lbf_spark.operators import joins as J
-
-
-def _explain(df):
-    jvm = df.sparkSession._jvm
-    return jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-def test_bucketed_join_has_no_exchange(spark, tiny_events, tmp_path):
-    """Two tables bucketed on the same key must SortMergeJoin with ZERO
-    Exchange operators — the repeated-join shuffle eliminated at write
-    time (the 100-TB co-location story)."""
-    ev = fixtures.events_to_spark(spark, tiny_events).select(
-        "entity", "ts", "phash"
-    )
-    dim = ev.groupBy("entity").agg(F.count(F.lit(1)).alias("n_events"))
-    try:
-        try:
-            J.write_bucketed(ev, "ev_bkt", "entity", buckets=8)
-            J.write_bucketed(dim, "dim_bkt", "entity", buckets=8)
-        except Exception as e:  # pragma: no cover - catalog-less sessions
-            pytest.skip(f"no persistent catalog in this session: {e}")
-        a = J.read_bucketed(spark, "ev_bkt")
-        b = J.read_bucketed(spark, "dim_bkt")
-        # disable broadcast so the join exercises the bucketed SMJ path
-        # (at real scale both sides are too big to broadcast anyway)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "entity")
-            plan = _explain(joined)
-            assert "Exchange" not in plan, plan
-            assert "SortMergeJoin" in plan, plan
-            assert "Bucketed: true" in plan, plan
-            assert joined.count() == ev.count()
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    finally:
-        spark.sql("drop table if exists ev_bkt")
-        spark.sql("drop table if exists dim_bkt")
 
 
 def test_salted_join_equals_plain_join(spark, tiny_events):

@@ -35,7 +35,7 @@ def test_exact_dedup(spark, docs):
 
 
 def test_jaccard_pairs_exact(spark, docs):
-    got = dedup.jaccard_pairs(
+    got = dedup.jaccard_pairs_auto(
         dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.5
     ).toPandas()
     pairs = {(r.id_a, r.id_b): r.jaccard for r in got.itertuples()}
@@ -188,19 +188,6 @@ def test_cosine_topk_matches_numpy(spark):
         assert g == exp, (pid, g, exp)
 
 
-def test_lsh_near_dup_pairs_finds_planted(spark):
-    rng = np.random.default_rng(6)
-    base = rng.standard_normal((20, 16))
-    vecs = np.vstack([base, base[:3] + rng.standard_normal((3, 16)) * 0.01])
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    )
-    got = S.lsh_near_dup_pairs(df, dim=16, threshold=0.98, n_planes=8, n_tables=6)
-    pairs = {(r.id_a, r.id_b) for r in got.toPandas().itertuples()}
-    assert {(0, 20), (1, 21), (2, 22)} <= pairs
-
-
 def test_iqr_clamp(spark):
     pdf = pd.DataFrame({"g": ["a"] * 6, "v": [1.0, 2.0, 3.0, 4.0, 5.0, 100.0]})
     got = stats.iqr_clamp(spark.createDataFrame(pdf), "v", "g", out="c").toPandas()
@@ -212,32 +199,6 @@ def test_amplitude(spark):
     df = spark.createDataFrame(rows, "g string, pos int, v double")
     got = stats.amplitude(df, "v", "pos", 10, 2, "g").toPandas()
     assert abs(got.iloc[0]["amplitude"] - 8.0) < 1e-12
-
-
-def test_ivf_topk_recall(spark):
-    """IVF with clustered data: high recall vs brute force; full-probe
-    IVF equals brute force exactly."""
-    from lbf_spark.operators import similarity as S2
-
-    rng = np.random.default_rng(11)
-    centers = rng.standard_normal((6, 16)) * 4
-    vecs = np.vstack([c + rng.standard_normal((40, 16)) * 0.3 for c in centers])
-    df = spark.createDataFrame(
-        [(int(i), [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<float>",
-    ).repartition(4)
-    probes = df.filter("vec_id % 40 = 0")
-    cents = S2.kmeans_fit(df, dim=16, n_centroids=6, n_iters=4)
-    assert cents.shape == (6, 16)
-    exact = S2.brute_force_topk(df, probes, k=5).toPandas()
-    approx = S2.ivf_topk(df, probes, cents, k=5, n_probe=2).toPandas()
-    e = {(r.probe_id, r.neighbor_id) for r in exact.itertuples()}
-    a = {(r.probe_id, r.neighbor_id) for r in approx.itertuples()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.9, recall
-    full = S2.ivf_topk(df, probes, cents, k=5, n_probe=6).toPandas()
-    f = {(r.probe_id, r.neighbor_id) for r in full.itertuples()}
-    assert f == e
 
 
 def test_flanking_normalize_zero_flank_rows_become_zero(spark):
@@ -362,8 +323,8 @@ def test_jaccard_max_df_bounds_candidates_and_preserves_results(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sh = dedup.with_shingles(df, "doc_id", "text", 3)
-    uncapped = dedup.jaccard_pairs(sh, threshold=0.3).toPandas()
-    capped = dedup.jaccard_pairs(sh, threshold=0.3, max_df=5).toPandas()
+    uncapped = dedup.jaccard_pairs_auto(sh, threshold=0.3).toPandas()
+    capped = dedup.jaccard_pairs_auto(sh, threshold=0.3, max_df=5).toPandas()
     # the only >=0.3 pair is (100, 101); both paths find it with the
     # exact jaccard despite the hot shingle being dropped from the index
     assert set(map(tuple, capped[["id_a", "id_b"]].values)) == {(100, 101)}
@@ -372,10 +333,10 @@ def test_jaccard_max_df_bounds_candidates_and_preserves_results(spark):
     assert abs(u - c) < 1e-12
     # bounded fan-out: capped candidate generation never touches the
     # hot shingle ⇒ no pair among the 30 filler docs even pre-threshold
-    capped_all = dedup.jaccard_pairs(sh, threshold=0.0, max_df=5).toPandas()
+    capped_all = dedup.jaccard_pairs_auto(sh, threshold=0.0, max_df=5).toPandas()
     filler_pairs = capped_all[(capped_all.id_a < 100) & (capped_all.id_b < 100)]
     assert len(filler_pairs) == 0
-    uncapped_all = dedup.jaccard_pairs(sh, threshold=0.0).toPandas()
+    uncapped_all = dedup.jaccard_pairs_auto(sh, threshold=0.0).toPandas()
     assert len(uncapped_all[(uncapped_all.id_a < 100) & (uncapped_all.id_b < 100)]) == 30 * 29 / 2
 
 
@@ -1063,8 +1024,8 @@ def test_jaccard_release_caches_leaves_nothing_persisted(spark, docs):
     # other tests' localCheckpoint blocks are unreleasable by design —
     # assert return-to-baseline, not return-to-zero
     base = len(spark.sparkContext._jsc.getPersistentRDDs())
-    got = dedup.jaccard_pairs(
-        dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.5, max_df=100
+    got = dedup.jaccard_pairs_auto(
+        dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.3, max_df=100
     )
     got.count()  # consume
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) > base
@@ -1076,8 +1037,8 @@ def test_jaccard_release_caches_leaves_nothing_persisted(spark, docs):
     # the dedup pass itself left nothing behind
     assert len(spark.sparkContext._jsc.getPersistentRDDs()) <= base
     # rerun after release still correct
-    again = dedup.jaccard_pairs(
-        dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.5
+    again = dedup.jaccard_pairs_auto(
+        dedup.with_shingles(docs, "doc_id", "text", 3), threshold=0.3
     ).toPandas()
     pairs = {(r.id_a, r.id_b): r.jaccard for r in again.itertuples()}
     assert pairs[(1, 3)] == 1.0
@@ -1117,8 +1078,8 @@ def test_jaccard_prefix_equals_full_index(spark, docs):
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
         for r in frame.collect()
     )
-    full = run(dedup.jaccard_pairs(sh, threshold=0.8))
-    pref = run(dedup.jaccard_pairs_prefix(sh, threshold=0.8))
+    full = run(dedup._jaccard_pairs(sh, 0.8, "doc_id"))
+    pref = run(dedup._jaccard_pairs_prefix(sh, 0.8))
     dedup.release_caches()
     assert pref == full
     assert len(pref) >= 4  # every clone found
@@ -1139,8 +1100,8 @@ def test_jaccard_auto_dispatch(spark, docs, monkeypatch):
     """jaccard_pairs_auto routes by threshold — prefix path at t ≥ 0.5,
     full-index path below — and both routes return identical pairs."""
     routed = []
-    real_prefix = dedup.jaccard_pairs_prefix
-    real_full = dedup.jaccard_pairs
+    real_prefix = dedup._jaccard_pairs_prefix
+    real_full = dedup._jaccard_pairs
 
     def spy_prefix(*a, **k):
         routed.append("prefix")
@@ -1150,8 +1111,8 @@ def test_jaccard_auto_dispatch(spark, docs, monkeypatch):
         routed.append("full")
         return real_full(*a, **k)
 
-    monkeypatch.setattr(dedup, "jaccard_pairs_prefix", spy_prefix)
-    monkeypatch.setattr(dedup, "jaccard_pairs", spy_full)
+    monkeypatch.setattr(dedup, "_jaccard_pairs_prefix", spy_prefix)
+    monkeypatch.setattr(dedup, "_jaccard_pairs", spy_full)
     sh = dedup.with_shingles(docs, "doc_id", "text", 3)
     hi = dedup.jaccard_pairs_auto(sh, threshold=0.5).toPandas()
     assert routed[0] == "prefix"
@@ -1161,7 +1122,7 @@ def test_jaccard_auto_dispatch(spark, docs, monkeypatch):
     monkeypatch.undo()
 
     # same threshold through both physical plans → identical pairs
-    direct_hi = real_full(sh, threshold=0.5).toPandas()
+    direct_hi = real_full(sh, 0.5, "doc_id").toPandas()
     key = lambda d: sorted(  # noqa: E731
         (int(r.id_a), int(r.id_b), round(float(r.jaccard), 9))
         for r in d.itertuples()

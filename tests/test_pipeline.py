@@ -116,8 +116,8 @@ def test_run_id_stable():
 
 
 def test_batch_multi_anchor_equals_per_set(spark, tiny_events, tiny_anchors):
-    """One batched pass over N anchor sets must equal N separate runs
-    (scan-sharing correctness, §3.2)."""
+    """One batched pass over N anchor sets (their name-tagged union)
+    must equal N separate runs (scan-sharing correctness, §3.2)."""
     ev = fixtures.events_to_spark(spark, tiny_events)
     sets = {
         name: fixtures.anchors_to_spark(
@@ -127,8 +127,9 @@ def test_batch_multi_anchor_equals_per_set(spark, tiny_events, tiny_anchors):
         )
         for name in ("setA", "setB")
     }
+    tagged = sets["setA"].unionByName(sets["setB"])
     batched = (
-        P.extract_features_batch(ev, sets, CFG)["summary"]
+        P.extract_features(ev, tagged, CFG)["summary"]
         .toPandas()
         .sort_values(["entity", "name", "bucket"], ignore_index=True)
     )

@@ -278,7 +278,7 @@ def test_jaccard_prefix_plan_is_hash_joins_no_python(spark):
         "doc_id long, text string",
     )
     sh = dedup.with_shingles(docs, "doc_id", "text", 3)
-    plan = _explain_str(dedup.jaccard_pairs_prefix(sh, 0.8))
+    plan = _explain_str(dedup.jaccard_pairs_auto(sh, 0.8))
     dedup.release_caches()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoop" not in plan

@@ -175,9 +175,9 @@ def test_sliced_windows_match_unsliced_property(spark, ts_lists, window, slice_w
     rows = []
     for i, ts in enumerate(ts_lists):
         for t in sorted(set(ts)):
-            rows.append((f"e{i}", t, float((t * 31 + i) % 97)))
-    pdf = pd.DataFrame(rows, columns=["entity", "ts", "v"])
-    df = spark.createDataFrame(pdf, "entity string, ts long, v double")
+            rows.append((f"e{i}", t, float((t * 31 + i) % 97), t * 7 + i))
+    pdf = pd.DataFrame(rows, columns=["entity", "ts", "v", "phash"])
+    df = spark.createDataFrame(pdf, "entity string, ts long, v double, phash long")
     exp_r = (
         W.rolling_mean(df, "v", "r", window)
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
@@ -192,10 +192,10 @@ def test_sliced_windows_match_unsliced_property(spark, ts_lists, window, slice_w
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
     )
     got_s = (
-        SW.sessionize_sliced(df, gap, out="s", slice_width=slice_w)
+        SW.fused_bounded_sliced(df, "v", window, gap, slice_width=slice_w)
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
     )
-    assert got_s["s"].tolist() == exp_s["s"].tolist()
+    assert got_s["session_id"].tolist() == exp_s["s"].tolist()
 
 
 @given(
@@ -304,8 +304,8 @@ def test_prefix_jaccard_equals_full_property(spark, docs, threshold):
     run = lambda f: sorted(
         (r["id_a"], r["id_b"], round(r["jaccard"], 9)) for r in f.collect()
     )
-    assert run(dedup.jaccard_pairs_prefix(sh, threshold)) == run(
-        dedup.jaccard_pairs(sh, threshold)
+    assert run(dedup._jaccard_pairs_prefix(sh, threshold)) == run(
+        dedup._jaccard_pairs(sh, threshold, "doc_id")
     )
     dedup.release_caches()
 

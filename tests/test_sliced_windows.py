@@ -2,7 +2,6 @@
 while splitting a hot (Zipf) entity's work across many tasks."""
 
 import numpy as np
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -62,19 +61,26 @@ def test_rolling_median_slice_width_param_routes(spark, events):
 
 
 def test_sessionize_sliced_equals_unsliced(spark, events):
+    """Slices narrower than the session gap: most sessions span several
+    slices, so the ids rest on the per-slice offsets, not local cumsums."""
     exp = _sorted(W.sessionize(events, GAP, out="s").toPandas())
-    got = _sorted(SW.sessionize_sliced(events, GAP, out="s", slice_width=SLICE_W).toPandas())
+    got = _sorted(
+        SW.fused_bounded_sliced(events, "v", WINDOW, GAP, slice_width=GAP // 4)
+        .toPandas()
+    )
     assert len(got) == len(exp)
     assert np.array_equal(
-        got["s"].astype("int64").to_numpy(), exp["s"].astype("int64").to_numpy()
+        got["session_id"].astype("int64").to_numpy(),
+        exp["s"].astype("int64").to_numpy(),
     )
 
 
 def test_sessionize_sliced_auto_width(spark, events):
     exp = _sorted(W.sessionize(events, GAP, out="s").toPandas())
-    got = _sorted(SW.sessionize_sliced(events, GAP, out="s").toPandas())
+    got = _sorted(SW.fused_bounded_sliced(events, "v", WINDOW, GAP).toPandas())
     assert np.array_equal(
-        got["s"].astype("int64").to_numpy(), exp["s"].astype("int64").to_numpy()
+        got["session_id"].astype("int64").to_numpy(),
+        exp["s"].astype("int64").to_numpy(),
     )
 
 
@@ -119,11 +125,6 @@ def test_sparse_slices_halo_correct(spark):
         SW.rolling_sliced(df, "v", "r", 8, kernel="mean", slice_width=100).toPandas()
     )
     assert np.allclose(got["r"], exp["r"], rtol=0, atol=0)
-    exp_s = _sorted(W.sessionize(df, 50, out="s").toPandas())
-    got_s = _sorted(SW.sessionize_sliced(df, 50, out="s", slice_width=100).toPandas())
-    assert np.array_equal(
-        got_s["s"].astype("int64").to_numpy(), exp_s["s"].astype("int64").to_numpy()
-    )
 
 
 def test_fused_bounded_sliced_equals_unsliced(spark, events):
@@ -209,7 +210,9 @@ def test_hamming_and_range_count_sliced_equal_unsliced(spark, events):
     )
     got = _sorted(
         SW.rolling_count_range_sliced(
-            SW.hamming_to_prev_sliced(events, "phash", "drift", slice_width=SLICE_W),
+            SW.fused_bounded_sliced(
+                events, "v", WINDOW, GAP, drift_out="drift", slice_width=SLICE_W
+            ),
             "rc", 3000, slice_width=SLICE_W,
         ).toPandas()
     )
@@ -253,24 +256,3 @@ def test_flagship_pipeline_hot_slice_width_equals_golden(spark):
     ev_ = exp["vectors"].sort_values(["entity", "name"], ignore_index=True)
     for a, b in zip(gv["vector"], ev_["vector"]):
         assert np.allclose(np.asarray(a, dtype=float), b, rtol=1e-9, atol=1e-12)
-
-
-def test_ffill_bfill_sliced_equal_unsliced(spark, events):
-    """Carry-value slicing: nulls spanning whole slices must be filled
-    from earlier (ffill) / later (bfill) slices exactly."""
-    # null out value for a contiguous ts range covering >1 slice
-    df = events.withColumn(
-        "vn",
-        F.when((F.col("ts") % 37 == 0) | ((F.col("ts") > 20_000) & (F.col("ts") < 35_000)),
-               F.lit(None).cast("double")).otherwise(F.col("v")),
-    )
-    for fn_u, fn_s in [
-        (W.ffill, SW.ffill_sliced),
-        (W.bfill, SW.bfill_sliced),
-    ]:
-        exp = _sorted(fn_u(df, "vn", out="f").toPandas())
-        got = _sorted(fn_s(df, "vn", out="f", slice_width=SLICE_W).toPandas())
-        assert len(got) == len(exp)
-        a = got["f"].astype(float).to_numpy()
-        b = exp["f"].astype(float).to_numpy()
-        assert np.all((a == b) | (np.isnan(a) & np.isnan(b))), fn_s.__name__

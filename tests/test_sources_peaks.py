@@ -1,28 +1,6 @@
 import numpy as np
-import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 from lbf_spark.functions import peaks
-from lbf_spark.sources.results import load_results, sample_sheet_from_paths
-
-
-def test_results_loader_md5_join(spark, tmp_path):
-    paths = []
-    for sample in ("s1", "s2"):
-        p = str(tmp_path / f"{sample}.parquet")
-        pdf = pd.DataFrame({"interval": ["i1", "i2"], "amplitude": [1.0, 2.0]})
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), p)
-        paths.append(p)
-    sheet = sample_sheet_from_paths(
-        spark,
-        [{"path": f"file://{p}", "sample_name": s, "group": g}
-         for p, s, g in zip(paths, ["s1", "s2"], ["ctrl", "case"])],
-    )
-    got = load_results(spark, str(tmp_path / "*.parquet"), sheet).toPandas()
-    assert len(got) == 4
-    assert set(got["sample_name"]) == {"s1", "s2"}
-    assert got.loc[got.sample_name == "s2", "group"].eq("case").all()
 
 
 def test_savgol_preserves_polynomials():
@@ -30,23 +8,3 @@ def test_savgol_preserves_polynomials():
     y = 0.5 * x**2 - 3 * x + 7  # degree ≤ polyorder ⇒ exact reconstruction
     sm = peaks.savgol_smooth(y, window=11, polyorder=3)
     assert np.allclose(sm, y, rtol=1e-8, atol=1e-6)
-
-
-def test_find_peaks_basic():
-    y = np.zeros(30)
-    y[5], y[14], y[15], y[25] = 3.0, 5.0, 5.0, 1.0  # plateau at 14-15
-    got = peaks.find_peaks(y)
-    assert 5 in got and 14 in got and 25 in got
-    assert peaks.find_peaks(y, min_height=2.0).tolist() == [5, 14]
-    assert peaks.find_peaks(y, min_distance=12).tolist() == [14]
-    assert peaks.find_peaks(y, min_distance=8).tolist() == [5, 14, 25]
-
-
-def test_histogram_peaks_bimodal(spark, tiny_events):
-    """Fixture durations are bimodal (≈150 and ≈330) — the detected
-    peaks must land near both modes (reference-FLD analog)."""
-    df = spark.createDataFrame(tiny_events[["duration"]])
-    res = peaks.histogram_peaks(df, "duration", bin_width=10, smooth_window=7)
-    peak_vals = [b * 10 for b in res["peak_bins"]]
-    assert any(120 <= v <= 180 for v in peak_vals), peak_vals
-    assert any(300 <= v <= 360 for v in peak_vals), peak_vals

@@ -7,12 +7,12 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from lbf_spark import fixtures
 from lbf_spark.streaming.stream_features import (
     run_stream_to_memory,
     stream_session_stats,
     stream_tumbling_counts,
 )
+from tests.conftest import foreach_batch
 
 GAP = 1000
 WIN = 500
@@ -87,156 +87,8 @@ def test_watermark_drops_very_late_events(spark, tmp_path):
     assert not (got["session_start"] == 2_000_000).any()
 
 
-def test_stateful_asof_enrich_stream_equals_batch(spark, tmp_path, tiny_events):
-    """Streaming point-in-time join: a tagged feature+anchor stream
-    split over 3 time-ordered micro-batches must reproduce the batch
-    asof_join exactly — anchors matching features from EARLIER batches
-    prove the state carry; anchors before any feature emit nulls."""
-    import os
-    import numpy as np
-    from lbf_spark.operators.asof import asof_join
-    from lbf_spark.streaming.stream_features import stream_asof_enrich
-
-    pdf = (
-        tiny_events.drop(columns=["bytes"])
-        .drop_duplicates(subset=["entity", "ts"])
-        .sort_values("ts", ignore_index=True)
-    )
-    pdf["v"] = (pdf["phash"] % 1000).astype(float)
-    feats = pdf[["entity", "ts", "v"]].assign(kind="f")
-    anchors = (
-        pdf.iloc[::7][["entity", "ts"]]
-        .assign(ts=lambda d: d["ts"] + 3, v=0.0, kind="a")
-    )
-    tagged = (
-        pd.concat([feats, anchors[["entity", "ts", "v", "kind"]]])
-        .sort_values("ts", ignore_index=True)
-    )
-    d = tmp_path / "src"
-    d.mkdir()
-    n = len(tagged)
-    for i, (lo, hi) in enumerate([(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]):
-        p = str(d / f"part{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(tagged.iloc[lo:hi], preserve_index=False), p)
-        os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    src = spark.readStream.schema(
-        spark.read.parquet(str(d)).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(d))
-    q = (
-        stream_asof_enrich(src)
-        .writeStream.format("memory")
-        .queryName("asof_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("select * from asof_tbl").toPandas()
-        .sort_values(["entity", "anchor_ts"], ignore_index=True)
-    )
-    ev = spark.createDataFrame(feats[["entity", "ts", "v"]])
-    an = spark.createDataFrame(
-        anchors[["entity", "ts"]].rename(columns={"ts": "anchor_ts"})
-    )
-    exp = (
-        asof_join(ev, an, select=["v", "ts"])
-        .toPandas()
-        .sort_values(["entity", "anchor_ts"], ignore_index=True)
-    )
-    assert len(got) == len(exp) and len(got) > 10
-    a = got["matched_v"].astype(float).to_numpy()
-    b = exp["v"].astype(float).to_numpy()
-    assert np.all((a == b) | (np.isnan(a) & np.isnan(b)))
-    at = got["matched_ts"].astype(float).to_numpy()
-    bt = exp["ts"].astype(float).to_numpy()
-    assert np.all((at == bt) | (np.isnan(at) & np.isnan(bt)))
-
-
-def test_stateful_rolling_mean_stream_equals_batch(spark, tmp_path, tiny_events):
-    """applyInPandasWithState custom operator: rolling mean state must
-    carry across micro-batches — 3 time-ordered files, one per trigger,
-    compared to the batch windows.rolling_mean."""
-    import os
-    import numpy as np
-    from lbf_spark.operators.windows import rolling_mean
-    from lbf_spark.streaming.stream_features import stream_rolling_mean_stateful
-
-    WINDOW = 8
-    pdf = (
-        tiny_events.drop(columns=["bytes"])
-        .drop_duplicates(subset=["entity", "ts"])
-        .sort_values("ts", ignore_index=True)
-    )
-    pdf["v"] = (pdf["phash"] % 1000).astype(float)
-    pdf = pdf[["entity", "ts", "v"]]
-    d = tmp_path / "src"
-    d.mkdir()
-    n = len(pdf)
-    for i, (lo, hi) in enumerate([(0, n // 3), (n // 3, 2 * n // 3), (2 * n // 3, n)]):
-        p = str(d / f"part{i}.parquet")
-        pq.write_table(pa.Table.from_pandas(pdf.iloc[lo:hi], preserve_index=False), p)
-        os.utime(p, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    src = spark.readStream.schema(
-        spark.read.parquet(str(d)).schema
-    ).option("maxFilesPerTrigger", 1).parquet(str(d))
-    q = (
-        stream_rolling_mean_stateful(src, window=WINDOW)
-        .writeStream.format("memory")
-        .queryName("roll_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.sql("select * from roll_tbl")
-        .toPandas()
-        .sort_values(["entity", "ts"], ignore_index=True)
-    )
-    static = spark.createDataFrame(pdf)
-    exp = (
-        rolling_mean(static, "v", "roll_mean", WINDOW, order="ts")
-        .toPandas()
-        .sort_values(["entity", "ts"], ignore_index=True)
-    )
-    assert len(got) == len(exp) and len(got) > 0
-    assert np.allclose(got["roll_mean"], exp["roll_mean"], rtol=1e-12, atol=1e-12)
     # state really crossed batches: rows in later thirds have windows
     # spanning the file boundary — the exact equality above proves it
-
-
-def test_stream_dedup_across_microbatches(spark, tmp_path):
-    """Exact dedup with watermark state: a key re-delivered in a LATER
-    micro-batch is dropped; the surviving set equals batch
-    dropDuplicates. maxFilesPerTrigger=1 forces the re-delivery into a
-    separate batch so cross-batch state is what's under test."""
-    from lbf_spark.streaming.stream_features import stream_dedup
-
-    d = tmp_path / "dedup_src"
-    d.mkdir()
-    b1 = pd.DataFrame({"k": ["a", "b", "c"], "ts": [100, 110, 120]})
-    b2 = pd.DataFrame({"k": ["b", "d", "a"], "ts": [130, 140, 150]})  # b, a re-sent
-    pq.write_table(pa.Table.from_pandas(b1, preserve_index=False), str(d / "b1.parquet"))
-    pq.write_table(pa.Table.from_pandas(b2, preserve_index=False), str(d / "b2.parquet"))
-    src = (
-        spark.readStream.schema("k string, ts long")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(d))
-    )
-    q = (
-        stream_dedup(src, ["k"], watermark_delay="1 hour")
-        .writeStream.format("memory")
-        .queryName("dedup_tbl")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = spark.sql("select k from dedup_tbl").toPandas()["k"].tolist()
-    assert sorted(got) == ["a", "b", "c", "d"]
 
 
 def test_stream_table_sink_exactly_once(spark, tmp_path, tiny_events):
@@ -247,7 +99,7 @@ def test_stream_table_sink_exactly_once(spark, tmp_path, tiny_events):
     import json as _json
 
     from lbf_spark.sources import table as TBL
-    from lbf_spark.streaming.stream_features import stream_table_sink
+    from lbf_spark.streaming.stream_features import table_batch_commit
 
     src_dir = tmp_path / "sink_src"
     src_dir.mkdir()
@@ -260,19 +112,17 @@ def test_stream_table_sink_exactly_once(spark, tmp_path, tiny_events):
     stream = spark.readStream.schema(
         "entity string, ts long, image_id string, phash long"
     ).option("maxFilesPerTrigger", "1").parquet(str(src_dir))
-    q = stream_table_sink(
-        stream, tbl, checkpoint_dir=str(tmp_path / "sink_ckpt"),
-        ts_unit_day=10_000,
+    foreach_batch(
+        stream,
+        lambda b, i: table_batch_commit(b, i, tbl, ts_unit_day=10_000),
+        str(tmp_path / "sink_ckpt"),
     )
-    q.awaitTermination(120)
     assert TBL.scan(spark, tbl).count() == len(pdf)
     snap = TBL.current_snapshot(tbl, spark)
     assert snap["batch_id"] is not None and snap["snapshot_id"] >= 2
 
     # the at-least-once replay contract, invoked directly: re-commit
     # the LAST batch id with its data — must be an idempotent no-op
-    from lbf_spark.streaming.stream_features import table_batch_commit
-
     names = sorted(p.name for p in (tmp_path / "sink_tbl" / "metadata").iterdir())
     last = _json.loads((tmp_path / "sink_tbl" / "metadata" / names[-1]).read_text())
     replay_df = spark.createDataFrame(pdf.iloc[400:])
@@ -336,9 +186,7 @@ def test_stream_cdc_apply_latest_state(spark, tmp_path, tiny_events):
     import pandas as pd
 
     from lbf_spark.sources import table as TBL
-    from lbf_spark.streaming.stream_features import (
-        cdc_batch_apply, stream_cdc_apply,
-    )
+    from lbf_spark.streaming.stream_features import cdc_batch_apply
 
     base = tiny_events[["image_id", "ts", "entity", "phash"]].iloc[:60].copy()
     base["__del"] = False
@@ -367,11 +215,14 @@ def test_stream_cdc_apply_latest_state(spark, tmp_path, tiny_events):
     stream = spark.readStream.schema(
         "image_id string, ts long, entity string, phash long, __del boolean"
     ).option("maxFilesPerTrigger", "1").parquet(str(src_dir))
-    q = stream_cdc_apply(
-        stream, tbl, checkpoint_dir=str(tmp_path / "cdc_ckpt"),
-        keys=["image_id"], delete_col="__del", ts_unit_day=10_000,
+    foreach_batch(
+        stream,
+        lambda b, i: cdc_batch_apply(
+            b, i, tbl, keys=["image_id"], delete_col="__del",
+            ts_unit_day=10_000,
+        ),
+        str(tmp_path / "cdc_ckpt"),
     )
-    q.awaitTermination(120)
 
     got = (
         TBL.scan(spark, tbl)
