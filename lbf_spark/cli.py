@@ -2,9 +2,10 @@
 
 The reference generates one click command per extraction hook with
 shell autocompletion and a textual TUI (``src/lbfextract/cli.py``,
-``autocompletion.py``, ``fextract/tui/app.py``). The engine analog is a
-stdlib-argparse command tree over the same surfaces a cluster user
-drives via ``spark-submit jobs/*.py``:
+``autocompletion.py``, ``fextract/tui/app.py``). The engine analog is
+one stdlib-argparse command tree, run from Python or, on a cluster,
+through the spark-submit shim ``jobs/submit.py`` with the same
+arguments (``spark-submit … jobs/submit.py extract --events …``):
 
     python -m lbf_spark stages                     # discover stages
     python -m lbf_spark queries [--oracled-only]   # catalog listing
@@ -12,14 +13,18 @@ drives via ``spark-submit jobs/*.py``:
     python -m lbf_spark curate  --documents D --out O [--near-dup ...]
     python -m lbf_spark dedup   --documents D --out O [--threshold ...]
                                 [--method minhash|jaccard|semantic|tile]
+                                [--checkpoint-dir DFS_DIR]
+    python -m lbf_spark ingest  --input B --store S [--threshold ...]
     python -m lbf_spark imageprep --images I --out O [--targets 512x512,...]
     python -m lbf_spark table snapshots|compact|expire|evolve-spec|orphans|export-iceberg PATH
     python -m lbf_spark plot signal|heatmap --summary S --out O.svg ...
 
 Every subcommand is a thin adapter: parse/validate flags (stage configs
 go through ``plans.registry.validate_config``, the voluptuous analog),
-build or join a SparkSession, call the same public functions the jobs
-and tests call. Shell completion is available when ``argcomplete`` is
+build or join a SparkSession through ``session.get_spark``, and call
+the engine's public functions. ``--master`` and ``--shuffle-partitions``
+default to ``get_spark``'s choice; under spark-submit the launcher's
+settings win. Shell completion is available when ``argcomplete`` is
 installed (``eval "$(register-python-argcomplete lbf-spark)"``) and is
 a silent no-op otherwise — no hard dependency, matching the
 environment's no-new-packages rule.
@@ -43,8 +48,10 @@ def _session(args):
 
 
 def _add_session_flags(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--master", default="local[*]")
-    p.add_argument("--shuffle-partitions", type=int, default=32)
+    # None = get_spark's default; under spark-submit the launcher's
+    # --master and --conf win over both flags
+    p.add_argument("--master", default=None)
+    p.add_argument("--shuffle-partitions", type=int, default=None)
 
 
 def _cmd_stages(args) -> int:
@@ -180,7 +187,10 @@ def _cmd_dedup(args) -> int:
             n=args.ngram, num_hashes=args.num_hashes, bands=args.bands,
             threshold=args.threshold,
         ).select("id_a", "id_b")
-    clusters = dedup.dup_clusters(pairs)
+    clusters = dedup.dup_clusters(
+        pairs, reliable=args.checkpoint_dir is not None,
+        checkpoint_dir=args.checkpoint_dir,
+    )
     out = (
         docs.select(F.col(args.id_col).alias("doc_id"))
         .join(clusters, "doc_id", "left")
@@ -214,31 +224,35 @@ def _cmd_imageprep(args) -> int:
     )
     out.write.mode("overwrite").parquet(fsio.join(args.out, "prepared"))
     prepared = spark.read.parquet(fsio.join(args.out, "prepared"))
-    buckets = {
-        str(r["bucket_id"]): r["n"]
-        for r in prepared.groupBy("bucket_id")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
+    report = {
+        "n_images": prepared.count(),
+        "buckets": {
+            str(r["bucket_id"]): {"n": r["n"], "complete_batches": r["cb"]}
+            for r in prepared.groupBy("bucket_id").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct(
+                    F.when(F.col("is_complete"),
+                           F.concat_ws(":", "shard", "batch_no"))
+                ).alias("cb"),
+            ).collect()
+        },
     }
-    print(json.dumps({"n_images": prepared.count(), "buckets": buckets}))
+    fsio.write_text_atomic(
+        spark, fsio.join(args.out, "report.json"), json.dumps(report, indent=1)
+    )
+    print(json.dumps(report))
     return 0
 
 
 def _cmd_ingest(args) -> int:
-    import json as _json
-
-    from lbf_spark import fsio
-    from lbf_spark.streaming.stream_features import dedup_ingest_batch
+    from lbf_spark.streaming.stream_features import (
+        dedup_ingest_batch, read_ingest_hwm,
+    )
 
     spark = _session(args)
     batch = spark.read.parquet(args.input)
-    try:
-        state = _json.loads(
-            fsio.read_text(spark, f"{args.store}/state.json")
-        )
-    except Exception:
-        state = {"batch_hwm": -1}
     stats = dedup_ingest_batch(
-        batch, state["batch_hwm"] + 1, args.store,
+        batch, read_ingest_hwm(spark, args.store) + 1, args.store,
         threshold=args.threshold, n=args.ngram,
         num_hashes=args.num_hashes, bands=args.bands,
         id_col=args.id_col, text_col=args.text_col,
@@ -393,6 +407,13 @@ def build_parser() -> argparse.ArgumentParser:
                    help="tile: shared 8x8 digests required per pair")
     p.add_argument("--max-df", type=int, default=1024,
                    help="tile: drop digests present in more images")
+    p.add_argument(
+        "--checkpoint-dir", default=None,
+        help="DFS dir (hdfs://, s3a://, file:) for reliable per-round "
+        "checkpoints of the connected-components labels. Set it on a "
+        "multi-executor cluster: the default local checkpoints live on "
+        "executors, and losing one fails the run.",
+    )
     _add_session_flags(p)
     p.set_defaults(fn=_cmd_dedup)
 

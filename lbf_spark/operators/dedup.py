@@ -739,7 +739,7 @@ def jaccard_pairs_auto(
     lazy, so this function cannot unpersist its own intermediates —
     every frame it persists is registered in the calling thread's
     release scope; call ``dedup.release_caches()`` when the consuming
-    actions of a pass are done (jobs/run_dedup.py does)."""
+    actions of a pass are done (the CLI's ``dedup`` does)."""
     if threshold >= PREFIX_DISPATCH_THRESHOLD:
         return _jaccard_pairs_prefix(shingled, threshold, id_col)
     return _jaccard_pairs(

@@ -8,9 +8,10 @@ buckets so the hot entity's window work runs in span/W parallel tasks,
 while producing **bit-identical** results to the unsliced operators
 (property-tested in ``tests/test_sliced_windows.py``):
 
-- **Bounded row kernels** (rolling mean/sum/min/max/median over the
-  last ``window`` rows): each slice is processed with a *halo* — the
-  ``window-1`` rows immediately preceding the slice, duplicated in.
+- **Bounded row kernels** (the rolling mean over the last ``window``
+  rows, the lag-1 hamming drift): each slice is processed with a
+  *halo* — the ``window-1`` rows immediately preceding the slice,
+  duplicated in.
   Any row among the last ``window-1`` before slice *s* is necessarily
   among the last ``window-1`` rows of its own slice, so collecting the
   per-slice tails is sufficient even when intermediate slices are
@@ -37,7 +38,7 @@ rows per entity. Both are O(parallelism), not O(data).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def _norm(by, order):
@@ -103,75 +104,6 @@ def _halo_rows(
         return pd.concat(out, ignore_index=True)
 
     return tails.groupBy(*by).applyInPandas(assemble, schema)
-
-
-_JVM_KERNELS = {"mean": F.avg, "sum": F.sum, "min": F.min, "max": F.max}
-
-
-def rolling_sliced(
-    df: DataFrame,
-    col: str,
-    out: str,
-    window: int,
-    kernel: str = "mean",
-    by="entity",
-    order="ts",
-    ts_col: str | None = None,
-    slice_width: int | None = None,
-) -> DataFrame:
-    """Trailing rolling ``kernel`` over the last ``window`` rows,
-    min_count=1 — result identical to the unsliced operators in
-    ``windows.py``, but the per-entity work is split over time slices.
-
-    kernel ∈ {mean, sum, min, max} run as JVM window aggregates within
-    (by, _slice); 'median' runs the exact pandas kernel per slice (the
-    same sanctioned Arrow path as ``rolling_median``, now bounded to a
-    slice instead of a whole entity).
-
-    Precondition (same as the unsliced ops): ``order`` is a total order
-    within each entity — add an id tie-break if ts can repeat.
-    """
-    by, order = _norm(by, order)
-    ts = ts_col or order[0]
-    if slice_width is None:
-        slice_width = _auto_slice_width(df, ts)
-    sliced = _with_slice(df, ts, slice_width)
-    halos = _halo_rows(sliced, window, by, order).withColumn("_halo", F.lit(1))
-    full = sliced.withColumn("_halo", F.lit(0)).unionByName(halos)
-
-    out_field = T.StructField(out, T.DoubleType(), True)
-    if kernel in _JVM_KERNELS or (kernel == "median" and window <= 64):
-        from lbf_spark.operators.windows import _median_over
-
-        w = (
-            Window.partitionBy(*by, "_slice")
-            .orderBy(*order)
-            .rowsBetween(-(window - 1), 0)
-        )
-        expr = (
-            _median_over(col, w)
-            if kernel == "median"
-            else _JVM_KERNELS[kernel](col).over(w)
-        )
-        res = full.withColumn(out, expr)
-        return res.filter(F.col("_halo") == 0).drop("_slice", "_halo")
-    if kernel != "median":
-        raise ValueError(f"unsupported kernel: {kernel}")
-
-    schema = T.StructType(
-        [f for f in df.schema.fields] + [out_field]
-    )
-    order_cols = list(order)
-
-    def fn(keys: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort", ignore_index=True)
-        pdf[out] = (
-            pdf[col].astype("float64").rolling(window, min_periods=1).median()
-        )
-        pdf = pdf[pdf["_halo"] == 0]
-        return pdf.drop(columns=["_slice", "_halo"])
-
-    return full.groupBy(*by, "_slice").applyInPandas(fn, schema)
 
 
 def fused_bounded_sliced(

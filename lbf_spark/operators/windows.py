@@ -32,11 +32,6 @@ def rolling_mean(
     return df.withColumn(out, F.avg(col).over(w))
 
 
-def rolling_sum(df, col, out, window, by="entity", order="ts"):
-    w = _w(by, order).rowsBetween(-(window - 1), 0)
-    return df.withColumn(out, F.sum(col).over(w))
-
-
 def rolling_count_range(
     df: DataFrame, out: str, span: int, by="entity", order="ts"
 ) -> DataFrame:
@@ -86,7 +81,6 @@ def sessionize(
 
 def rolling_median(
     df: DataFrame, col: str, out: str, window: int, by="entity", order="ts",
-    slice_width: int | None = None,
 ) -> DataFrame:
     """Exact trailing rolling median (WPS smoothing analog,
     ``signal_transformer.py:276``). Spark has no rolling-median kernel;
@@ -99,20 +93,7 @@ def rolling_median(
       growing frame at partition start.
     * larger windows: the grouped Arrow pandas kernel (collect_list
       arrays per row would cost O(w) memory each) — the sanctioned
-      slow path (SURVEY.md §7 hard-part e).
-
-    ``slice_width`` routes through the halo-sliced variant
-    (``sliced_windows.rolling_sliced``): identical results, but a hot
-    entity's rows are processed in span/slice_width parallel tasks
-    instead of one — use it whenever a single entity may exceed task
-    memory (the Zipf-skew case in DESIGN_SCALE.md)."""
-    if slice_width is not None:
-        from lbf_spark.operators.sliced_windows import rolling_sliced
-
-        return rolling_sliced(
-            df, col, out, window, kernel="median", by=by, order=order,
-            slice_width=slice_width,
-        )
+      slow path (SURVEY.md §7 hard-part e)."""
     if window <= 64:
         w = _w(by, order).rowsBetween(-(window - 1), 0)
         return df.withColumn(out, _median_over(col, w))

@@ -1,10 +1,10 @@
 """Image training-prep chain: aspect-bucket plan + pack + execute.
 
-The composition behind ``jobs/run_imageprep.py`` and ``python -m
-lbf_spark imageprep``: optional codec normalization (transcode) →
-``bucket_fit`` integer resize/crop PLAN per image (q173) →
-``aspect_bucket_pack`` reproducible batch assembly over the same exact
-bucket argmin (q158) → ``apply_bucket_fit`` pixel execution (q174;
+The composition behind ``python -m lbf_spark imageprep``: optional
+codec normalization (transcode) → ``bucket_fit`` integer resize/crop
+PLAN per image (q173) → ``aspect_bucket_pack`` reproducible batch
+assembly over the same exact bucket argmin (q158) →
+``apply_bucket_fit`` pixel execution (q174;
 skipped with ``plan_only``, which exports the metadata-only plan for a
 downstream loader to execute).
 

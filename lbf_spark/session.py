@@ -34,6 +34,18 @@ def default_driver_memory(ram_bytes: int) -> str:
     return f"{min(24 << 10, int(ram_bytes * 0.6) >> 20)}m"
 
 
+def _launcher_keys() -> set[str]:
+    """The conf keys spark-submit set when it started this driver: it
+    launches the JVM first and hands Python the gateway port. Empty
+    from plain Python, where the builder launches the JVM itself."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return set()
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return {k for k, _ in SparkConf().getAll()}
+
+
 def get_spark(
     app_name: str = "lbf_spark",
     master: str | None = None,
@@ -43,8 +55,13 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
-    in the sandbox; on a real cluster the caller passes nothing and
-    spark-submit supplies the master.
+    and ``shuffle_partitions`` to ``$LBF_SHUFFLE_PARTITIONS`` (or 32).
+    When spark-submit started the driver, every key the launcher set
+    (``--master``, ``--conf``, ``--driver-memory``, spark-defaults)
+    keeps the launcher's value, and this function's settings, the
+    arguments and ``extra_conf`` included, fill in only the keys it
+    left unset. From plain Python nothing is set yet, so all of them
+    apply.
 
     Static confs (the codegen cache size, the driver memory) only take
     effect when this call creates the JVM: an already running
@@ -59,15 +76,15 @@ def get_spark(
             os.environ.get("LBF_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
         )
 
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .master(master)
+    conf = {
+        "spark.app.name": app_name,
+        "spark.master": master,
         # AQE: runtime coalescing of small shuffle partitions and skew-join
         # splitting — the distributed answer to the reference's hand-tuned
         # single-pass samtools scan (SURVEY.md §4).
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
         # AQE's coalescing floor is BYTE-based (1m default), but many of
         # this engine's reduce stages are CPU-dense over tiny rows
         # (array_intersect verification, as-of merge, rank statistics):
@@ -76,53 +93,51 @@ def get_spark(
         # tasks, 85 s CPU over 29 MB). 64k keeps such stages at full
         # width; at warehouse scale partitions are GBs and the floor is
         # inert. Env-overridable for deployments that want the default.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize":
             os.environ.get("LBF_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
         # Scan-split size. Sandbox/test inputs are single-digit-MB,
         # few-row-group files where a 128m split serializes the scan
         # (sf1.0 lineitem: 131.8 MB ⇒ 2 tasks); 16m reaches row-group
         # granularity. Production at TB scale should raise this to
-        # 128m-1g (guide §6: fewer, larger map tasks) via the env.
-        .config(
-            "spark.sql.files.maxPartitionBytes",
+        # 128m-1g (guide §6: fewer, larger map tasks) via the env or
+        # spark-submit --conf.
+        "spark.sql.files.maxPartitionBytes":
             os.environ.get("LBF_MAX_PARTITION_BYTES", "16m"),
-        )
         # Arrow on both directions of every pandas UDF. Batch size 2048:
         # with KB-scale binary payloads, 10k-row batches mean ~30 MB
         # pandas frames per worker — measured 2× slower than 2k batches
         # at 32 workers (allocator churn); 2048 keeps batches ~6 MB.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+        "spark.sql.shuffle.partitions": str(shuffle_partitions),
         # Timestamps in the engine are int64 event-times; keep session TZ
         # fixed so timestamp-typed test tables hash identically everywhere.
-        .config("spark.sql.session.timeZone", "UTC")
+        "spark.sql.session.timeZone": "UTC",
         # Local mode: the driver JVM IS the executor. 8g forced the q23
         # pair aggregation through ~1.7 GB of map+reduce spill (measured
         # r7 on a 128 GiB host, where 24g kept hash aggregations
         # in-memory); smaller hosts get 60 % of their RAM. On a real
         # cluster executor memory is sized by spark-submit, not here
         # (guide §5).
-        .config(
-            "spark.driver.memory",
-            os.environ.get("LBF_DRIVER_MEM")
-            or default_driver_memory(
-                os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-            ),
-        )
+        "spark.driver.memory": os.environ.get("LBF_DRIVER_MEM")
+        or default_driver_memory(
+            os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        ),
         # Generated code compiles once per JVM (CODEGEN_CACHE_ENTRIES).
         # The cache key is the source text. By default each whole-stage
         # class name carries its codegen stage id, which AQE hands out
         # in stage-completion order, so a repeat of the same stage under
         # another id would miss the cache.
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.sql.codegen.useIdInClassName", "false")
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
+        "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+        "spark.sql.codegen.useIdInClassName": "false",
+        "spark.ui.enabled": "false",
+        **(extra_conf or {}),
+    }
+    launcher = _launcher_keys()
+    builder = SparkSession.builder
+    for k, v in conf.items():
+        if k not in launcher:
+            builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # ship the package to executors (spark-submit --py-files equivalent),
     # so UDFs unpickle no matter where the driver was launched from

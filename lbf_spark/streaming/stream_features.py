@@ -527,6 +527,25 @@ def read_heavy_hitter_state(spark, state_path: str) -> dict:
     )
 
 
+def read_ingest_hwm(spark, store_dir: str) -> int:
+    """The ingest store's high-water mark: the last committed batch id,
+    -1 for a fresh store (no ``state.json`` yet). Any other failure
+    raises — a corrupt state read as "fresh" would re-ingest the next
+    batch as batch 0 against no corpus and overwrite ``batch-00000``."""
+    from lbf_spark import fsio
+
+    state_file = fsio.join(store_dir, "state.json")
+    if not fsio.exists(spark, state_file):
+        return -1
+    text = fsio.read_text(spark, state_file)
+    try:
+        return int(json.loads(text)["batch_hwm"])
+    except (ValueError, KeyError, TypeError) as e:
+        raise ValueError(
+            f"ingest store state {state_file} is unreadable: {text[:200]!r}"
+        ) from e
+
+
 def dedup_ingest_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -563,18 +582,12 @@ def dedup_ingest_batch(
     its (bounded) bucket-matched docs to verification; at 10^12 docs
     the postings join is the only corpus-sized input and it's an
     equi-join on (band_id, band_hash)."""
-    import json as _json
-
     from lbf_spark import fsio
     from lbf_spark.operators import dedup
 
     spark = batch_df.sparkSession
-    state_file = fsio.join(store_dir, "state.json")
-    try:
-        state = _json.loads(fsio.read_text(spark, state_file))
-    except Exception:
-        state = {"batch_hwm": -1}
-    if batch_id <= state["batch_hwm"]:
+    hwm = read_ingest_hwm(spark, store_dir)
+    if batch_id <= hwm:
         return None  # fully committed: replay no-op
     if batch_df.isEmpty():
         return {"batch_id": batch_id, "n_in": 0, "n_kept": 0,
@@ -582,7 +595,7 @@ def dedup_ingest_batch(
 
     corpus_dir = fsio.join(store_dir, "corpus")
     post_dir = fsio.join(store_dir, "postings")
-    have_corpus = state["batch_hwm"] >= 0
+    have_corpus = hwm >= 0
     batch = batch_df.select(id_col, text_col)
     if have_corpus:
         corpus = spark.read.parquet(f"{corpus_dir}/batch-*")
@@ -655,7 +668,7 @@ def dedup_ingest_batch(
     )
     dedup.release_caches()
     fsio.write_text_atomic(
-        spark, state_file,
-        _json.dumps({"batch_hwm": batch_id}, sort_keys=True),
+        spark, fsio.join(store_dir, "state.json"),
+        json.dumps({"batch_hwm": batch_id}, sort_keys=True),
     )
     return stats

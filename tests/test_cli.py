@@ -1,6 +1,7 @@
 """CLI front-end (lbf_spark/cli.py — the reference's click-command
-analog): every subcommand drives the same public functions the jobs
-use; these tests run them end-to-end on tiny inputs."""
+analog, and through jobs/submit.py the spark-submit target): every
+subcommand drives the engine's public functions; these tests run them
+end-to-end on tiny inputs."""
 
 from __future__ import annotations
 
@@ -62,6 +63,35 @@ def test_cli_dedup_and_curate(spark, tmp_path, capsys):
     assert funnel["near_dedup"] < funnel["input"]
     kept = spark.read.parquet(f"{cur_dir}/kept")
     assert kept.count() == funnel[list(funnel)[-1]] or kept.count() > 0
+
+
+def test_cli_dedup_checkpoint_dir_is_reliable(spark, tmp_path, capsys):
+    """--checkpoint-dir runs dup_clusters' reliable arm: its rounds land
+    as checkpoint files in that dir, and the clusters match the default
+    local-checkpoint run."""
+    import glob
+
+    docs = pd.DataFrame({
+        "doc_id": range(4),
+        "text": ["alpha beta gamma delta epsilon zeta eta theta"] * 3
+        + ["completely different words in this last document here"],
+    })
+    src = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(docs).write.parquet(src)
+    got = {}
+    for name, extra in (("local", []),
+                        ("reliable", ["--checkpoint-dir", str(tmp_path / "ck")])):
+        assert main(["dedup", "--documents", src, "--out",
+                     str(tmp_path / name), *extra]) == 0
+        assert json.loads(capsys.readouterr().out.strip().splitlines()[-1]) == {
+            "docs": 4, "keepers": 2,
+        }
+        got[name] = (
+            spark.read.parquet(str(tmp_path / name / "clusters"))
+            .toPandas().sort_values("doc_id", ignore_index=True)
+        )
+    assert got["reliable"].equals(got["local"])
+    assert glob.glob(str(tmp_path / "ck" / "*" / "rdd-*"))
 
 
 def test_cli_table_commands(spark, tmp_path, tiny_events, capsys):
@@ -182,9 +212,16 @@ def test_cli_imageprep(spark, tmp_path, capsys):
                  "--batch-size", "4", "--n-shards", "2",
                  "--to-fmt", "png"]) == 0
     rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rep["n_images"] == 24 and sum(rep["buckets"].values()) == 24
+    assert rep == json.load(open(f"{out_dir}/report.json"))
+    assert rep["n_images"] == 24
+    assert sum(b["n"] for b in rep["buckets"].values()) == 24
     got = spark.read.parquet(f"{out_dir}/prepared").toPandas()
     assert ((got.w == got.tgt_w) & (got.h == got.tgt_h)).all()
+    full = got[got.is_complete].drop_duplicates(["bucket_id", "shard", "batch_no"])
+    n_full = full.groupby("bucket_id").size()
+    assert {b: v["complete_batches"] for b, v in rep["buckets"].items()} == {
+        str(b): int(n_full.get(b, 0)) for b in got.bucket_id.unique()
+    }
 
 
 def test_cli_ingest_two_batches(spark, tmp_path):
@@ -228,6 +265,34 @@ def test_cli_ingest_two_batches(spark, tmp_path):
     corpus = spark.read.parquet(f"{store}/corpus/batch-*")
     kept = {r["doc_id"] for r in corpus.collect()}
     assert kept == {1, 2, 4}  # 3 near-dups 1 across batches
+
+
+def test_cli_ingest_corrupt_state_raises(spark, tmp_path):
+    """A corrupt state.json is an error, never a fresh store: read as
+    "fresh" it would ingest the next batch as batch 0 against no corpus
+    and overwrite the committed batch-00000."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = tmp_path / "store"
+    committed = store / "corpus" / "batch-00000" / "part-0.parquet"
+    committed.parent.mkdir(parents=True)
+    pq.write_table(
+        pa.Table.from_pydict({"doc_id": [1], "text": ["the committed doc"]}),
+        str(committed),
+    )
+    (store / "state.json").write_text('{"batch_hwm": 0')  # torn write
+    batch = tmp_path / "in"
+    batch.mkdir()
+    pq.write_table(
+        pa.Table.from_pydict({"doc_id": [2], "text": ["a new doc"]}),
+        str(batch / "part.parquet"),
+    )
+    before = committed.read_bytes()
+    with pytest.raises(ValueError, match="state.json"):
+        main(["ingest", "--input", str(batch), "--store", str(store)])
+    assert sorted(p.name for p in committed.parent.iterdir()) == ["part-0.parquet"]
+    assert committed.read_bytes() == before
 
 
 def test_cli_queries_explain(spark, capsys):

@@ -7,6 +7,11 @@ settings), and a fact stashed on an object as a ``_lbf_*`` attribute
 (a DataFrame attribute is silently dropped by any caller's
 ``.select()``).
 
+One session factory: ``SparkSession.builder`` appears in
+``session.py`` only, so every session in the package and in
+``jobs/`` gets the engine's defaults and, under spark-submit, the
+launcher's settings.
+
 And no public code that only tests reach: every public top-level name
 in ``lbf_spark`` must be referenced by production code or sit on
 ``REACH_ALLOWLIST`` with its reason."""
@@ -91,6 +96,35 @@ def test_no_hidden_knobs_in_package():
     assert offenders == []
 
 
+def session_builders(source: str) -> list[int]:
+    """Lines of every ``SparkSession.builder`` reference in ``source``."""
+    return sorted(
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Attribute)
+        and node.attr == "builder"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "SparkSession"
+    )
+
+
+def test_one_session_factory():
+    sample = "\n".join([
+        "from pyspark.sql import SparkSession",
+        'spark = SparkSession.builder.appName("x").getOrCreate()',
+        "b = SparkSession.builder",
+        "ok = other.builder, SparkSession.active()",
+    ])
+    assert session_builders(sample) == [2, 3]
+    offenders = [
+        f"{path.relative_to(ROOT)}:{line}"
+        for path in sorted([*PKG.rglob("*.py"), *(ROOT / "jobs").rglob("*.py")])
+        if path != PKG / "session.py"
+        for line in session_builders(path.read_text())
+    ]
+    assert offenders == []
+
+
 #: Public names that no production code references, each kept on
 #: purpose. Keys are ``<path under lbf_spark/>:<name>``.
 REACH_ALLOWLIST = {
@@ -103,7 +137,6 @@ REACH_ALLOWLIST = {
     "sources/table.py:scan_files": "probe of manifest pruning: the files a scan reads",
     "streaming/stream_features.py:run_stream_to_memory":
         "harness for stream-equals-batch runs",
-    "operators/windows.py:rolling_sum": "unsliced twin of rolling_sliced(kernel='sum')",
     "functions/audio.py:snr_db": "probe of the lossy audio codec's fidelity",
     "functions/audio.py:synth_video": "generator of FVC1 video clips",
 }

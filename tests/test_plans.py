@@ -153,7 +153,8 @@ def test_wps_matches_numpy_oracle(spark, tiny_events, tiny_anchors):
 @pytest.mark.slow
 def test_spark_submit_pyfiles_job(tmp_path):
     """End-to-end spark-submit --py-files run of the packaged pipeline
-    from OUTSIDE the repo (the north_rule packaging requirement)."""
+    through the CLI's spark-submit target, from OUTSIDE the repo (the
+    north_rule packaging requirement)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -173,7 +174,8 @@ def test_spark_submit_pyfiles_job(tmp_path):
             "--master", "local[2]",
             "--py-files", zip_path,
             "--conf", "spark.ui.enabled=false",
-            os.path.join(repo, "jobs", "run_pipeline.py"),
+            os.path.join(repo, "jobs", "submit.py"),
+            "extract",
             "--events", ev_p,
             "--anchors", an_p,
             "--checkpoint-dir", str(tmp_path / "ckpt"),
@@ -185,6 +187,41 @@ def test_spark_submit_pyfiles_job(tmp_path):
     metrics = json.loads(out.stdout.strip().splitlines()[-1])
     assert metrics["n_vectors"] > 0 and metrics["total_wall_sec"] > 0
     assert glob.glob(str(tmp_path / "ckpt" / "*" / "metrics.json"))
+
+
+@pytest.mark.slow
+def test_spark_submit_launcher_settings_win(tmp_path):
+    """Under spark-submit the launcher's --master and --conf win over
+    get_spark's defaults, which still fill in every key it left unset."""
+    from lbf_spark import session
+    from lbf_spark.packaging import build_pyfiles_zip
+
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import json\n"
+        "from lbf_spark.session import get_spark\n"
+        "conf = get_spark().sparkContext.getConf()\n"
+        "print(json.dumps({k: conf.get(k) for k in (\n"
+        "    'spark.master', 'spark.sql.shuffle.partitions',\n"
+        "    'spark.sql.codegen.cache.maxEntries')}))\n"
+    )
+    out = subprocess.run(
+        [
+            "spark-submit",
+            "--master", "local[2]",
+            "--conf", "spark.sql.shuffle.partitions=3",
+            "--conf", "spark.ui.enabled=false",
+            "--py-files", build_pyfiles_zip(),
+            str(probe),
+        ],
+        capture_output=True, text=True, timeout=300, cwd=str(tmp_path),
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == {
+        "spark.master": "local[2]",
+        "spark.sql.shuffle.partitions": "3",
+        "spark.sql.codegen.cache.maxEntries": str(session.CODEGEN_CACHE_ENTRIES),
+    }
 
 
 def test_peter_ulz_plan_is_jvm_hash_join(spark, tiny_events, tiny_anchors):

@@ -182,20 +182,16 @@ def test_sliced_windows_match_unsliced_property(spark, ts_lists, window, slice_w
         W.rolling_mean(df, "v", "r", window)
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
     )
-    got_r = (
-        SW.rolling_sliced(df, "v", "r", window, kernel="mean", slice_width=slice_w)
-        .toPandas().sort_values(["entity", "ts"], ignore_index=True)
-    )
-    assert np.allclose(got_r["r"], exp_r["r"], rtol=0, atol=0)
     exp_s = (
         W.sessionize(df, gap, out="s")
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
     )
-    got_s = (
+    got = (
         SW.fused_bounded_sliced(df, "v", window, gap, slice_width=slice_w)
         .toPandas().sort_values(["entity", "ts"], ignore_index=True)
     )
-    assert got_s["session_id"].tolist() == exp_s["s"].tolist()
+    assert np.allclose(got["roll_mean"], exp_r["r"], rtol=0, atol=0)
+    assert got["session_id"].tolist() == exp_s["s"].tolist()
 
 
 @given(

@@ -678,8 +678,7 @@ def test_apply_bucket_fit_executes_plan(spark):
 
 
 def test_imageprep_job_chain(spark):
-    """plans/imageprep.py:prep_images (the jobs/run_imageprep.py and
-    CLI chain) — plan + pack + execute: every output image sits at its
+    """plans/imageprep.py:prep_images (the CLI imageprep chain) — plan + pack + execute: every output image sits at its
     bucket's target resolution, packing columns are present, and
     plan_only leaves pixels alone."""
     from lbf_spark.plans.imageprep import parse_targets, prep_images

@@ -31,35 +31,6 @@ def _sorted(pdf, extra=()):
     return pdf.sort_values(["entity", "ts", *extra], ignore_index=True)
 
 
-@pytest.mark.parametrize("kernel", ["mean", "sum", "min", "max", "median"])
-def test_rolling_sliced_equals_unsliced(spark, events, kernel):
-    unsliced_fn = {
-        "mean": lambda d: W.rolling_mean(d, "v", "r", WINDOW),
-        "sum": lambda d: W.rolling_sum(d, "v", "r", WINDOW),
-        "min": lambda d: W.rolling_min_max(d, "v", "r", "_mx", WINDOW).drop("_mx"),
-        "max": lambda d: W.rolling_min_max(d, "v", "_mn", "r", WINDOW).drop("_mn"),
-        "median": lambda d: W.rolling_median(d, "v", "r", WINDOW),
-    }[kernel]
-    exp = _sorted(unsliced_fn(events).toPandas())
-    got = _sorted(
-        SW.rolling_sliced(
-            events, "v", "r", WINDOW, kernel=kernel, slice_width=SLICE_W
-        ).toPandas()
-    )
-    assert len(got) == len(exp)
-    assert np.allclose(
-        got["r"].astype(float), exp["r"].astype(float), rtol=0, atol=0
-    ), kernel
-
-
-def test_rolling_median_slice_width_param_routes(spark, events):
-    exp = _sorted(W.rolling_median(events, "v", "r", WINDOW).toPandas())
-    got = _sorted(
-        W.rolling_median(events, "v", "r", WINDOW, slice_width=SLICE_W).toPandas()
-    )
-    assert np.allclose(got["r"], exp["r"], rtol=0, atol=0)
-
-
 def test_sessionize_sliced_equals_unsliced(spark, events):
     """Slices narrower than the session gap: most sessions span several
     slices, so the ids rest on the per-slice offsets, not local cumsums."""
@@ -122,9 +93,11 @@ def test_sparse_slices_halo_correct(spark):
     df = spark.createDataFrame(rows, "entity string, ts long, v double")
     exp = _sorted(W.rolling_mean(df, "v", "r", 8).toPandas())
     got = _sorted(
-        SW.rolling_sliced(df, "v", "r", 8, kernel="mean", slice_width=100).toPandas()
+        SW.fused_bounded_sliced(
+            df.withColumn("phash", F.lit(0)), "v", 8, GAP, slice_width=100
+        ).toPandas()
     )
-    assert np.allclose(got["r"], exp["r"], rtol=0, atol=0)
+    assert np.allclose(got["roll_mean"], exp["r"], rtol=0, atol=0)
 
 
 def test_fused_bounded_sliced_equals_unsliced(spark, events):
@@ -193,12 +166,14 @@ def test_halo_assembly_many_slices_linear(spark):
     ).repartition(8)
     t0 = time.time()
     got = _sorted(
-        SW.rolling_sliced(df, "v", "r", 8, kernel="mean", slice_width=2).toPandas()
+        SW.fused_bounded_sliced(
+            df.withColumn("phash", F.lit(0)), "v", 8, GAP, slice_width=2
+        ).toPandas()
     )
     elapsed = time.time() - t0
     exp = _sorted(W.rolling_mean(df, "v", "r", 8).toPandas())
     assert len(got) == n
-    assert np.allclose(got["r"], exp["r"], rtol=0, atol=0)
+    assert np.allclose(got["roll_mean"], exp["r"], rtol=0, atol=0)
     assert elapsed < 120, f"halo assembly over 1500 slices took {elapsed:.0f}s"
 
 
