@@ -17,6 +17,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
+from lbf_spark.util import local_frame
+
 
 def histogram2d(
     df: DataFrame,
@@ -199,8 +201,8 @@ def mixture_sample(
     whole group. The quota map broadcasts (mixtures are tiny);
     skew-bounded by the largest stratum like
     ``stratified_sample_exact``."""
-    spark = df.sparkSession
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        df.sparkSession,
         [(k, int(v)) for k, v in quotas.items()],
         T.StructType(
             [
@@ -441,8 +443,8 @@ def token_budget_sample(
 
     One hash exchange on ``by`` (window partition); the budget map
     broadcasts. Skew bound = largest stratum, like mixture_sample."""
-    spark = df.sparkSession
-    bdf = spark.createDataFrame(
+    bdf = local_frame(
+        df.sparkSession,
         [(k, int(v)) for k, v in budgets.items()],
         T.StructType(
             [

@@ -25,6 +25,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from lbf_spark.util import local_frame
+
 
 def _mg_update(counters: dict, batch_counts: dict, k: int) -> None:
     """Fold exact batch counts into an MG summary with ≤ k counters.
@@ -124,8 +126,8 @@ def heavy_hitter_violations(
     if sketch is None:
         sketch, n = heavy_hitters_mg(df, col, k=k)
     err = n / (k + 1)
-    sk = spark.createDataFrame(
-        [(i, int(e)) for i, e in sketch], "item string, est long"
+    sk = local_frame(
+        spark, [(i, int(e)) for i, e in sketch], "item string, est long"
     )
     exact = (
         df.select(F.col(col).cast("string").alias("item"))

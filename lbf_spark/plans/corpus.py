@@ -8,8 +8,10 @@ pytest-gated):
    word length, symbol ratio, alphabetic fraction;
 2. **repetition gate** (`text.ngram_repetition`) — drop documents whose
    duplicate-trigram fraction exceeds a threshold;
-3. **exact dedup** (`dedup.exact_dedup`) — one keeper (min id) per
-   md5(text) group;
+3. **exact dedup** — one keeper (min id) per md5(text) group, the
+   `dedup.exact_dedup` rule as a window (``min(id) over (partition by
+   md5(text))``, kept where ``id`` equals it), so the repetition
+   gate's frame has one consumer and its explode runs once;
 4. **optional near-dup removal** (`dedup.dup_clusters` over MinHash-LSH
    pairs) — one keeper per connected near-dup cluster;
 5. **mixture sampling** (`distributions.mixture_sample`) — exact
@@ -17,6 +19,8 @@ pytest-gated):
 
 Every stage is lazily composed — one optimized plan end-to-end unless
 near-dup (iterative) is enabled, which materializes pair clusters.
+The quota table of step 5 is a LocalRelation (``util.local_frame``),
+so the chain starts no Python worker.
 Stage survivor counts are a separate, optional pass: ``stage_counts``
 persists each stage frame so the chain executes once incrementally
 (never once per stage) and unpersists afterwards.
@@ -24,9 +28,10 @@ persists each stage frame so the chain executes once incrementally
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from lbf_spark.operators import dedup, distributions as D, text
+from lbf_spark.util import local_frame
 
 
 def curate_corpus(
@@ -94,10 +99,15 @@ def curate_corpus(
         s2 = s2.join(keep_lm, id_col, "left_semi")
         stages.append(("lm_gate", s2))
 
-    keepers = dedup.exact_dedup(s2, id_col, text_col).select(
-        F.col("keeper_id").alias(id_col)
+    # exact dedup as a window over md5(text), not a groupBy joined back
+    # to s2: s2 then has ONE consumer, so the gates, the trigram explode
+    # and its aggregates run once (a join back planned them twice)
+    keeper = F.min(id_col).over(Window.partitionBy(F.md5(F.col(text_col))))
+    s3 = (
+        s2.withColumn("__keeper", keeper)
+        .filter(F.col(id_col) == F.col("__keeper"))
+        .drop("__keeper")
     )
-    s3 = s2.join(keepers, id_col, "left_semi")
     stages.append(("exact_dedup", s3))
 
     if near_dup:
@@ -169,8 +179,7 @@ def stage_counts(stages: list[tuple[str, DataFrame]]) -> DataFrame:
     finally:
         for df in frames:
             df.unpersist()
-    spark = frames[0].sparkSession
-    return spark.createDataFrame(rows, "stage string, n_docs long")
+    return local_frame(frames[0].sparkSession, rows, "stage string, n_docs long")
 
 
 def curate_pairs(

@@ -4953,6 +4953,7 @@ def q118(spark, sf_dir):
 
     from lbf_spark.sources import table as TBL
     from lbf_spark.streaming.stream_features import cdc_batch_apply
+    from lbf_spark.util import local_frame
 
     ev = _events(spark, sf_dir).select(
         F.col("user_id").cast("string").alias("entity"),
@@ -5031,11 +5032,7 @@ def q118(spark, sf_dir):
         idem_rows.append(
             ("snapshot_advanced", str(head2["snapshot_id"]), 1.0)
         )
-    idem = spark.createDataFrame(
-        idem_rows, "family string, key string, err double"
-    ) if idem_rows else spark.createDataFrame(
-        [], "family string, key string, err double"
-    )
+    idem = local_frame(spark, idem_rows, "family string, key string, err double")
 
     # relational last-batch-wins twin (delivery order, then ts desc)
     tagged = (
@@ -7061,18 +7058,19 @@ def q153(spark, sf_dir):
         train_bpe_reference,
         word_freqs,
     )
+    from lbf_spark.util import local_frame
 
     words = word_freqs(t(spark, sf_dir, "documents"))
     merges, syms = train_bpe(words, n_merges=24)
     wf = [(r["word"], r["freq"]) for r in words.collect()]
     ref_merges = train_bpe_reference(wf, n_merges=24)
     # violations family 1: merge sequence divergence at any rank
-    eng = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(merges)] or [],
+    eng = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, a string, b string",
     )
-    ref = spark.createDataFrame(
-        [(i, a, b) for i, (a, b) in enumerate(ref_merges)] or [],
+    ref = local_frame(
+        spark, [(i, a, b) for i, (a, b) in enumerate(ref_merges)],
         "rank int, a string, b string",
     )
     seq_v = (
@@ -7105,8 +7103,8 @@ def q153(spark, sf_dir):
             out = nxt
         return out
 
-    twin = spark.createDataFrame(
-        [(w, replay(w)) for w, _f in wf], "word string, ref_syms array<string>"
+    twin = local_frame(
+        spark, [(w, replay(w)) for w, _f in wf], "word string, ref_syms array<string>"
     )
     word_v = (
         syms.join(twin, "word", "full")
@@ -9387,6 +9385,7 @@ def q188(spark, sf_dir):
     inside a batch proves nothing and raises its own violation.
     Oracle = empty set."""
     from lbf_spark.streaming.stream_features import dedup_ingest_batch
+    from lbf_spark.util import local_frame
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
     store = _table_tmp(sf_dir, "q188")
@@ -9419,9 +9418,7 @@ def q188(spark, sf_dir):
         ("no_internal_drops", 1.0 if dropped_internal == 0 else None),
     ]
     g_rows = [(fam, None, err) for fam, err in guards if err is not None]
-    g_df = spark.createDataFrame(
-        g_rows, "family string, key string, err double"
-    )
+    g_df = local_frame(spark, g_rows, "family string, key string, err double")
     return v_pairs.unionByName(g_df)
 
 

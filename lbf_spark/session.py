@@ -60,8 +60,9 @@ def get_spark(
     (``--master``, ``--conf``, ``--driver-memory``, spark-defaults)
     keeps the launcher's value, and this function's settings, the
     arguments and ``extra_conf`` included, fill in only the keys it
-    left unset. From plain Python nothing is set yet, so all of them
-    apply.
+    left unset, except ``spark.driver.memory``, which the running
+    driver JVM can no longer take. From plain Python nothing is set
+    yet, so all of them apply.
 
     Static confs (the codegen cache size, the driver memory) only take
     effect when this call creates the JVM: an already running
@@ -134,6 +135,11 @@ def get_spark(
         **(extra_conf or {}),
     }
     launcher = _launcher_keys()
+    if launcher:
+        # spark-submit already started the driver JVM with its heap, so
+        # a filled-in driver memory could not apply and would only make
+        # the reported conf overstate the heap
+        del conf["spark.driver.memory"]
     builder = SparkSession.builder
     for k, v in conf.items():
         if k not in launcher:

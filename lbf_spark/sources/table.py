@@ -28,6 +28,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from lbf_spark.util import local_frame
+
 DAY = 86_400
 
 
@@ -47,6 +49,23 @@ def _with_partition_cols(df: DataFrame, n_buckets: int, ts_unit_day: int) -> Dat
     return df.withColumn(
         "entity_bucket", F.pmod(F.xxhash64("entity"), F.lit(n_buckets)).cast("int")
     ).withColumn("ts_day", F.floor(F.col("ts") / F.lit(ts_unit_day)).cast("long"))
+
+
+def _scan_schema(schema_json: str):
+    """A manifest's table schema plus the hive partition columns, typed
+    as every scan returns them. The empty-table branch and the reader of
+    a single-schema chain both take it, so a downstream select of
+    ``entity_bucket``/``ts_day`` works whether or not files remain."""
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    schema = StructType.fromJson(json.loads(schema_json))
+    return StructType(
+        schema.fields
+        + [
+            StructField("entity_bucket", IntegerType(), True),
+            StructField("ts_day", LongType(), True),
+        ]
+    )
 
 
 def _parse_spec(spec: dict) -> tuple[int, int]:
@@ -712,7 +731,7 @@ def snapshot_diff(
 
     def read_side(files: set) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], schema)
         df = (
             spark.read.option("basePath", data_dir)
             .option("mergeSchema", "true")
@@ -1020,30 +1039,20 @@ def scan(
             snaps, snapshot_id, ts_min, ts_max,
         )
         if not files:  # everything merged away: empty frame, live schema
-            from pyspark.sql.types import (
-                IntegerType, LongType, StructField, StructType,
-            )
-
             upto = [
                 s for s in snaps
                 if snapshot_id is None or s["snapshot_id"] <= snapshot_id
             ]
-            schema = StructType.fromJson(json.loads(upto[-1]["schema"]))
-            # every non-empty scan carries the hive partition columns —
-            # the empty branch must match or downstream selects of
-            # entity_bucket/ts_day fail only when the table is empty
-            schema = StructType(
-                schema.fields
-                + [
-                    StructField("entity_bucket", IntegerType(), True),
-                    StructField("ts_day", LongType(), True),
-                ]
-            )
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], _scan_schema(upto[-1]["schema"]))
         schemas = {s["schema"] for s in snaps}
         reader = spark.read.option("basePath", data_dir)
         if len(schemas) > 1:
             reader = reader.option("mergeSchema", "true")
+        else:
+            # one schema across the chain: hand the reader the manifest's
+            # copy, so building the scan reads no parquet footer (Spark
+            # infers a schema with a job, even for one file)
+            reader = reader.schema(_scan_schema(next(iter(schemas))))
         df = reader.parquet(*[fsio.join(data_dir, f) for f in files])
         if len(schemas) > 1:
             # deterministic column order: newest snapshot's schema
@@ -1069,16 +1078,16 @@ def scan(
         else {(int(n_buckets), int(ts_unit_day))}
     )
     if entities:
-        hashes = (
-            spark.createDataFrame([(e,) for e in entities], "entity string")
-            .select(F.xxhash64("entity").alias("h"))
-            .toPandas()["h"]
-            .tolist()
-        )
-        bucket_vals = sorted(
-            {int(h) % nb for h in hashes for (nb, _u) in gens}
-        )
-        df = df.filter(F.col("entity_bucket").isin(bucket_vals)).filter(
+        # the write side's bucket expression over literals: Catalyst
+        # folds each to a constant, so the partition filter still prunes
+        # and building the scan runs no job
+        widths = sorted({nb for nb, _u in gens})
+        buckets = [
+            F.pmod(F.xxhash64(F.lit(e).cast("string")), F.lit(nb)).cast("int")
+            for e in entities
+            for nb in widths
+        ]
+        df = df.filter(F.col("entity_bucket").isin(buckets)).filter(
             F.col("entity").isin(entities)
         )
     if ts_min is not None:

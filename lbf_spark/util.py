@@ -108,6 +108,27 @@ def free_local_checkpoint(df: DataFrame) -> bool:
     return True
 
 
+def local_frame(spark, rows, schema) -> DataFrame:
+    """A small driver-built frame (``rows``: tuples in ``schema``'s
+    field order; ``schema``: a ``StructType`` or a DDL string) that
+    plans as a ``LocalRelation``: the rows travel as one Arrow table
+    inside the plan. ``spark.createDataFrame(<list>)`` plans as a Python
+    RDD instead, and every evaluation of it, empty or not, runs a job
+    of Python tasks (measured on Spark 4.1.2, local[4]: ~0.45 s and 4
+    Python tasks per collect, against 0.04 s here). Nulls, arrays, empty
+    ``rows`` and the exact schema, nullability included, round-trip."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow))
+
+
 def codegen_counters(spark) -> tuple[int, float]:
     """JVM-global generated-code counters: (classes compiled, compile
     ms) since the JVM started. Free to read (no job, no UI); take

@@ -12,6 +12,9 @@ One session factory: ``SparkSession.builder`` appears in
 ``jobs/`` gets the engine's defaults and, under spark-submit, the
 launcher's settings.
 
+Driver-built frames come from ``util.local_frame`` (a LocalRelation),
+never ``createDataFrame(<list>)`` (a Python RDD).
+
 And no public code that only tests reach: every public top-level name
 in ``lbf_spark`` must be referenced by production code or sit on
 ``REACH_ALLOWLIST`` with its reason."""
@@ -121,6 +124,50 @@ def test_one_session_factory():
         for path in sorted([*PKG.rglob("*.py"), *(ROOT / "jobs").rglob("*.py")])
         if path != PKG / "session.py"
         for line in session_builders(path.read_text())
+    ]
+    assert offenders == []
+
+
+def create_dataframe_sites(source: str) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every ``createDataFrame``
+    reference in ``source`` (``""`` at module level)."""
+    found = []
+
+    def visit(node, fn: str) -> None:
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, child.name)
+                continue
+            if isinstance(child, ast.Attribute) and child.attr == "createDataFrame":
+                found.append((child.lineno, fn))
+            visit(child, fn)
+
+    visit(ast.parse(source), "")
+    return sorted(found)
+
+
+def test_driver_frames_go_through_local_frame():
+    """A driver-built frame is ``util.local_frame``'s LocalRelation:
+    ``createDataFrame(<list>)`` plans as a Python RDD whose every
+    evaluation runs Python tasks. ``fixtures.py`` keeps its pandas
+    loaders, which plan as LocalRelations under Arrow."""
+    sample = "\n".join([
+        "def local_frame(spark, rows, schema):",
+        "    return spark.createDataFrame(rows)",
+        "def other(spark):",
+        "    return spark.createDataFrame([(1,)], 'a long')",
+        "x = spark.createDataFrame",
+    ])
+    assert create_dataframe_sites(sample) == [
+        (2, "local_frame"), (4, "other"), (5, ""),
+    ]
+    allowed = {(PKG / "util.py", "local_frame")}
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path != PKG / "fixtures.py"
+        for line, fn in create_dataframe_sites(path.read_text())
+        if (path, fn) not in allowed
     ]
     assert offenders == []
 

@@ -192,7 +192,8 @@ def test_spark_submit_pyfiles_job(tmp_path):
 @pytest.mark.slow
 def test_spark_submit_launcher_settings_win(tmp_path):
     """Under spark-submit the launcher's --master and --conf win over
-    get_spark's defaults, which still fill in every key it left unset."""
+    get_spark's defaults, which still fill in every key it left unset
+    but the driver memory: the running driver JVM cannot take it."""
     from lbf_spark import session
     from lbf_spark.packaging import build_pyfiles_zip
 
@@ -203,7 +204,7 @@ def test_spark_submit_launcher_settings_win(tmp_path):
         "conf = get_spark().sparkContext.getConf()\n"
         "print(json.dumps({k: conf.get(k) for k in (\n"
         "    'spark.master', 'spark.sql.shuffle.partitions',\n"
-        "    'spark.sql.codegen.cache.maxEntries')}))\n"
+        "    'spark.sql.codegen.cache.maxEntries', 'spark.driver.memory')}))\n"
     )
     out = subprocess.run(
         [
@@ -221,6 +222,7 @@ def test_spark_submit_launcher_settings_win(tmp_path):
         "spark.master": "local[2]",
         "spark.sql.shuffle.partitions": "3",
         "spark.sql.codegen.cache.maxEntries": str(session.CODEGEN_CACHE_ENTRIES),
+        "spark.driver.memory": None,
     }
 
 
@@ -254,6 +256,31 @@ def test_text_filters_are_pure_jvm(spark):
         plan = _explain_str(out)
         for python_node in ("InPandas", "EvalPython"):
             assert python_node not in plan, python_node
+
+
+def test_curation_gates_run_once_and_no_python_rdd(spark, tmp_path):
+    """q87's final executed plan evaluates the trigram explode once
+    (exact dedup is the repetition gate's only consumer) and holds no
+    Python RDD scan (the quota table is a LocalRelation)."""
+    from lbf_spark.queries import QUERIES
+
+    rng = np.random.default_rng(7)
+    vocab = [f"{w}word" for w in "abcdefghijklmnopqrstuvwxyz"]
+    texts = [" ".join(rng.choice(vocab, 30)) for _ in range(48)]
+    texts += texts[:8]  # exact duplicates under new ids
+    pd.DataFrame({
+        "doc_id": np.arange(len(texts), dtype="int64"),
+        "text": texts,
+        "source": [f"src{i % 4}" for i in range(len(texts))],
+    }).to_parquet(tmp_path / "documents.parquet")
+    df = QUERIES["q87_curation_pipeline"][0](spark, str(tmp_path))
+    assert df.collect()
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.executedPlan()  # the final plan, query stages inlined
+    plan = plan.toString()
+    assert plan.count("Generate explode") == 1, plan
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_hybrid_event_features_keeps_fused_exchange_for_cold_entities(

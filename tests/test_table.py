@@ -1079,3 +1079,39 @@ def test_write_table_failed_land_releases_layout_cache(spark, tmp_path, monkeypa
             df, str(tmp_path / "tbl"), mode="overwrite", layout_cols=["x", "y"]
         )
     assert len(jsc.getPersistentRDDs()) <= base
+
+
+def test_entity_scan_builds_without_a_job_and_prunes_buckets(spark, tmp_path):
+    """Building an entity-pruned scan runs no Spark job (the bucket
+    hashes fold in Catalyst and the reader takes the manifest's schema),
+    and the read still touches exactly the files of the entities'
+    bucket directories, with the same rows as a filtered full scan."""
+    path = str(tmp_path / "tblb")
+    ev_pd = fixtures.generate_events(n_rows=2000, n_entities=8)
+    TBL.write_table(fixtures.events_to_spark(spark, ev_pd), path,
+                    mode="overwrite", n_buckets=4, ts_unit_day=10_000)
+    ents = sorted(ev_pd.entity.unique())[:2]
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "entity_scan_build")
+    try:
+        pruned = TBL.scan(spark, path, entities=ents)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("entity_scan_build")) == []
+
+    keys = ["image_id", "entity", "ts", "entity_bucket"]
+    got = sorted(tuple(r[k] for k in keys) for r in pruned.collect())
+    want = TBL.scan(spark, path).filter(F.col("entity").isin(ents)).select(*keys)
+    assert got == sorted(map(tuple, want.collect()))
+    buckets = {r[-1] for r in got}
+    files = TBL.scan_files(spark, path)
+    in_buckets = [f for f in files
+                  if int(f.split("entity_bucket=")[1].split("/")[0]) in buckets]
+    # the scan node's own count (inputFiles() ignores partition filters)
+    plan = pruned._jdf.queryExecution().executedPlan()
+    leaves = plan.collectLeaves()
+    read = [leaves.apply(i).metrics().get("numFiles").get().value()
+            for i in range(leaves.size())
+            if leaves.apply(i).metrics().contains("numFiles")]
+    assert read == [len(in_buckets)] and 0 < len(in_buckets) < len(files)
