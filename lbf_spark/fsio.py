@@ -183,8 +183,7 @@ def move_file(spark, src: str, dst: str) -> None:
 
 
 def delete(spark, path: str, recursive: bool = False) -> bool:
-    """Delete a file or directory tree; False if it didn't exist."""
+    """Delete a file or directory tree; False if it didn't exist
+    (Hadoop's ``FileSystem.delete`` reports that itself)."""
     fs, p, _ = _fs_path(spark, path)
-    if not fs.exists(p):
-        return False
     return bool(fs.delete(p, recursive))

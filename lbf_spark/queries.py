@@ -3961,10 +3961,10 @@ def q101(spark, sf_dir):
 )
 def q102(spark, sf_dir):
     """Add-column schema evolution across snapshots
-    (sources/table.py:_check_schema_evolution + scan's mergeSchema
-    reconciliation): v1 snapshot lacks ``value_r``, the v2 append adds
-    it; scanning the table must NULL-fill v1 rows and carry v2 values,
-    with the union schema in the newest snapshot's column order. The
+    (sources/table.py:_check_schema_evolution + scan's read under the
+    head manifest schema): v1 snapshot lacks ``value_r``, the v2 append
+    adds it; scanning the table must NULL-fill v1 rows and carry v2
+    values, in the newest snapshot's column order. The
     oracle is the same union computed relationally."""
     from lbf_spark.sources import table as TBL
 

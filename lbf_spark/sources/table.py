@@ -24,7 +24,9 @@ catalog calls; every operator above this layer is unchanged.
 
 from __future__ import annotations
 
+import contextlib
 import json
+import time
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
@@ -51,20 +53,36 @@ def _with_partition_cols(df: DataFrame, n_buckets: int, ts_unit_day: int) -> Dat
     ).withColumn("ts_day", F.floor(F.col("ts") / F.lit(ts_unit_day)).cast("long"))
 
 
-def _scan_schema(schema_json: str):
-    """A manifest's table schema plus the hive partition columns, typed
-    as every scan returns them. The empty-table branch and the reader of
-    a single-schema chain both take it, so a downstream select of
-    ``entity_bucket``/``ts_day`` works whether or not files remain."""
+def _read_files(
+    spark, data_dir: str, files: list[str], schema_json: str
+) -> DataFrame:
+    """The one reader of table data files: exactly ``files`` (relative
+    to ``data_dir``), read under ``schema_json`` — the manifest schema
+    of the snapshot the files are visible at — plus the hive partition
+    columns. Building it reads no parquet footer, so it runs no Spark
+    job (a read handed more than 32 paths still runs Spark's parallel
+    file listing). Add-column-only evolution keeps every such file's
+    columns a same-typed subset of that schema, so the columns a file
+    predates read as NULL. The partition columns are typed
+    ``entity_bucket`` int and ``ts_day`` long whatever their values.
+    No files: an empty frame of the same schema."""
     from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
-    schema = StructType.fromJson(json.loads(schema_json))
-    return StructType(
-        schema.fields
+    from lbf_spark import fsio
+
+    schema = StructType(
+        StructType.fromJson(json.loads(schema_json)).fields
         + [
             StructField("entity_bucket", IntegerType(), True),
             StructField("ts_day", LongType(), True),
         ]
+    )
+    if not files:
+        return local_frame(spark, [], schema)
+    return (
+        spark.read.option("basePath", data_dir)
+        .schema(schema)
+        .parquet(*[fsio.join(data_dir, f) for f in files])
     )
 
 
@@ -233,18 +251,21 @@ def write_table(
         next_id = int(existing[-1].split("-")[1].split(".")[0]) + 1
     else:
         next_id = 1
+    schema_json = df.schema.json()
     snapshot = dict(extra or {})
     snapshot.update(
         {
             "snapshot_id": next_id,
             "parent": parent,
-            "schema": df.schema.json(),
+            "schema": schema_json,
             "partition_spec": {
                 "entity_bucket": f"bucket({n_buckets}, entity)",
                 "ts_day": f"floor(ts / {ts_unit_day})",
             },
             "added_files": added,
-            "file_stats": _file_ts_stats(spark, fsio.join(path, "data"), added),
+            "file_stats": _file_ts_stats(
+                spark, fsio.join(path, "data"), added, schema_json
+            ),
             "n_data_files": fsio.count_files_recursive(
                 spark, fsio.join(path, "data"), ".parquet"
             ),
@@ -278,24 +299,27 @@ def reset_write_profile() -> None:
     WRITE_PROFILE_TOTALS.clear()
 
 
-def _prof(key: str, dt: float) -> None:
-    LAST_WRITE_PROFILE[key] = round(dt, 4)
-    WRITE_PROFILE_TOTALS[key] = round(
-        WRITE_PROFILE_TOTALS.get(key, 0.0) + dt, 4
-    )
+@contextlib.contextmanager
+def _timed(key: str):
+    """Record the wall time of the enclosed block as write-profile
+    component ``key``, in both the last-write and the running totals."""
+    t0 = time.time()
+    try:
+        yield
+    finally:
+        dt = time.time() - t0
+        LAST_WRITE_PROFILE[key] = round(dt, 4)
+        WRITE_PROFILE_TOTALS[key] = round(
+            WRITE_PROFILE_TOTALS.get(key, 0.0) + dt, 4
+        )
 
 
 def _land_data_files(spark, pdf: DataFrame, path: str) -> list[str]:
-    import time as _time
-
-    t0 = _time.time()
-    try:
+    LAST_WRITE_PROFILE["mode"] = LAND_MODE
+    with _timed("land"):
         if LAND_MODE == "direct":
             return _land_data_files_direct(spark, pdf, path)
         return _land_data_files_staged(spark, pdf, path)
-    finally:
-        _prof("land", _time.time() - t0)
-        LAST_WRITE_PROFILE["mode"] = LAND_MODE
 
 
 def _land_data_files_direct(spark, pdf: DataFrame, path: str) -> list[str]:
@@ -363,48 +387,49 @@ def _land_data_files_staged(spark, pdf: DataFrame, path: str) -> list[str]:
 def _commit_or_cleanup(
     spark, manifest_path: str, snapshot: dict, path: str, added: list[str]
 ) -> None:
-    import time as _time
-
-    t0 = _time.time()
-    try:
-        _commit_or_cleanup_inner(spark, manifest_path, snapshot, path, added)
-    finally:
-        _prof("commit", _time.time() - t0)
-
-
-def _commit_or_cleanup_inner(
-    spark, manifest_path: str, snapshot: dict, path: str, added: list[str]
-) -> None:
     """Exclusive manifest commit; on losing the snapshot-id race,
     best-effort delete the data files this attempt already moved into
     ``data/`` so a retry starts clean, then raise ConcurrentWriteError."""
     from lbf_spark import fsio
 
-    try:  # optimistic concurrency: exactly one writer claims this id
-        fsio.write_text_exclusive(
-            spark, manifest_path, json.dumps(snapshot, indent=1)
-        )
-    except FileExistsError as e:
-        data_dir = fsio.join(path, "data")
-        for rel in added:
-            try:
-                fsio.delete(spark, fsio.join(data_dir, rel))
-            except Exception:
-                pass  # leftover becomes an orphan; remove_orphan_files reclaims
-        raise ConcurrentWriteError(str(e)) from e
+    with _timed("commit"):
+        try:  # optimistic concurrency: exactly one writer claims this id
+            fsio.write_text_exclusive(
+                spark, manifest_path, json.dumps(snapshot, indent=1)
+            )
+        except FileExistsError as e:
+            data_dir = fsio.join(path, "data")
+            for rel in added:
+                try:
+                    fsio.delete(spark, fsio.join(data_dir, rel))
+                except Exception:
+                    pass  # leftover becomes an orphan; remove_orphan_files reclaims
+            raise ConcurrentWriteError(str(e)) from e
 
 
 _HOT_STATS_K = 8  # per-file hot-entity entries kept in the manifest
 
 
-def _file_ts_stats(spark, data_dir: str, files: list[str]) -> dict:
-    import time as _time
-
-    t0 = _time.time()
-    try:
-        return _file_ts_stats_inner(spark, data_dir, files)
-    finally:
-        _prof("stats", _time.time() - t0)
+def _file_ts_stats(spark, data_dir: str, files: list[str], schema_json: str) -> dict:
+    """Per-added-file column stats — the Iceberg per-file stats that
+    make FILE skipping (not just partition pruning) work, plus row
+    counts and a top-K per-entity count sketch for skew planning.
+    Returns ``{relative_path: [ts_min, ts_max, n_rows, {entity: count}]}``
+    (older manifests hold 2-element ``[ts_min, ts_max]`` lists —
+    readers index, never unpack). The hot map holds the file's top-8
+    entities by row count: summed across a table's visible files these
+    are LOWER BOUNDS on per-entity totals (exact for any entity that
+    is top-8 in every file it touches — guaranteed for the dominant
+    entities skew planning cares about, since the layout buckets by
+    entity). ``schema_json`` is the schema the files were written
+    under (the committing snapshot's)."""
+    with _timed("stats"):
+        if not files:
+            return {}
+        fast = _file_ts_stats_local(data_dir, files)
+        if fast is not None:
+            return fast
+        return _file_ts_stats_spark(spark, data_dir, files, schema_json)
 
 
 #: driver-side stats fast path: total added bytes at or under this run
@@ -419,7 +444,7 @@ STATS_DRIVER_BYTES = 32 * 1024 * 1024
 def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
     """Bit-identical driver-side implementation of the per-file stats
     for SMALL LOCAL writes, or None to use the Spark read-back.
-    Matches ``_file_ts_stats_inner`` exactly: empty files are omitted,
+    Matches ``_file_ts_stats_spark`` exactly: empty files are omitted,
     null entities count toward n_rows/ts bounds but never rank, the
     hot map holds the top-8 entities by (count desc, str(entity) asc),
     keys are the string cast. Equality with the Spark job is pinned by
@@ -481,29 +506,14 @@ def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
     return out
 
 
-def _file_ts_stats_inner(spark, data_dir: str, files: list[str]) -> dict:
-    """Per-added-file column stats — the Iceberg per-file stats that
-    make FILE skipping (not just partition pruning) work, plus row
-    counts and a top-K per-entity count sketch for skew planning. One
-    metadata-scale Spark job over exactly the files this write created
-    (Iceberg collects these in the write tasks themselves; a read-back
-    is the parquet-shim equivalent). Returns
-    ``{relative_path: [ts_min, ts_max, n_rows, {entity: count}]}``
-    (older manifests hold 2-element ``[ts_min, ts_max]`` lists —
-    readers index, never unpack). The hot map holds the file's top-8
-    entities by row count: summed across a table's visible files these
-    are LOWER BOUNDS on per-entity totals (exact for any entity that
-    is top-8 in every file it touches — guaranteed for the dominant
-    entities skew planning cares about, since the layout buckets by
-    entity)."""
-    if not files:
-        return {}
-    fast = _file_ts_stats_local(data_dir, files)
-    if fast is not None:
-        return fast
-    base = spark.read.option("basePath", data_dir).parquet(
-        *[f"{data_dir}/{f}" for f in files]
-    )
+def _file_ts_stats_spark(
+    spark, data_dir: str, files: list[str], schema_json: str
+) -> dict:
+    """The reference implementation of ``_file_ts_stats``: one
+    metadata-scale Spark job over exactly the given files (Iceberg
+    collects these in the write tasks themselves; a read-back is the
+    parquet-shim equivalent)."""
+    base = _read_files(spark, data_dir, files, schema_json)
     per = base.groupBy(F.input_file_name().alias("__f"), "entity").agg(
         F.count(F.lit(1)).alias("n"),
         F.min("ts").alias("mn"),
@@ -580,17 +590,20 @@ def _replay_files(
 ) -> dict:
     """Replay the snapshot chain up to ``as_of`` (default: latest) —
     Iceberg's manifest-list reachability, one JSON per snapshot here.
+    The one walk of the chain every reader and maintenance op takes.
 
-    Returns ``{"visible": [...], "known": [...]}``: *visible* is the
-    live file set (added minus merge-removed, reset at each overwrite);
-    *known* is every file written since the last overwrite — a merge
-    keeps its replaced files ON DISK so older snapshots stay readable,
-    and ``write_table`` needs *known* (not *visible*) to tell which
-    on-disk files a fresh append actually created. Raises if ``as_of``
-    predates the last overwrite — those files left the tracked chain
-    (an overwrite is a logical reset; the physical files linger only
-    until ``remove_orphan_files``), so travel across it is
-    undefined."""
+    Returns ``{"visible", "known", "stats", "snapshot"}``: *visible* is
+    the live file set (added minus merge-removed, reset at each
+    overwrite); *known* is every file written since the last overwrite
+    — a merge keeps its replaced files ON DISK so older snapshots stay
+    readable, and ``write_table`` needs *known* (not *visible*) to tell
+    which on-disk files a fresh append actually created; *stats* is
+    every replayed manifest's ``file_stats`` merged by file; *snapshot*
+    is the ``as_of`` snapshot itself (None for an empty chain), whose
+    schema types reads of *visible*. Raises if ``as_of`` predates the
+    last overwrite — those files left the tracked chain (an overwrite
+    is a logical reset; the physical files linger only until
+    ``remove_orphan_files``), so travel across it is undefined."""
     if as_of is not None and any(
         s["mode"] == "overwrite" and s["snapshot_id"] > as_of for s in snaps
     ):
@@ -600,6 +613,8 @@ def _replay_files(
         )
     visible: list[str] = []
     known: list[str] = []
+    stats: dict = {}
+    snapshot = None
     for s in snaps:
         if as_of is not None and s["snapshot_id"] > as_of:
             break
@@ -617,14 +632,9 @@ def _replay_files(
         removed = set(s.get("removed_files", []))
         if removed:
             visible = [f for f in visible if f not in removed]
-    return {"visible": visible, "known": known}
-
-
-def _cumulative_files(
-    spark, path: str, snaps: list[dict], as_of: int | None = None
-) -> list[str]:
-    """The data files VISIBLE at snapshot ``as_of`` (default: latest)."""
-    return _replay_files(snaps, as_of=as_of)["visible"]
+        stats.update(s.get("file_stats") or {})
+        snapshot = s
+    return {"visible": visible, "known": known, "stats": stats, "snapshot": snapshot}
 
 
 def current_snapshot(path: str, spark: SparkSession | None = None) -> dict | None:
@@ -702,16 +712,15 @@ def snapshot_diff(
     Carried-over rows inside a copy-on-write rewrite cancel out; the
     shuffle is bounded by the CHURNED files, never table size — at
     100 TB a 1 % merge diffs 1 % of the data. Hive partition columns
-    are dropped (derived from the row); under add-only schema
-    evolution both sides are NULL-padded to the ``to_id`` schema, so
-    a column added in the window shows old rows as delete(without) +
-    insert(with) only if their files were rewritten. A window crossing
-    an OVERWRITE raises (via the snapshot replay): this shim deletes
-    overwritten files, so the pre-overwrite state is gone — real
-    Iceberg retains them until expiration and could diff across."""
+    are dropped (derived from the row); both sides are read under the
+    ``to_id`` snapshot's manifest schema, so a column added in the
+    window reads NULL for older files, and old rows show as
+    delete(without) + insert(with) only if their files were rewritten.
+    A window crossing an OVERWRITE raises (via the snapshot replay):
+    this shim deletes overwritten files, so the pre-overwrite state is
+    gone — real Iceberg retains them until expiration and could diff
+    across."""
     from lbf_spark import fsio
-
-    from pyspark.sql.types import StructType
 
     snaps = _read_snaps(spark, fsio.join(path, "metadata"))
     ids = {s["snapshot_id"] for s in snaps}
@@ -722,32 +731,19 @@ def snapshot_diff(
             raise ValueError(f"snapshot {sid} not found (have {sorted(ids)})")
     if from_id > to_id:
         raise ValueError(f"from_id {from_id} is newer than to_id {to_id}")
-    files_a = set(_cumulative_files(spark, path, snaps, as_of=from_id))
-    files_b = set(_cumulative_files(spark, path, snaps, as_of=to_id))
-    newest = [s for s in snaps if s["snapshot_id"] <= to_id][-1]
-    schema = StructType.fromJson(json.loads(newest["schema"]))
-    cols = [f.name for f in schema.fields]
+    files_a = set(_replay_files(snaps, as_of=from_id)["visible"])
+    at_to = _replay_files(snaps, as_of=to_id)
+    files_b = set(at_to["visible"])
     data_dir = fsio.join(path, "data")
 
     def read_side(files: set) -> DataFrame:
-        if not files:
-            return local_frame(spark, [], schema)
-        df = (
-            spark.read.option("basePath", data_dir)
-            .option("mergeSchema", "true")
-            .parquet(*[fsio.join(data_dir, f) for f in sorted(files)])
-        )
-        return df.select(
-            *[
-                F.col(f.name).cast(f.dataType)
-                if f.name in df.columns
-                else F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-            ]
-        )
+        return _read_files(
+            spark, data_dir, sorted(files), at_to["snapshot"]["schema"]
+        ).drop("entity_bucket", "ts_day")
 
     a = read_side(files_a - files_b)
     b = read_side(files_b - files_a)
+    cols = b.columns
     ins = b.exceptAll(a).select(F.lit("insert").alias("change_type"), *cols)
     dele = a.exceptAll(b).select(F.lit("delete").alias("change_type"), *cols)
     return ins.unionByName(dele)
@@ -794,12 +790,12 @@ def rollback(
         raise ValueError(
             f"rollback target {to_id} is the current head {head} — nothing to undo"
         )
-    target = _replay_files(snaps, as_of=to_id)["visible"]  # raises across overwrite
+    at_tgt = _replay_files(snaps, as_of=to_id)  # raises across overwrite
+    target, tgt_snap = at_tgt["visible"], at_tgt["snapshot"]
     current = _replay_files(snaps)["visible"]
     cur_set, tgt_set = set(current), set(target)
     re_added = [f for f in target if f not in cur_set]
     removed = [f for f in current if f not in tgt_set]
-    tgt_snap = next(s for s in snaps if s["snapshot_id"] == to_id)
     data_dir = fsio.join(path, "data")
     snapshot = dict(extra or {})
     snapshot.update(
@@ -811,7 +807,9 @@ def rollback(
             "added_files": re_added,
             # stats for re-added files are recomputed, not copied: the
             # source manifests may already be expired
-            "file_stats": _file_ts_stats(spark, data_dir, re_added),
+            "file_stats": _file_ts_stats(
+                spark, data_dir, re_added, tgt_snap["schema"]
+            ),
             "removed_files": removed,
             "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
             "mode": "rollback",
@@ -904,7 +902,10 @@ def merge_upsert(
     untouched files carry over by reference. Replaced files stay on
     disk so pre-merge snapshots remain time-travelable; the new
     snapshot's manifest records them in ``removed_files`` and the
-    rewritten+inserted files in ``added_files``.
+    rewritten+inserted files in ``added_files``. Both reads take the
+    head snapshot's manifest schema, so a file written before an
+    add-column evolution reads (and is rewritten) with the new column
+    NULL.
 
     Shape at 100 TB: the semi-join shuffles on the merge keys (both
     sides partial-pruned — AQE broadcasts the changelog when it fits);
@@ -918,9 +919,10 @@ def merge_upsert(
     snaps = _read_snaps(spark, meta_dir)
     if not snaps:
         raise ValueError("merge_upsert needs an existing table snapshot")
-    spec = snaps[-1]["partition_spec"]
+    head = snaps[-1]
+    spec = head["partition_spec"]
     n_buckets, ts_unit_day = _parse_spec(spec)
-    cur_schema = StructType.fromJson(json.loads(snaps[-1]["schema"]))
+    cur_schema = StructType.fromJson(json.loads(head["schema"]))
     data_cols = [f.name for f in cur_schema.fields]
     chg_cols = [c for c in changes.columns if c != delete_col]
     if sorted(chg_cols) != sorted(data_cols):
@@ -936,9 +938,7 @@ def merge_upsert(
     visible = _replay_files(snaps)["visible"]
     keyed_changes = changes.select(*keys).distinct()
     if visible:
-        cur = spark.read.option("basePath", data_dir).parquet(
-            *[fsio.join(data_dir, f) for f in visible]
-        )
+        cur = _read_files(spark, data_dir, visible, head["schema"])
         affected_abs = [
             r["__f"]
             for r in cur.withColumn("__f", F.input_file_name())
@@ -957,9 +957,7 @@ def merge_upsert(
         ).drop(delete_col)
     upserts = upserts.select(*data_cols)
     if affected:
-        aff_df = spark.read.option("basePath", data_dir).parquet(
-            *[fsio.join(data_dir, f) for f in affected]
-        )
+        aff_df = _read_files(spark, data_dir, affected, head["schema"])
         new_rows = aff_df.select(*data_cols).join(
             keyed_changes, keys, "left_anti"
         ).unionByName(upserts)
@@ -974,13 +972,13 @@ def merge_upsert(
     )
     new_files = _land_data_files(spark, pdf, path)
     snapshot = dict(extra or {})
-    snapshot["snapshot_id"] = snaps[-1]["snapshot_id"] + 1
+    snapshot["snapshot_id"] = head["snapshot_id"] + 1
     snapshot.update({
-        "parent": f"snap-{snaps[-1]['snapshot_id']:05d}.json",
-        "schema": snaps[-1]["schema"],
+        "parent": f"snap-{head['snapshot_id']:05d}.json",
+        "schema": head["schema"],
         "partition_spec": spec,
         "added_files": new_files,
-        "file_stats": _file_ts_stats(spark, data_dir, new_files),
+        "file_stats": _file_ts_stats(spark, data_dir, new_files, head["schema"]),
         "removed_files": affected,
         "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
         "mode": "merge",
@@ -996,8 +994,6 @@ def scan(
     entities: list[str] | None = None,
     ts_min: int | None = None,
     ts_max: int | None = None,
-    n_buckets: int = 16,
-    ts_unit_day: int = DAY,
     snapshot_id: int | None = None,
     tag: str | None = None,
 ) -> DataFrame:
@@ -1011,12 +1007,12 @@ def scan(
     to the most recent overwrite.
 
     The read is manifest-driven (the snapshot's visible file list, not
-    a directory listing) whenever manifests exist — after a merge the
-    replaced files are still on disk for time travel, so a raw
-    directory read would double-count their rows. Schema evolution is
-    reconciled per-snapshot: if the visible files span several schemas,
-    the parquet ``mergeSchema`` union applies and missing columns
-    NULL-fill, with columns ordered per the newest schema.
+    a directory listing) — after a merge the replaced files are still
+    on disk for time travel, so a raw directory read would double-count
+    their rows. The columns are that snapshot's manifest schema followed
+    by ``entity_bucket`` (int) and ``ts_day`` (long); files written
+    before an add-column evolution read the new columns as NULL. A path
+    with no snapshots raises.
 
     Time predicates prune at THREE levels: per-file min/max ``ts``
     stats from the manifests drop whole files before the reader is
@@ -1029,54 +1025,20 @@ def scan(
         if snapshot_id is not None:
             raise ValueError("pass snapshot_id or tag, not both")
         snapshot_id = resolve_tag(spark, path, tag)
-    data_dir = fsio.join(path, "data")
     snaps = _read_snaps(spark, fsio.join(path, "metadata"))
     if not snaps:
-        df = spark.read.parquet(data_dir)
-    else:
-        files = _stats_pruned_files(
-            _cumulative_files(spark, path, snaps, as_of=snapshot_id),
-            snaps, snapshot_id, ts_min, ts_max,
-        )
-        if not files:  # everything merged away: empty frame, live schema
-            upto = [
-                s for s in snaps
-                if snapshot_id is None or s["snapshot_id"] <= snapshot_id
-            ]
-            return local_frame(spark, [], _scan_schema(upto[-1]["schema"]))
-        schemas = {s["schema"] for s in snaps}
-        reader = spark.read.option("basePath", data_dir)
-        if len(schemas) > 1:
-            reader = reader.option("mergeSchema", "true")
-        else:
-            # one schema across the chain: hand the reader the manifest's
-            # copy, so building the scan reads no parquet footer (Spark
-            # infers a schema with a job, even for one file)
-            reader = reader.schema(_scan_schema(next(iter(schemas))))
-        df = reader.parquet(*[fsio.join(data_dir, f) for f in files])
-        if len(schemas) > 1:
-            # deterministic column order: newest snapshot's schema
-            # (the union superset under add-only evolution) + the
-            # hive partition columns
-            upto = [
-                s for s in snaps
-                if snapshot_id is None or s["snapshot_id"] <= snapshot_id
-            ]
-            newest = json.loads(upto[-1]["schema"])
-            ordered = [f["name"] for f in newest["fields"]]
-            part_cols = [c for c in df.columns if c not in ordered]
-            df = df.select(*[c for c in ordered if c in df.columns], *part_cols)
-    # partition pruning is SPEC-GENERATION aware: with manifests, the
-    # allowed bucket/day sets union over every spec the chain carried
+        raise ValueError(f"scan needs an existing table snapshot at {path}")
+    at = _replay_files(snaps, as_of=snapshot_id)
+    files = _stats_pruned_files(at["visible"], at["stats"], ts_min, ts_max)
+    df = _read_files(
+        spark, fsio.join(path, "data"), files, at["snapshot"]["schema"]
+    )
+    # partition pruning is SPEC-GENERATION aware: the allowed bucket/day
+    # sets union over every spec the chain carried
     # (evolve_partition_spec) — a conservative superset, so files from
     # any generation prune correctly under the spec they were written
-    # with; the caller's n_buckets/ts_unit_day are only the fallback
-    # for manifest-less directories
-    gens = (
-        _spec_generations(snaps, snapshot_id)
-        if snaps
-        else {(int(n_buckets), int(ts_unit_day))}
-    )
+    # with
+    gens = _spec_generations(snaps, snapshot_id)
     if entities:
         # the write side's bucket expression over literals: Catalyst
         # folds each to a constant, so the partition filter still prunes
@@ -1100,34 +1062,20 @@ def scan(
         df = df.filter(
             (F.col("ts_day") <= day_hi) & (F.col("ts") <= ts_max)
         )
-    # pin the hive partition-column types LAST (after the partition
-    # filters, so pruning still binds to the raw attributes): directory
-    # inference picks int vs bigint per value range, and the empty-table
-    # branch declares (int, long) — one stable scan schema either way
-    if "entity_bucket" in df.columns:
-        df = df.withColumn(
-            "entity_bucket", F.col("entity_bucket").cast("int")
-        ).withColumn("ts_day", F.col("ts_day").cast("long"))
     return df
 
 
 def _stats_pruned_files(
     files: list[str],
-    snaps: list[dict],
-    snapshot_id: int | None,
+    stats: dict,
     ts_min: int | None,
     ts_max: int | None,
 ) -> list[str]:
-    """Drop files whose manifest [ts_min, ts_max] stats are disjoint
+    """Drop files whose manifest [ts_min, ts_max] ``stats`` are disjoint
     from the query range. Files with no recorded stats (older
     manifests) are conservatively kept."""
     if ts_min is None and ts_max is None:
         return files
-    stats: dict = {}
-    for s in snaps:
-        if snapshot_id is not None and s["snapshot_id"] > snapshot_id:
-            break
-        stats.update(s.get("file_stats") or {})
     out = []
     for f in files:
         st = stats.get(f)
@@ -1156,10 +1104,8 @@ def scan_files(
     from lbf_spark import fsio
 
     snaps = _read_snaps(spark, fsio.join(path, "metadata"))
-    return _stats_pruned_files(
-        _cumulative_files(spark, path, snaps, as_of=snapshot_id),
-        snaps, snapshot_id, ts_min, ts_max,
-    )
+    at = _replay_files(snaps, as_of=snapshot_id)
+    return _stats_pruned_files(at["visible"], at["stats"], ts_min, ts_max)
 
 
 def hot_entity_counts(
@@ -1183,12 +1129,8 @@ def hot_entity_counts(
     snaps = _read_snaps(spark, fsio.join(path, "metadata"))
     if not snaps:
         return None
-    visible = _replay_files(snaps, as_of=snapshot_id)["visible"]
-    stats: dict = {}
-    for s in snaps:
-        if snapshot_id is not None and s["snapshot_id"] > snapshot_id:
-            break
-        stats.update(s.get("file_stats") or {})
+    at = _replay_files(snaps, as_of=snapshot_id)
+    visible, stats = at["visible"], at["stats"]
     total = 0
     per_entity: dict[str, int] = {}
     for f in visible:
@@ -1254,17 +1196,12 @@ def expire_snapshots(
     # orphan-removal requires quiescence.
     known = set(_replay_files(snaps)["known"])
     doomed = sorted(known - keep_files)
-    fs, _p, jvm = fsio._fs_path(spark, data_dir)
     for f in doomed:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{data_dir}/{f}"), False)
+        fsio.delete(spark, fsio.join(data_dir, f))
     # compact the oldest retained manifest into a reset point
     oldest = dict(retained[0])
-    merged_stats: dict = {}
-    for s in snaps:
-        if s["snapshot_id"] > oldest["snapshot_id"]:
-            break
-        merged_stats.update(s.get("file_stats") or {})
-    base_visible = _replay_files(snaps, as_of=oldest["snapshot_id"])["visible"]
+    at_oldest = _replay_files(snaps, as_of=oldest["snapshot_id"])
+    base_visible, merged_stats = at_oldest["visible"], at_oldest["stats"]
     oldest["mode"] = "overwrite"
     oldest["added_files"] = sorted(base_visible)
     oldest["file_stats"] = {
@@ -1296,12 +1233,7 @@ def expire_snapshots(
         json.dumps(oldest, indent=1),
     )
     for s in expired:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(
-                fsio.join(meta_dir, f"snap-{s['snapshot_id']:05d}.json")
-            ),
-            False,
-        )
+        fsio.delete(spark, fsio.join(meta_dir, f"snap-{s['snapshot_id']:05d}.json"))
     return {
         "n_expired_snapshots": len(expired),
         "n_deleted_files": len(doomed),
@@ -1328,9 +1260,8 @@ def remove_orphan_files(spark: SparkSession, path: str) -> dict:
         f["path"] for f in fsio.list_files_recursive(spark, data_dir, ".parquet")
     ]
     orphans = sorted(set(on_disk) - known)
-    fs, _p, jvm = fsio._fs_path(spark, data_dir)
     for f in orphans:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{data_dir}/{f}"), False)
+        fsio.delete(spark, fsio.join(data_dir, f))
     # crashed writers also leave .staging/<token> trees (parts that were
     # never moved into data/) — same debris class, same reclaim
     staging_root = fsio.join(path, ".staging")
@@ -1391,25 +1322,19 @@ def compact_table(
             total_bytes += g_bytes
     if not doomed:
         return {"n_rewritten_files": 0, "n_new_files": 0}
-    frag = spark.read.option("basePath", data_dir).parquet(
-        *[fsio.join(data_dir, f) for f in doomed]
-    )
+    head = snaps[-1]
+    frag = _read_files(spark, data_dir, doomed, head["schema"])
     n_out = max(1, -(-total_bytes // target_bytes))
-    data_cols = [c for c in frag.columns if c not in ("entity_bucket", "ts_day")]
     new_files = _land_data_files(
-        spark,
-        frag.repartition(n_out, "entity_bucket", "ts_day").select(
-            *data_cols, "entity_bucket", "ts_day"
-        ),
-        path,
+        spark, frag.repartition(n_out, "entity_bucket", "ts_day"), path
     )
     snapshot = {
-        "snapshot_id": snaps[-1]["snapshot_id"] + 1,
-        "parent": f"snap-{snaps[-1]['snapshot_id']:05d}.json",
-        "schema": snaps[-1]["schema"],
-        "partition_spec": snaps[-1]["partition_spec"],
+        "snapshot_id": head["snapshot_id"] + 1,
+        "parent": f"snap-{head['snapshot_id']:05d}.json",
+        "schema": head["schema"],
+        "partition_spec": head["partition_spec"],
         "added_files": new_files,
-        "file_stats": _file_ts_stats(spark, data_dir, new_files),
+        "file_stats": _file_ts_stats(spark, data_dir, new_files, head["schema"]),
         "removed_files": sorted(doomed),
         "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
         "mode": "merge",
@@ -1609,10 +1534,8 @@ def list_tags(spark: SparkSession, path: str) -> dict[str, int]:
 def delete_tag(spark: SparkSession, path: str, name: str) -> None:
     from lbf_spark import fsio
 
-    target = fsio.join(path, "metadata", f"ref-{name}.json")
-    if not fsio.exists(spark, target):
+    if not fsio.delete(spark, fsio.join(path, "metadata", f"ref-{name}.json")):
         raise ValueError(f"tag {name!r} does not exist")
-    fsio.delete(spark, target)
 
 
 def resolve_tag(spark: SparkSession, path: str, name: str) -> int:

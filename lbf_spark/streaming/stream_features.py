@@ -372,10 +372,7 @@ def incremental_feature_batch(
         )
 
     lb = refresh_lower_bound(batch_df, lookback=lookback, order="ts")
-    base = TBL.scan(
-        spark, raw_path, ts_min=lb,
-        n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-    ).select(*batch_df.columns)
+    base = TBL.scan(spark, raw_path, ts_min=lb).select(*batch_df.columns)
     guard_unique(base.unionByName(batch_df))
     refreshed = refresh_region_rows(
         base, batch_df, feature_fn, lookback=lookback, by="entity", order="ts"

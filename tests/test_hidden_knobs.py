@@ -15,6 +15,8 @@ launcher's settings.
 Driver-built frames come from ``util.local_frame`` (a LocalRelation),
 never ``createDataFrame(<list>)`` (a Python RDD).
 
+Table data files are read by one reader under the manifest's schema.
+
 And no public code that only tests reach: every public top-level name
 in ``lbf_spark`` must be referenced by production code or sit on
 ``REACH_ALLOWLIST`` with its reason."""
@@ -128,9 +130,9 @@ def test_one_session_factory():
     assert offenders == []
 
 
-def create_dataframe_sites(source: str) -> list[tuple[int, str]]:
-    """``(line, enclosing function)`` of every ``createDataFrame``
-    reference in ``source`` (``""`` at module level)."""
+def attribute_sites(source: str, attr: str) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every ``.<attr>`` reference in
+    ``source`` (``""`` at module level)."""
     found = []
 
     def visit(node, fn: str) -> None:
@@ -138,7 +140,7 @@ def create_dataframe_sites(source: str) -> list[tuple[int, str]]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, child.name)
                 continue
-            if isinstance(child, ast.Attribute) and child.attr == "createDataFrame":
+            if isinstance(child, ast.Attribute) and child.attr == attr:
                 found.append((child.lineno, fn))
             visit(child, fn)
 
@@ -158,7 +160,7 @@ def test_driver_frames_go_through_local_frame():
         "    return spark.createDataFrame([(1,)], 'a long')",
         "x = spark.createDataFrame",
     ])
-    assert create_dataframe_sites(sample) == [
+    assert attribute_sites(sample, "createDataFrame") == [
         (2, "local_frame"), (4, "other"), (5, ""),
     ]
     allowed = {(PKG / "util.py", "local_frame")}
@@ -166,10 +168,26 @@ def test_driver_frames_go_through_local_frame():
         f"{path.relative_to(PKG.parent)}:{line}"
         for path in sorted(PKG.rglob("*.py"))
         if path != PKG / "fixtures.py"
-        for line, fn in create_dataframe_sites(path.read_text())
+        for line, fn in attribute_sites(path.read_text(), "createDataFrame")
         if (path, fn) not in allowed
     ]
     assert offenders == []
+
+
+def test_table_data_read_through_one_reader():
+    """Table data files are read in one place, ``table._read_files``,
+    under a manifest schema: no other ``.read`` in ``sources/table.py``
+    and no ``mergeSchema`` (a footer-union job) anywhere in the
+    package."""
+    table = PKG / "sources" / "table.py"
+    assert [fn for _line, fn in attribute_sites(table.read_text(), "read")] == [
+        "_read_files"
+    ]
+    assert [
+        str(path.relative_to(PKG.parent))
+        for path in sorted(PKG.rglob("*.py"))
+        if "mergeSchema" in path.read_text()
+    ] == []
 
 
 #: Public names that no production code references, each kept on

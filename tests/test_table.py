@@ -85,13 +85,13 @@ def test_scan_prunes_partitions(spark, tiny_events, tmp_path):
     ev = fixtures.events_to_spark(spark, tiny_events)
     TBL.write_table(ev, path, mode="overwrite", ts_unit_day=10_000)
 
-    pruned = TBL.scan(spark, path, entities=["e0000"], ts_unit_day=10_000)
+    pruned = TBL.scan(spark, path, entities=["e0000"])
     plan = _explain(pruned)
     # bucket predicate must land in PartitionFilters (directory pruning)
     pf = plan.split("PartitionFilters")[1].splitlines()[0]
     assert "entity_bucket" in pf
     # correctness: same rows as a full-scan filter
-    full = TBL.scan(spark, path, ts_unit_day=10_000).filter(F.col("entity") == "e0000")
+    full = TBL.scan(spark, path).filter(F.col("entity") == "e0000")
     assert pruned.count() == full.count() == int((tiny_events.entity == "e0000").sum())
 
 
@@ -100,7 +100,7 @@ def test_scan_time_range_pruning(spark, tiny_events, tmp_path):
     ev = fixtures.events_to_spark(spark, tiny_events)
     TBL.write_table(ev, path, mode="overwrite", ts_unit_day=10_000)
     lo, hi = 15_000, 30_000
-    pruned = TBL.scan(spark, path, ts_min=lo, ts_max=hi, ts_unit_day=10_000)
+    pruned = TBL.scan(spark, path, ts_min=lo, ts_max=hi)
     plan = _explain(pruned)
     assert "ts_day" in plan.split("PartitionFilters")[1].splitlines()[0]
     exp = int(((tiny_events.ts >= lo) & (tiny_events.ts <= hi)).sum())
@@ -173,10 +173,31 @@ def test_merge_upsert_validates_schema_and_keys(spark, tiny_events, tmp_path):
         TBL.merge_upsert(spark, path, ev, keys=["nope"])
 
 
+def _build_jobs(spark, build):
+    """Run ``build()`` under a job group; return (its result, the ids of
+    the Spark jobs it ran)."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"build_{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_schema_evolution_add_column(spark, tiny_events, tmp_path):
     """v1 write, add-column append, scan reads both with NULL-fill;
-    time travel to v1 shows the v1 schema; drop/retype refused."""
+    time travel to v1 shows the v1 schema; drop/retype refused; a merge
+    rewriting only v1 files keeps the new column. Building the scan or
+    a diff over the two schemas runs no Spark job: both take the
+    manifest schema instead of reading parquet footers."""
+    import json
+
     import pytest as _pytest
+    from pyspark.sql.types import StructType
 
     path = str(tmp_path / "tbl_evo")
     ev = fixtures.events_to_spark(spark, tiny_events)
@@ -185,9 +206,20 @@ def test_schema_evolution_add_column(spark, tiny_events, tmp_path):
         "image_id", F.concat(F.lit("v2_"), F.col("image_id"))
     ).withColumn("quality", F.lit(0.5))
     TBL.write_table(ev2, path, mode="append", ts_unit_day=10_000)          # v2
+    # at most 32 paths: more would add Spark's parallel file-listing job
+    assert len(TBL.scan_files(spark, path)) <= 32
 
-    got = TBL.scan(spark, path)
-    assert "quality" in got.columns
+    got, jobs = _build_jobs(spark, lambda: TBL.scan(spark, path))
+    assert jobs == []
+    head = StructType.fromJson(json.loads(TBL.current_snapshot(path)["schema"]))
+    assert got.dtypes == [
+        (f.name, f.dataType.simpleString()) for f in head.fields
+    ] + [("entity_bucket", "int"), ("ts_day", "bigint")]
+    diff, jobs = _build_jobs(spark, lambda: TBL.snapshot_diff(spark, path, 1))
+    assert jobs == []
+    assert diff.filter(
+        (F.col("change_type") == "insert") & (F.col("quality") == 0.5)
+    ).count() == diff.count() == 100
     n0 = len(tiny_events)
     assert got.count() == n0 + 100
     assert got.filter(F.col("quality").isNull()).count() == n0            # NULL-fill
@@ -202,6 +234,24 @@ def test_schema_evolution_add_column(spark, tiny_events, tmp_path):
             ev.withColumn("phash", F.col("phash").cast("string")),
             path, mode="append", ts_unit_day=10_000,
         )
+
+    # a merge that rewrites only pre-evolution files reads them under
+    # the head schema: the rewritten rows take the new values and the
+    # untouched v1 rows keep reading quality as NULL
+    keys = [r["image_id"] for r in ev.orderBy("image_id").limit(5).collect()]
+    changes = ev.filter(F.col("image_id").isin(keys)).withColumn(
+        "w", F.col("w") * 2
+    ).withColumn("quality", F.lit(0.9))
+    TBL.merge_upsert(spark, path, changes, keys=["image_id"])
+    got = TBL.scan(spark, path)
+    assert got.count() == n0 + 100
+    def by_key(df):
+        return {r["image_id"]: (r["w"], r["quality"]) for r in df.collect()}
+
+    assert by_key(got.filter(F.col("image_id").isin(keys))) == by_key(changes)
+    assert got.filter(F.col("quality").isNull()).count() == n0 - len(keys)
+    v1 = TBL.scan(spark, path, snapshot_id=1)
+    assert "quality" not in v1.columns and v1.count() == n0
 
 
 def test_zorder_write_layout_prunes_files(spark, tiny_events, tmp_path):
@@ -282,9 +332,7 @@ def test_manifest_file_stats_skip_files(spark, tiny_events, tmp_path):
     pruned = TBL.scan_files(spark, path, ts_min=int(cut2))
     assert 0 < len(pruned) < len(all_files)
     # correctness unchanged vs a full-scan filter
-    got = TBL.scan(
-        spark, path, ts_min=int(cut2), ts_unit_day=10_000_000
-    ).count()
+    got = TBL.scan(spark, path, ts_min=int(cut2)).count()
     exp = int((tiny_events.ts >= cut2).sum())
     assert got == exp
 
@@ -1019,7 +1067,9 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
             # threshold 0 disables the fast path: the Spark job runs
             m.setattr(TBL, "STATS_DRIVER_BYTES", 0)
             assert TBL._file_ts_stats_local(data_dir, files) is None
-            via_spark = TBL._file_ts_stats_inner(spark, data_dir, files)
+            via_spark = TBL._file_ts_stats_spark(
+                spark, data_dir, files, snap["schema"]
+            )
         assert local == via_spark
         # the committed snapshot used one of the two — also identical
         assert snap["file_stats"] == via_spark
@@ -1091,14 +1141,8 @@ def test_entity_scan_builds_without_a_job_and_prunes_buckets(spark, tmp_path):
     TBL.write_table(fixtures.events_to_spark(spark, ev_pd), path,
                     mode="overwrite", n_buckets=4, ts_unit_day=10_000)
     ents = sorted(ev_pd.entity.unique())[:2]
-    sc = spark.sparkContext
-    sc.setLocalProperty("spark.jobGroup.id", "entity_scan_build")
-    try:
-        pruned = TBL.scan(spark, path, entities=ents)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup("entity_scan_build")) == []
+    pruned, jobs = _build_jobs(spark, lambda: TBL.scan(spark, path, entities=ents))
+    assert jobs == []
 
     keys = ["image_id", "entity", "ts", "entity_bucket"]
     got = sorted(tuple(r[k] for k in keys) for r in pruned.collect())
