@@ -110,7 +110,6 @@ def asof_join(
     tolerance: int | None = None,
     direction: str = "backward",
     select: list[str] | None = None,
-    strategy: str = "union",
 ) -> DataFrame:
     """As-of join: each anchor row gets the matching event row.
 
@@ -120,18 +119,18 @@ def asof_join(
     guard, SURVEY.md J2). Ties on ``on`` resolve to the last event
     (pd.merge_asof semantics).
 
-    ``strategy``:
-    * "union" (default, backward only) — 100 % JVM: union both sides,
-      one window pass carrying the last event struct forward
-      (``last(struct, ignorenulls)``), filter back to anchor rows.
-      Single shuffle+sort, whole-stage codegen, no Python.
-    * "cogroup" — Arrow-batched ``pd.merge_asof`` per entity group;
-      needed for forward/nearest directions.
+    The direction picks the plan:
+    * backward — 100 % JVM: union both sides, one window pass carrying
+      the last event struct forward (``last(struct, ignorenulls)``),
+      filter back to anchor rows. Single shuffle+sort, whole-stage
+      codegen, no Python.
+    * forward / nearest — Arrow-batched ``pd.merge_asof`` per entity
+      group (cogroup).
     """
     if direction not in _ASOF_DIRECTIONS:
         raise ValueError(f"direction must be one of {_ASOF_DIRECTIONS}")
     by = [by] if isinstance(by, str) else list(by)
-    if strategy == "union" and direction == "backward":
+    if direction == "backward":
         return _asof_join_union(events, anchors, on, anchor_on, by, tolerance, select)
     schema, ev_cols = _merged_schema(anchors, events, by, select)
     out_cols = [f.name for f in schema.fields]
@@ -300,9 +299,7 @@ def interval_join(
     by: list[str] | str = "entity",
     lower: int = 0,
     upper: int = 0,
-    broadcast_anchors: bool = True,
     how: str = "inner",
-    slice_width: int | None = None,
 ) -> DataFrame:
     """Events with ``anchor_ts + lower ≤ ts ≤ anchor_ts + upper`` per anchor.
 
@@ -316,14 +313,14 @@ def interval_join(
     Instead both sides get an equi key ``_slice = floor(t / W)``: each
     event is exploded into the few slices whose anchors it could match,
     anchors keep exactly one slice, and the join becomes a
-    BroadcastHashJoin (or shuffled hash join for huge anchor sets) with
-    the exact range predicate evaluated only within a bucket. W defaults
-    to the window width ⇒ ≤ 2 copies per event.
+    BroadcastHashJoin (the anchor side is broadcast) with the exact
+    range predicate evaluated only within a bucket. W is the window
+    width ⇒ ≤ 2 copies per event.
     """
     by = [by] if isinstance(by, str) else list(by)
     if upper < lower:
         raise ValueError("upper must be ≥ lower")
-    w = int(slice_width or max(1, upper - lower + 1))
+    w = int(max(1, upper - lower + 1))
     ev = events.withColumn(
         "_slice",
         F.explode(
@@ -334,7 +331,7 @@ def interval_join(
         ),
     )
     an = anchors.withColumn("_slice", F.floor(F.col(anchor_on) / F.lit(w)))
-    a = F.broadcast(an) if broadcast_anchors else an
+    a = F.broadcast(an)
     cond = a["_slice"] == ev["_slice"]
     for k in by:
         cond = cond & (ev[k] == a[k])
@@ -357,7 +354,6 @@ def pit_feature_matrix(
     on: str = "ts",
     label_on: str = "anchor_ts",
     tolerance: int | None = None,
-    strategy: str = "union",
 ) -> DataFrame:
     """Point-in-time training matrix: one backward as-of join per
     feature group, chained (the feature-store "PIT join" — each label
@@ -368,8 +364,8 @@ def pit_feature_matrix(
     interval per signal (one ``extract-coverage`` run per feature
     family, then a pandas merge in ``post_extraction_analysis``); here
     K groups are K chained ``asof_join`` passes over ONE accumulating
-    matrix — each pass is a single per-entity shuffle+window (union
-    strategy, all-JVM), so the whole matrix costs K shuffles of the
+    matrix — each pass is a single per-entity shuffle+window (the
+    backward union plan, all-JVM), so the whole matrix costs K shuffles of the
     label frame + one of each group, never a replay of the raw table.
 
     ``groups`` is a list of ``(events_df, select_cols)``; each events
@@ -389,7 +385,6 @@ def pit_feature_matrix(
             by=by,
             tolerance=tolerance,
             select=select,
-            strategy=strategy,
         )
     return out
 
@@ -405,7 +400,6 @@ def asof_topk(
     by: list[str] | str = "entity",
     anchor_id: str = "anchor_id",
     tiebreak: str = "event_id",
-    broadcast_anchors: bool = True,
 ) -> DataFrame:
     """LAG-STACK as-of join: the ``k`` most recent events at-or-before
     each anchor, bounded by ``lookback`` (the staleness window every
@@ -439,7 +433,6 @@ def asof_topk(
         by=by,
         lower=-int(lookback),
         upper=0,
-        broadcast_anchors=broadcast_anchors,
     )
     w = Window.partitionBy(anchor_id).orderBy(
         F.desc(on), F.asc(tiebreak)

@@ -52,27 +52,15 @@ class FeatureConfig:
     # null weights count as 1 (reference: missing tag ⇒ gc_coef = 1)
     weight_col: str | None = None
     # hot-entity mitigation: when set, entities whose row count exceeds
-    # hot_entity_threshold run their order-dependent window features
-    # through the halo-sliced variants (time slices of this width,
-    # operators/sliced_windows.py) while everything else keeps the
-    # fused single-exchange plan — identical results, but a skewed
-    # entity's window work spans span/width tasks instead of straggling
-    # in one. Leave None below ~10⁸ rows/entity; at 100-TB scale set it
-    # so one (entity, slice) holds ~10⁶-10⁷ rows.
+    # 2× the mean rows-per-shuffle-partition (a straggler by definition;
+    # one counts pass over the entity column) run their order-dependent
+    # window features through the halo-sliced variants (time slices of
+    # this width, operators/sliced_windows.py) while everything else
+    # keeps the fused single-exchange plan — identical results, but a
+    # skewed entity's window work spans span/width tasks instead of
+    # straggling in one. Leave None below ~10⁸ rows/entity; at 100-TB
+    # scale set it so one (entity, slice) holds ~10⁶-10⁷ rows.
     hot_slice_width: int | None = None
-    # row count above which an entity is 'hot'. None ⇒ auto: 2× the
-    # mean rows-per-shuffle-partition (a straggler by definition).
-    # 0 ⇒ every entity sliced (the pure-sliced plan).
-    hot_entity_threshold: int | None = None
-    # managed-table path of the events input, when there is one: hot
-    # entities then come from the manifests' per-file stats sketches
-    # (sources/table.py:hot_entity_counts — metadata-only) instead of a
-    # per-job counts pass over the events scan. Routing only — both
-    # branches produce identical values, so the sketch's lower-bound
-    # nature can never change results, only which plan a borderline
-    # entity takes. Falls back to the counts pass for non-table inputs
-    # or pre-extension manifests.
-    table_path: str | None = None
 
     @property
     def n_buckets(self) -> int:
@@ -200,48 +188,15 @@ def _sliced_window_stage(df: DataFrame, cfg: FeatureConfig) -> DataFrame:
     return df
 
 
-def _hot_entities(events: DataFrame, cfg: FeatureConfig) -> list:
-    """Entities whose row count exceeds the hot threshold (auto: 2× the
-    mean rows-per-shuffle-partition — a straggler by definition).
-    Capped at the 1024 hottest (isin-filter size bound).
-
-    Source, in preference order: (1) ``cfg.table_path`` manifests — the
-    per-file stats sketches already record exactly this (metadata-only,
-    no extra scan of the events table per job); (2) a counts pass over
-    the entity column only (column pruning reaches the scan). Routing
-    only — the hot/rest branches are value-identical, so the manifest
-    sketch's lower bounds can't change results."""
+def _hot_entities(events: DataFrame) -> list:
+    """Entities whose row count exceeds 2× the mean rows-per-shuffle-
+    partition (a straggler by definition), hottest first, capped at
+    1024 (isin-filter size bound). One counts pass over the entity
+    column only (column pruning reaches the scan)."""
     n_part = int(events.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    if cfg.table_path is not None:
-        from lbf_spark.sources.table import hot_entity_counts
-
-        meta = hot_entity_counts(events.sparkSession, cfg.table_path)
-        if meta is not None:
-            thr = cfg.hot_entity_threshold
-            if thr is None:
-                # auto threshold from the TABLE's total; when `events`
-                # is a filtered slice of the table this is conservative
-                # (higher threshold → fewer entities routed hot), which
-                # only affects routing, never values
-                thr = max(1, (2 * meta["total"]) // max(1, n_part))
-            hot = sorted(
-                ((n, e) for e, n in meta["entities"].items() if n > thr),
-                key=lambda t: (-t[0], t[1]),
-            )[:1024]
-            # the sketch stores keys as strings — convert back to the
-            # events column's native type so the isin() routing filter
-            # compares without implicit casts
-            etype = dict(events.dtypes).get("entity", "string")
-            if etype in ("tinyint", "smallint", "int", "bigint"):
-                return [int(e) for _n, e in hot]
-            if etype in ("float", "double"):
-                return [float(e) for _n, e in hot]
-            return [e for _n, e in hot]
     counts = events.groupBy("entity").agg(F.count(F.lit(1)).alias("n"))
-    thr = cfg.hot_entity_threshold
-    if thr is None:
-        total = counts.agg(F.sum("n").alias("t")).first()["t"] or 0
-        thr = max(1, (2 * total) // max(1, n_part))
+    total = counts.agg(F.sum("n").alias("t")).first()["t"] or 0
+    thr = max(1, (2 * total) // max(1, n_part))
     rows = (
         counts.filter(F.col("n") > thr)
         .orderBy(F.desc("n"), F.asc("entity"))
@@ -259,7 +214,7 @@ def event_features(events: DataFrame, cfg: FeatureConfig) -> DataFrame:
     Physical shape: decode only needs *parallelism* (row-local →
     round-robin to all cores, SMT-aware cap); the window stage is ONE
     exchange + sort (see _fused_windows). With ``hot_slice_width`` set,
-    entities above ``hot_entity_threshold`` route through the
+    the entities `_hot_entities` counts as stragglers route through the
     halo-sliced window variants; everything else keeps the fused plan;
     results are identical (property-tested).
 
@@ -272,9 +227,7 @@ def event_features(events: DataFrame, cfg: FeatureConfig) -> DataFrame:
     (run_pipeline materializes the stage to parquet right after)."""
     if not cfg.hot_slice_width:
         return _fused_windows(_decode_slim(events, cfg), cfg)
-    if cfg.hot_entity_threshold == 0:  # pure-sliced plan (every entity)
-        return _sliced_window_stage(_decode_slim(events, cfg), cfg)
-    hot = _hot_entities(events, cfg)
+    hot = _hot_entities(events)
     if not hot:
         return _fused_windows(_decode_slim(events, cfg), cfg)
     from pyspark import StorageLevel

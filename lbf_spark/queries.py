@@ -1550,9 +1550,7 @@ def q45(spark, sf_dir):
     evs = ev.select(
         F.col("user_id").alias("entity"), F.col("ts_us").alias("ts"), "event_id"
     )
-    out = asof_join(
-        evs, anchors, select=["event_id"], direction="forward", strategy="cogroup"
-    )
+    out = asof_join(evs, anchors, select=["event_id"], direction="forward")
     return out.select("anchor_id", F.col("event_id").alias("matched_id"))
 
 
@@ -1581,9 +1579,7 @@ def q46(spark, sf_dir):
     evs = ev.select(
         F.col("user_id").alias("entity"), F.col("ts_us").alias("ts"), "event_id"
     )
-    out = asof_join(
-        evs, anchors, select=["event_id"], direction="nearest", strategy="cogroup"
-    )
+    out = asof_join(evs, anchors, select=["event_id"], direction="nearest")
     return out.select("anchor_id", F.col("event_id").alias("matched_id"))
 
 
@@ -9384,7 +9380,9 @@ def q188(spark, sf_dir):
     a run in which no doc was ever dropped against the corpus or
     inside a batch proves nothing and raises its own violation.
     Oracle = empty set."""
-    from lbf_spark.streaming.stream_features import dedup_ingest_batch
+    from lbf_spark.streaming.stream_features import (
+        dedup_ingest_batch, read_ingest_store,
+    )
     from lbf_spark.util import local_frame
 
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -9395,12 +9393,12 @@ def q188(spark, sf_dir):
         )
         for k in range(3)
     ]
-    corpus = spark.read.parquet(f"{store}/corpus/batch-*")
+    corpus, _ = read_ingest_store(spark, store)
     n_before = corpus.count()
     replay = dedup_ingest_batch(
         docs.filter(F.col("doc_id") % 3 == 1), 1, store, threshold=0.1
     )
-    n_after = spark.read.parquet(f"{store}/corpus/batch-*").count()
+    n_after = read_ingest_store(spark, store)[0].count()
 
     v_pairs = dedup.minhash_dedup_pairs(
         corpus, threshold=0.1, num_hashes=16, bands=8

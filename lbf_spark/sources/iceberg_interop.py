@@ -28,8 +28,8 @@ partition_spec               partition-specs[0]:
                                partition values are translated as
                                quotient × unit on export
 added_files + file_stats     one manifest entry per data file:
-  [ts_min, ts_max, n_rows,     record-count, lower/upper bounds for
-   {entity: n}]                the ts field; partition tuple parsed
+  [ts_min, ts_max, n_rows]     record-count, lower/upper bounds for
+                               the ts field; partition tuple parsed
                                from the Hive-style relative path
 mode append/overwrite/merge  snapshots[].summary.operation
                                append / overwrite / replace
@@ -185,11 +185,11 @@ def _data_file_entry(rel_path: str, stats, ts_unit: int, ts_field_id: int) -> di
             "ts_day": day_q * ts_unit if day_q is not None else None,
         },
     }
-    if stats and len(stats) >= 3:
+    if stats:
         entry["record_count"] = int(stats[2])
-    if stats and len(stats) >= 2 and stats[0] is not None:
-        entry["lower_bounds"] = {ts_field_id: int(stats[0])}
-        entry["upper_bounds"] = {ts_field_id: int(stats[1])}
+        if stats[0] is not None:
+            entry["lower_bounds"] = {ts_field_id: int(stats[0])}
+            entry["upper_bounds"] = {ts_field_id: int(stats[1])}
     return entry
 
 

@@ -273,7 +273,9 @@ def write_table(
         }
     )
     name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, added)
+    _commit_or_cleanup(
+        spark, fsio.join(meta_dir, name), snapshot, path, added, cur
+    )
     return snapshot
 
 
@@ -385,13 +387,22 @@ def _land_data_files_staged(spark, pdf: DataFrame, path: str) -> list[str]:
 
 
 def _commit_or_cleanup(
-    spark, manifest_path: str, snapshot: dict, path: str, added: list[str]
+    spark, manifest_path: str, snapshot: dict, path: str, added: list[str],
+    head: dict | None,
 ) -> None:
     """Exclusive manifest commit; on losing the snapshot-id race,
     best-effort delete the data files this attempt already moved into
-    ``data/`` so a retry starts clean, then raise ConcurrentWriteError."""
+    ``data/`` so a retry starts clean, then raise ConcurrentWriteError.
+
+    ``head`` is the snapshot this commit follows. Its ``batch_hwm``
+    (the highest streaming batch id already durable in the table) is
+    carried into ``snapshot`` unless the commit sets its own, so a
+    compaction, spec evolution, rollback or plain write between two
+    sink batches keeps the sink's replay check a one-manifest read."""
     from lbf_spark import fsio
 
+    if head is not None and "batch_hwm" in head:
+        snapshot.setdefault("batch_hwm", head["batch_hwm"])
     with _timed("commit"):
         try:  # optimistic concurrency: exactly one writer claims this id
             fsio.write_text_exclusive(
@@ -407,22 +418,13 @@ def _commit_or_cleanup(
             raise ConcurrentWriteError(str(e)) from e
 
 
-_HOT_STATS_K = 8  # per-file hot-entity entries kept in the manifest
-
-
 def _file_ts_stats(spark, data_dir: str, files: list[str], schema_json: str) -> dict:
     """Per-added-file column stats — the Iceberg per-file stats that
-    make FILE skipping (not just partition pruning) work, plus row
-    counts and a top-K per-entity count sketch for skew planning.
-    Returns ``{relative_path: [ts_min, ts_max, n_rows, {entity: count}]}``
-    (older manifests hold 2-element ``[ts_min, ts_max]`` lists —
-    readers index, never unpack). The hot map holds the file's top-8
-    entities by row count: summed across a table's visible files these
-    are LOWER BOUNDS on per-entity totals (exact for any entity that
-    is top-8 in every file it touches — guaranteed for the dominant
-    entities skew planning cares about, since the layout buckets by
-    entity). ``schema_json`` is the schema the files were written
-    under (the committing snapshot's)."""
+    make FILE skipping (not just partition pruning) work, plus the row
+    count ``iceberg_interop`` exports as ``record_count``.
+    Returns ``{relative_path: [ts_min, ts_max, n_rows]}``.
+    ``schema_json`` is the schema the files were written under (the
+    committing snapshot's)."""
     with _timed("stats"):
         if not files:
             return {}
@@ -444,13 +446,11 @@ STATS_DRIVER_BYTES = 32 * 1024 * 1024
 def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
     """Bit-identical driver-side implementation of the per-file stats
     for SMALL LOCAL writes, or None to use the Spark read-back.
-    Matches ``_file_ts_stats_spark`` exactly: empty files are omitted,
-    null entities count toward n_rows/ts bounds but never rank, the
-    hot map holds the top-8 entities by (count desc, str(entity) asc),
-    keys are the string cast. Equality with the Spark job is pinned by
-    a pytest over nulls/ties/>8-entity fixtures."""
+    Matches ``_file_ts_stats_spark`` exactly, empty files omitted;
+    equality with the Spark job is pinned by a pytest."""
     import os as _os
 
+    import pyarrow as _pa
     import pyarrow.compute as _pc
     import pyarrow.parquet as _pq
 
@@ -472,36 +472,19 @@ def _file_ts_stats_local(data_dir: str, files: list[str]) -> dict | None:
             schema = _pq.read_schema(p)
         except Exception:
             return None
-        if "ts" not in schema.names or "entity" not in schema.names:
+        if "ts" not in schema.names:
             return None
-        import pyarrow as _pa
-
         if not _pa.types.is_integer(schema.field("ts").type):
             return None  # Spark path raises on non-numeric ts; keep it
-        et = schema.field("entity").type
-        if not (_pa.types.is_integer(et) or _pa.types.is_string(et)
-                or _pa.types.is_large_string(et)):
-            return None
-        t = _pq.read_table(p, columns=["ts", "entity"])
+        t = _pq.read_table(p, columns=["ts"])
         if t.num_rows == 0:
             continue  # the Spark groupBy emits no row for empty files
         mm = _pc.min_max(t.column("ts"))
         mn, mx = mm["min"].as_py(), mm["max"].as_py()
-        vc = _pc.value_counts(t.column("entity").combine_chunks())
-        entries = [
-            (-c, str(v), c)
-            for v, c in zip(
-                vc.field("values").to_pylist(), vc.field("counts").to_pylist()
-            )
-            if v is not None
-        ]
-        entries.sort()
-        hot = {e[1]: e[2] for e in entries[:_HOT_STATS_K]}
         out[rel] = [
             int(mn) if mn is not None else None,
             int(mx) if mx is not None else None,
             int(t.num_rows),
-            hot,
         ]
     return out
 
@@ -513,42 +496,13 @@ def _file_ts_stats_spark(
     metadata-scale Spark job over exactly the given files (Iceberg
     collects these in the write tasks themselves; a read-back is the
     parquet-shim equivalent)."""
-    base = _read_files(spark, data_dir, files, schema_json)
-    per = base.groupBy(F.input_file_name().alias("__f"), "entity").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("ts").alias("mn"),
-        F.max("ts").alias("mx"),
-    )
-    # top-K per file in the SAME aggregation (array_sort + slice) — no
-    # extra window stage. The collect_list buffer is bounded by
-    # entities-per-file ≤ rows-per-file (layout buckets by entity, so
-    # production files hold one bucket's entity subset); at ~1-5M rows
-    # per well-sized file that is a few MB of (n, entity) structs.
-    ranked = F.slice(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("entity").isNotNull(),
-                    F.struct(
-                        (-F.col("n")).alias("negn"),
-                        F.col("entity").cast("string").alias("entity"),
-                        F.col("n").alias("n"),
-                    ),
-                )
-            )
-        ),
-        1,
-        _HOT_STATS_K,
-    )
     rows = (
-        per.groupBy("__f")
+        _read_files(spark, data_dir, files, schema_json)
+        .groupBy(F.input_file_name().alias("__f"))
         .agg(
-            F.min("mn").alias("mn"),
-            F.max("mx").alias("mx"),
-            F.sum("n").alias("n_rows"),
-            F.map_from_entries(
-                F.transform(ranked, lambda x: F.struct(x["entity"], x["n"]))
-            ).alias("hot"),
+            F.min("ts").alias("mn"),
+            F.max("ts").alias("mx"),
+            F.count(F.lit(1)).alias("n_rows"),
         )
         .collect()
     )
@@ -557,7 +511,7 @@ def _file_ts_stats_spark(
         rel = r["__f"][r["__f"].rindex("/data/") + 6:]
         mn = int(r["mn"]) if r["mn"] is not None else None
         mx = int(r["mx"]) if r["mx"] is not None else None
-        out[rel] = [mn, mx, int(r["n_rows"]), dict(r["hot"] or {})]
+        out[rel] = [mn, mx, int(r["n_rows"])]
     return out
 
 
@@ -772,10 +726,10 @@ def rollback(
     Changelog consumers: ``incremental_files`` refuses to cross a
     rollback (re-added files were already delivered);
     ``snapshot_diff`` is exact across it (symmetric file-set
-    difference). A CDC sink's ``batch_hwm`` is deliberately NOT
-    carried: rolled-back batches' effects are undone, so the sink must
-    re-deliver them — the legacy full-scan path re-derives the true
-    committed set."""
+    difference). A streaming sink's ``batch_hwm`` is carried forward:
+    the rollback undoes the rolled-back batches' data, not their
+    delivery, so replaying one of those batch ids stays a no-op; data
+    to restore is written again as a new batch or a plain write."""
     from lbf_spark import fsio
 
     meta_dir = fsio.join(path, "metadata")
@@ -819,7 +773,9 @@ def rollback(
     name = f"snap-{snapshot['snapshot_id']:05d}.json"
     # nothing was landed by this commit — on a lost race there are no
     # data files to clean up
-    _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, [])
+    _commit_or_cleanup(
+        spark, fsio.join(meta_dir, name), snapshot, path, [], snaps[-1]
+    )
     return snapshot
 
 
@@ -876,7 +832,9 @@ def evolve_partition_spec(
         "mode": "evolve",
     }
     name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, [])
+    _commit_or_cleanup(
+        spark, fsio.join(meta_dir, name), snapshot, path, [], snaps[-1]
+    )
     return snapshot
 
 
@@ -984,7 +942,9 @@ def merge_upsert(
         "mode": "merge",
     })
     name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, new_files)
+    _commit_or_cleanup(
+        spark, fsio.join(meta_dir, name), snapshot, path, new_files, head
+    )
     return snapshot
 
 
@@ -1071,9 +1031,9 @@ def _stats_pruned_files(
     ts_min: int | None,
     ts_max: int | None,
 ) -> list[str]:
-    """Drop files whose manifest [ts_min, ts_max] ``stats`` are disjoint
-    from the query range. Files with no recorded stats (older
-    manifests) are conservatively kept."""
+    """Drop files whose manifest ``[ts_min, ts_max, n_rows]`` stats are
+    disjoint from the query range. Files with no recorded stats (empty
+    files) or no non-null ts are conservatively kept."""
     if ts_min is None and ts_max is None:
         return files
     out = []
@@ -1082,7 +1042,7 @@ def _stats_pruned_files(
         if st is None or st[0] is None:
             out.append(f)
             continue
-        mn, mx = st[0], st[1]  # stats may carry [mn, mx] or [mn, mx, n, hot]
+        mn, mx = st[0], st[1]
         if (ts_max is not None and mn > ts_max) or (
             ts_min is not None and mx < ts_min
         ):
@@ -1106,41 +1066,6 @@ def scan_files(
     snaps = _read_snaps(spark, fsio.join(path, "metadata"))
     at = _replay_files(snaps, as_of=snapshot_id)
     return _stats_pruned_files(at["visible"], at["stats"], ts_min, ts_max)
-
-
-def hot_entity_counts(
-    spark: SparkSession, path: str, snapshot_id: int | None = None
-) -> dict[str, int] | None:
-    """Per-entity LOWER-BOUND row counts from the manifests' per-file
-    hot-entity sketches (``_file_ts_stats``), plus the table's total
-    row count — zero data IO, pure metadata. Returns
-    ``{"total": n, "entities": {entity: count}}``-shaped dict, or None
-    when any visible file predates the extended stats (then the caller
-    must fall back to a counts job; a partial answer would silently
-    under-route hot entities).
-
-    The bounds are exact for entities that are top-K in every file they
-    touch — guaranteed for the dominant entities skew planning cares
-    about, since the layout buckets rows by entity. Used by
-    ``plans.pipeline`` to pick halo-sliced routing WITHOUT the extra
-    per-job counts pass over the events scan."""
-    from lbf_spark import fsio
-
-    snaps = _read_snaps(spark, fsio.join(path, "metadata"))
-    if not snaps:
-        return None
-    at = _replay_files(snaps, as_of=snapshot_id)
-    visible, stats = at["visible"], at["stats"]
-    total = 0
-    per_entity: dict[str, int] = {}
-    for f in visible:
-        st = stats.get(f)
-        if st is None or len(st) < 4:
-            return None  # pre-extension manifest: no row counts recorded
-        total += st[2]
-        for e, n in (st[3] or {}).items():
-            per_entity[e] = per_entity.get(e, 0) + int(n)
-    return {"total": total, "entities": per_entity}
 
 
 def expire_snapshots(
@@ -1340,7 +1265,9 @@ def compact_table(
         "mode": "merge",
     }
     name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(spark, fsio.join(meta_dir, name), snapshot, path, new_files)
+    _commit_or_cleanup(
+        spark, fsio.join(meta_dir, name), snapshot, path, new_files, head
+    )
     return {"n_rewritten_files": len(doomed), "n_new_files": len(new_files)}
 
 

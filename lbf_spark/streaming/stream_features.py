@@ -122,30 +122,17 @@ def run_stream_to_memory(
     q.awaitTermination()
 
 
-def _batch_high_water(spark, path: str, prev: dict | None) -> int | None:
-    """Highest batch_id already durable in the table at ``path`` —
-    O(1) in snapshot count: since round 6 every batch commit carries
-    ``batch_hwm`` (max committed batch id so far) forward in its
-    manifest, so only the LATEST manifest is consulted. Tables written
-    by the pre-hwm sink (manifests tagged ``batch_id`` but no
-    ``batch_hwm``) fall back to one full manifest scan — once: the
-    next commit writes the hwm forward. Returns None for a table with
-    no batch-tagged snapshots (or no table)."""
-    from lbf_spark import fsio
-
-    if prev is None:
+def _batch_high_water(prev: dict | None) -> int | None:
+    """Highest batch_id already durable in a table whose latest
+    snapshot is ``prev`` — O(1) in snapshot count: every batch commit
+    writes ``batch_hwm`` (max committed batch id so far) into its
+    manifest and every other table commit (compaction, spec evolution,
+    rollback, plain writes) carries the head's forward, so only the
+    LATEST manifest is consulted. Returns None when that manifest has
+    no ``batch_hwm`` (no batch history) or there is no table."""
+    if prev is None or "batch_hwm" not in prev:
         return None
-    if "batch_hwm" in prev:
-        return int(prev["batch_hwm"])
-    # legacy/foreign table: one compatibility scan (upgrades on commit)
-    meta_dir = fsio.join(path, "metadata")
-    ids = [
-        json.loads(fsio.read_text(spark, fsio.join(meta_dir, n))).get("batch_id")
-        for n in fsio.list_names(spark, meta_dir)
-        if n.startswith("snap-") and n.endswith(".json")
-    ]
-    ids = [i for i in ids if i is not None]
-    return max(ids) if ids else None
+    return int(prev["batch_hwm"])
 
 
 def table_batch_commit(
@@ -169,16 +156,14 @@ def table_batch_commit(
     The replay check is O(1) in snapshot count: foreachBatch batch ids
     are strictly increasing within a checkpoint, so a ``batch_hwm``
     high-water mark carried in each manifest decides replay from the
-    latest snapshot alone (the pre-r6 implementation re-read EVERY
-    manifest per micro-batch — O(n²) driver FS reads over a stream's
-    lifetime)."""
+    latest snapshot alone (no per-batch walk over every manifest)."""
     from lbf_spark.sources import table as TBL
 
     if batch_df.isEmpty():
         return None
     spark = batch_df.sparkSession
     prev = TBL.current_snapshot(path, spark)
-    hwm = _batch_high_water(spark, path, prev)
+    hwm = _batch_high_water(prev)
     if hwm is not None and batch_id <= hwm:
         return None  # replayed batch: already durable (idempotence)
     return TBL.write_table(
@@ -230,7 +215,7 @@ def cdc_batch_apply(
         return None
     spark = batch_df.sparkSession
     prev = TBL.current_snapshot(path, spark)
-    hwm = _batch_high_water(spark, path, prev)
+    hwm = _batch_high_water(prev)
     if hwm is not None and batch_id <= hwm:
         return None  # replayed batch: already durable (idempotence)
     if tiebreak_cols:
@@ -343,7 +328,7 @@ def incremental_feature_batch(
     keys = list(keys) if keys is not None else ["entity", "ts"]
     spark = batch_df.sparkSession
     raw_prev = TBL.current_snapshot(raw_path, spark)
-    raw_hwm = _batch_high_water(spark, raw_path, raw_prev)
+    raw_hwm = _batch_high_water(raw_prev)
     if raw_hwm is not None and batch_id <= raw_hwm:
         return None  # fully committed: replay no-op
 
@@ -378,7 +363,7 @@ def incremental_feature_batch(
         base, batch_df, feature_fn, lookback=lookback, by="entity", order="ts"
     )
     feat_prev = TBL.current_snapshot(feat_path, spark)
-    feat_hwm = _batch_high_water(spark, feat_path, feat_prev)
+    feat_hwm = _batch_high_water(feat_prev)
     if feat_hwm is None or batch_id > feat_hwm:
         TBL.merge_upsert(
             spark, feat_path, refreshed, keys=keys,
@@ -524,23 +509,80 @@ def read_heavy_hitter_state(spark, state_path: str) -> dict:
     )
 
 
-def read_ingest_hwm(spark, store_dir: str) -> int:
-    """The ingest store's high-water mark: the last committed batch id,
-    -1 for a fresh store (no ``state.json`` yet). Any other failure
-    raises — a corrupt state read as "fresh" would re-ingest the next
-    batch as batch 0 against no corpus and overwrite ``batch-00000``."""
+def _read_ingest_state(spark, store_dir: str) -> dict:
+    """The ingest store's commit record ``state.json``: ``batch_hwm``
+    (the last committed batch id, -1 for a fresh store with no
+    ``state.json`` yet) and ``schemas``, the ``corpus``/``postings``
+    StructTypes the committed batch dirs are read under (empty for a
+    store committed before the schemas were recorded). Any other
+    failure raises — a corrupt state read as "fresh" would re-ingest
+    the next batch as batch 0 against no corpus and overwrite
+    ``batch-00000``."""
+    from pyspark.sql.types import StructType
+
     from lbf_spark import fsio
 
     state_file = fsio.join(store_dir, "state.json")
     if not fsio.exists(spark, state_file):
-        return -1
+        return {"batch_hwm": -1}
     text = fsio.read_text(spark, state_file)
     try:
-        return int(json.loads(text)["batch_hwm"])
+        state = json.loads(text)
+        return {
+            "batch_hwm": int(state["batch_hwm"]),
+            "schemas": {
+                kind: StructType.fromJson(json.loads(state[f"{kind}_schema"]))
+                for kind in ("corpus", "postings")
+                if f"{kind}_schema" in state
+            },
+        }
     except (ValueError, KeyError, TypeError) as e:
         raise ValueError(
             f"ingest store state {state_file} is unreadable: {text[:200]!r}"
         ) from e
+
+
+def read_ingest_hwm(spark, store_dir: str) -> int:
+    """The ingest store's high-water mark: the last committed batch id,
+    -1 for a fresh store."""
+    return _read_ingest_state(spark, store_dir)["batch_hwm"]
+
+
+def read_ingest_store(
+    spark, store_dir: str, state: dict | None = None
+) -> tuple[DataFrame, DataFrame] | None:
+    """The committed ``(corpus, postings)`` of an ingest store, or None
+    for a fresh one. Only the ``batch-<id>`` dirs with id ≤ the
+    ``state.json`` ``batch_hwm`` are read — a batch that crashed after
+    its parquet writes but before its commit stays invisible — under
+    the schemas ``state.json`` records, so building the frames reads no
+    footer and runs no Spark job (up to 32 batch dirs; more run Spark's
+    parallel file listing). A store committed before the schemas were
+    recorded has its schemas read from the committed dirs' footers
+    instead; its next commit records them. ``state`` is an already-read
+    commit record."""
+    import re
+
+    from lbf_spark import fsio
+
+    if state is None:
+        state = _read_ingest_state(spark, store_dir)
+    hwm = state["batch_hwm"]
+    if hwm < 0:
+        return None
+
+    def committed(kind: str) -> DataFrame:
+        d = fsio.join(store_dir, kind)
+        dirs = [
+            fsio.join(d, name)
+            for name in fsio.list_names(spark, d)
+            if (m := re.fullmatch(r"batch-(\d+)", name)) and int(m[1]) <= hwm
+        ]
+        schema = state["schemas"].get(kind)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
+
+    return committed("corpus"), committed("postings")
 
 
 def dedup_ingest_batch(
@@ -570,10 +612,12 @@ def dedup_ingest_batch(
     from-scratch full-corpus pair scan).
 
     Store layout: ``corpus/batch-<id>/`` and ``postings/batch-<id>/``
-    parquet dirs plus a ``state.json`` high-water mark written LAST
-    (atomic). Exactly-once under foreachBatch replay: a replayed
-    batch_id ≤ hwm is a no-op; a crash between the parquet writes and
-    the hwm replays into overwriting the SAME deterministic content.
+    parquet dirs plus a ``state.json`` commit record (high-water mark
+    and the two schemas) written LAST (atomic); ``read_ingest_store``
+    reads only what it commits. Exactly-once under foreachBatch replay:
+    a replayed batch_id ≤ hwm is a no-op; a crash between the parquet
+    writes and the commit leaves its dirs invisible, and the replay
+    overwrites them with the same content.
 
     Per-batch cost: O(batch + matched) — the corpus contributes only
     its (bounded) bucket-matched docs to verification; at 10^12 docs
@@ -583,7 +627,8 @@ def dedup_ingest_batch(
     from lbf_spark.operators import dedup
 
     spark = batch_df.sparkSession
-    hwm = read_ingest_hwm(spark, store_dir)
+    state = _read_ingest_state(spark, store_dir)
+    hwm = state["batch_hwm"]
     if batch_id <= hwm:
         return None  # fully committed: replay no-op
     if batch_df.isEmpty():
@@ -592,11 +637,10 @@ def dedup_ingest_batch(
 
     corpus_dir = fsio.join(store_dir, "corpus")
     post_dir = fsio.join(store_dir, "postings")
-    have_corpus = hwm >= 0
+    store = read_ingest_store(spark, store_dir, state)
     batch = batch_df.select(id_col, text_col)
-    if have_corpus:
-        corpus = spark.read.parquet(f"{corpus_dir}/batch-*")
-        index = spark.read.parquet(f"{post_dir}/batch-*")
+    if store is not None:
+        corpus, index = store
         out = dedup.lsh_incremental_pairs(
             corpus, index, batch, threshold=threshold, n=n,
             num_hashes=num_hashes, bands=bands,
@@ -666,6 +710,10 @@ def dedup_ingest_batch(
     dedup.release_caches()
     fsio.write_text_atomic(
         spark, fsio.join(store_dir, "state.json"),
-        json.dumps({"batch_hwm": batch_id}, sort_keys=True),
+        json.dumps({
+            "batch_hwm": batch_id,
+            "corpus_schema": sdf.schema.json(),
+            "postings_schema": surv_posts.schema.json(),
+        }, sort_keys=True),
     )
     return stats

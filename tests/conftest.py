@@ -47,3 +47,18 @@ def foreach_batch(stream, fn, checkpoint_dir: str):
         .start()
         .awaitTermination(120)
     )
+
+
+def build_jobs(spark, build):
+    """Run ``build()`` under a job group; return (its result, the ids of
+    the Spark jobs it ran)."""
+    import uuid
+
+    sc, group = spark.sparkContext, f"build_{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))

@@ -15,7 +15,8 @@ launcher's settings.
 Driver-built frames come from ``util.local_frame`` (a LocalRelation),
 never ``createDataFrame(<list>)`` (a Python RDD).
 
-Table data files are read by one reader under the manifest's schema.
+Table data files are read by one reader under the manifest's schema,
+and no read takes a glob path.
 
 And no public code that only tests reach: every public top-level name
 in ``lbf_spark`` must be referenced by production code or sit on
@@ -188,6 +189,59 @@ def test_table_data_read_through_one_reader():
         for path in sorted(PKG.rglob("*.py"))
         if "mergeSchema" in path.read_text()
     ] == []
+
+
+def _glob_literal(node) -> bool:
+    """The expression holds a string literal with ``*`` (plain, in an
+    f-string or in a concatenation)."""
+    return any(
+        isinstance(n, ast.Constant) and isinstance(n.value, str) and "*" in n.value
+        for n in ast.walk(node)
+    )
+
+
+def glob_path_reads(source: str) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every ``.parquet(...)`` or
+    ``.load(...)`` call in ``source`` that takes a glob path literal."""
+    globbed = {
+        node.func.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in ("parquet", "load")
+        and any(
+            _glob_literal(a)
+            for a in node.args + [k.value for k in node.keywords]
+        )
+    }
+    return sorted(
+        site
+        for attr in ("parquet", "load")
+        for site in attribute_sites(source, attr)
+        if site[0] in globbed
+    )
+
+
+def test_no_glob_path_reads():
+    """Reads name their files: a glob path makes Spark infer the schema
+    with a job, probe ``<glob>/_spark_metadata`` (a logged
+    ``FileNotFoundException``) and pick up whatever matches on disk,
+    committed or not."""
+    sample = "\n".join([
+        "def f(spark, d):",
+        "    spark.read.parquet(f'{d}/batch-*')",
+        "    spark.read.format('json').load(d + '/*.json')",
+        "    spark.read.parquet(f'{d}/batch-1', 'x')",
+        "    df.write.parquet(f'{d}/part')",
+        "g = spark.read.load(path='a/*')",
+    ])
+    assert glob_path_reads(sample) == [(2, "f"), (3, "f"), (6, "")]
+    offenders = [
+        f"{path.relative_to(PKG.parent)}:{line}"
+        for path in sorted(PKG.rglob("*.py"))
+        for line, _fn in glob_path_reads(path.read_text())
+    ]
+    assert offenders == []
 
 
 #: Public names that no production code references, each kept on

@@ -296,6 +296,28 @@ def test_hybrid_event_features_keeps_fused_exchange_for_cold_entities(
     assert "_slice" in plan             # sliced branch present
 
 
+def test_hot_entities_counts_pass_auto_threshold(spark):
+    """Hot entities come from one counts pass with the auto threshold
+    2·total // shuffle_partitions: 800 rows over 8 partitions → 200, so
+    only the 600-row entity is hot, not the 20 ten-row ones."""
+    rows = [("hot_e", 1000 + i) for i in range(600)]
+    rows += [
+        (f"bg_{j:02d}", 5000 + j * 100 + i) for j in range(20) for i in range(10)
+    ]
+    df = spark.createDataFrame(
+        pd.DataFrame(rows, columns=["entity", "ts"])
+    ).withColumn("v", F.lit(1.0))
+    # pinned here: an in-process CLI run in another test re-applies
+    # get_spark's default of 32 to the shared session
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try:
+        hot = P._hot_entities(df)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    assert hot == ["hot_e"]
+
+
 def test_tfidf_and_bm25_broadcast_small_sides(spark):
     """The vocab-df and corpus-scalar sides must broadcast — a
     SortMergeJoin against a |vocab|-row side would shuffle the whole

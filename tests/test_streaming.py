@@ -8,11 +8,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from lbf_spark.streaming.stream_features import (
+    dedup_ingest_batch,
+    read_ingest_hwm,
+    read_ingest_store,
     run_stream_to_memory,
     stream_session_stats,
     stream_tumbling_counts,
 )
-from tests.conftest import foreach_batch
+from tests.conftest import build_jobs, foreach_batch
 
 GAP = 1000
 WIN = 500
@@ -259,9 +262,7 @@ def test_stream_cdc_apply_latest_state(spark, tmp_path, tiny_events):
 def test_cdc_replay_check_is_o1_in_snapshots(spark, tmp_path, tiny_events,
                                              monkeypatch):
     """The replay check reads ONE manifest regardless of snapshot count
-    (batch_hwm high-water mark in the latest manifest), and a legacy
-    table whose manifests carry batch_id but no batch_hwm upgrades on
-    its first post-upgrade commit."""
+    (batch_hwm high-water mark in the latest manifest)."""
     from lbf_spark import fsio
     from lbf_spark.sources import table as TBL
     from lbf_spark.streaming.stream_features import cdc_batch_apply
@@ -286,7 +287,7 @@ def test_cdc_replay_check_is_o1_in_snapshots(spark, tmp_path, tiny_events,
 
     monkeypatch.setattr(fsio, "read_text", counting_read)
     # replayed batch: exactly ONE manifest read (current_snapshot), a
-    # no-op, with 8 snapshots on disk — the pre-r6 check read all 8
+    # no-op, with 8 snapshots on disk
     for replay_id in (0, 3, n_batches - 1):
         calls["n"] = 0
         assert cdc_batch_apply(
@@ -296,25 +297,42 @@ def test_cdc_replay_check_is_o1_in_snapshots(spark, tmp_path, tiny_events,
         assert calls["n"] == 1
     monkeypatch.undo()
 
-    # legacy table: manifests tagged batch_id but NO batch_hwm — the
-    # fallback scans once, decides replay correctly, and the next real
-    # commit writes the hwm forward
-    legacy = str(tmp_path / "legacy_tbl")
-    sdf = spark.createDataFrame(base.iloc[:10])
-    TBL.write_table(sdf, legacy, mode="overwrite", ts_unit_day=10_000,
-                    extra={"batch_id": 0})
-    TBL.write_table(spark.createDataFrame(base.iloc[10:20]), legacy,
-                    mode="append", ts_unit_day=10_000, extra={"batch_id": 1})
-    assert "batch_hwm" not in TBL.current_snapshot(legacy, spark)
-    assert cdc_batch_apply(  # replay decided via the compat scan
-        spark.createDataFrame(base.iloc[:5]), 1, legacy,
-        keys=["image_id"], ts_unit_day=10_000,
-    ) is None
-    assert cdc_batch_apply(
-        spark.createDataFrame(base.iloc[20:25]), 2, legacy,
-        keys=["image_id"], ts_unit_day=10_000,
-    ) is not None
-    assert TBL.current_snapshot(legacy, spark)["batch_hwm"] == 2
+
+def test_batch_replay_stays_noop_after_maintenance_commits(
+    spark, tmp_path, tiny_events
+):
+    """Commits that are not sink batches (compaction, spec evolution,
+    rollback, a plain append) carry the head's ``batch_hwm`` forward:
+    replaying an already durable batch afterwards is still a no-op and
+    the table's rows are unchanged."""
+    from lbf_spark.sources import table as TBL
+    from lbf_spark.streaming.stream_features import table_batch_commit
+
+    pdf = tiny_events[["entity", "ts", "image_id", "phash"]].iloc[:200]
+    tbl = str(tmp_path / "maint_tbl")
+    # interleaved halves land in the same partition dirs, so compaction
+    # has two files per dir to rewrite
+    batches = [spark.createDataFrame(pdf.iloc[0::2]),
+               spark.createDataFrame(pdf.iloc[1::2])]
+    for i, b in enumerate(batches):
+        assert table_batch_commit(b, i, tbl, ts_unit_day=10_000) is not None
+
+    def replay_is_noop():
+        n = TBL.scan(spark, tbl).count()
+        head = TBL.current_snapshot(tbl, spark)
+        assert head["batch_hwm"] == 1
+        assert table_batch_commit(batches[0], 0, tbl, ts_unit_day=10_000) is None
+        assert TBL.current_snapshot(tbl, spark)["snapshot_id"] == head["snapshot_id"]
+        assert TBL.scan(spark, tbl).count() == n
+
+    assert TBL.compact_table(spark, tbl)["n_rewritten_files"] > 0     # snap 3
+    replay_is_noop()
+    TBL.evolve_partition_spec(spark, tbl, n_buckets=8)                # snap 4
+    replay_is_noop()
+    TBL.rollback(spark, tbl, to_id=3)                                 # snap 5
+    replay_is_noop()
+    TBL.write_table(spark.createDataFrame(pdf.iloc[:10]), tbl)        # snap 6
+    replay_is_noop()
 
 
 def test_cdc_duplicate_newest_ts_enforced(spark, tmp_path, tiny_events):
@@ -417,3 +435,104 @@ def test_stream_attribution_join_matches_batch(spark, tmp_path):
         stream_attribution_pairs(
             t_static.withColumnRenamed("touch_ts", "conv_ts"), c_static, TOL
         )
+
+
+def test_ingest_replay_after_crash_reads_only_committed_batches(
+    spark, tmp_path, monkeypatch
+):
+    """A batch that crashes after its parquet writes but before its
+    ``state.json`` commit stays invisible: its replay sees only the
+    committed corpus and returns the clean run's stats and rows.
+    Building the store frames runs no Spark job (the commit record
+    carries the schemas)."""
+    from lbf_spark import fsio
+
+    def text(tag, i):
+        return " ".join(f"{tag}{i}w{k}" for k in range(12))
+
+    schema = "doc_id long, text string"
+    b0 = [(i, text("d", i)) for i in range(40)]
+    # 30 copies of corpus docs, then 4 internal clusters of 3/3/2/2
+    # (copies have Jaccard 1, so LSH finds every pair)
+    b1 = [(100 + i, text("d", i)) for i in range(30)]
+    doc_id = 130
+    for c, size in enumerate((3, 3, 2, 2)):
+        for _ in range(size):
+            b1.append((doc_id, text("c", c)))
+            doc_id += 1
+
+    def ingest(store, rows, batch_id):
+        return dedup_ingest_batch(
+            spark.createDataFrame(rows, schema), batch_id, store, threshold=0.5
+        )
+
+    def corpus_rows(store):
+        corpus, _ = read_ingest_store(spark, store)
+        return sorted(tuple(r) for r in corpus.collect())
+
+    clean = str(tmp_path / "clean")
+    ingest(clean, b0, 0)
+    clean_stats = ingest(clean, b1, 1)
+    assert clean_stats == {"batch_id": 1, "n_in": 40, "n_kept": 4,
+                           "n_dropped_corpus": 30, "n_dropped_internal": 6}
+
+    store = str(tmp_path / "crashed")
+    ingest(store, b0, 0)
+    real_write = fsio.write_text_atomic
+
+    def crash_on_commit(spark_, path, text_):
+        if path.endswith("state.json"):
+            raise OSError("crash before commit")
+        real_write(spark_, path, text_)
+
+    with monkeypatch.context() as m:
+        m.setattr(fsio, "write_text_atomic", crash_on_commit)
+        with pytest.raises(OSError, match="crash before commit"):
+            ingest(store, b1, 1)
+    assert "batch-00001" in fsio.list_names(spark, f"{store}/corpus")
+    assert read_ingest_hwm(spark, store) == 0
+    (corpus, postings), jobs = build_jobs(
+        spark, lambda: read_ingest_store(spark, store)
+    )
+    assert jobs == []
+    assert corpus.count() == 40 and postings.count() > 0
+
+    assert ingest(store, b1, 1) == clean_stats
+    assert corpus_rows(store) == corpus_rows(clean)
+
+
+def test_ingest_store_without_recorded_schemas_still_resumes(spark, tmp_path):
+    """A store whose ``state.json`` predates the recorded schemas (only
+    ``batch_hwm``) keeps its high-water mark and its committed corpus,
+    and its next commit records the schemas."""
+    import json as _json
+
+    from lbf_spark import fsio
+
+    schema = "doc_id long, text string"
+
+    def docs(ids, tag):
+        return spark.createDataFrame(
+            [(i, " ".join(f"{tag}{i % 100}w{k}" for k in range(12)))
+             for i in ids],
+            schema,
+        )
+
+    store = str(tmp_path / "old_store")
+    dedup_ingest_batch(docs(range(10), "d"), 0, store, threshold=0.5)
+    rows = sorted(tuple(r) for r in read_ingest_store(spark, store)[0].collect())
+    state_file = f"{store}/state.json"
+    fsio.write_text_atomic(spark, state_file, _json.dumps({"batch_hwm": 0}))
+
+    assert read_ingest_hwm(spark, store) == 0
+    corpus, postings = read_ingest_store(spark, store)
+    assert sorted(tuple(r) for r in corpus.collect()) == rows
+    assert postings.count() > 0
+    # 5 copies of committed docs: all dropped against the corpus
+    stats = dedup_ingest_batch(docs(range(100, 105), "d"), 1, store,
+                               threshold=0.5)
+    assert stats["n_dropped_corpus"] == 5 and stats["n_kept"] == 0
+    state = _json.loads(fsio.read_text(spark, state_file))
+    assert state["batch_hwm"] == 1
+    assert {"corpus_schema", "postings_schema"} <= set(state)
+

@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from lbf_spark import fixtures
 from lbf_spark.sources import table as TBL
+from tests.conftest import build_jobs
 
 
 def _explain(df):
@@ -173,21 +174,6 @@ def test_merge_upsert_validates_schema_and_keys(spark, tiny_events, tmp_path):
         TBL.merge_upsert(spark, path, ev, keys=["nope"])
 
 
-def _build_jobs(spark, build):
-    """Run ``build()`` under a job group; return (its result, the ids of
-    the Spark jobs it ran)."""
-    import uuid
-
-    sc, group = spark.sparkContext, f"build_{uuid.uuid4().hex}"
-    sc.setLocalProperty("spark.jobGroup.id", group)
-    try:
-        out = build()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_schema_evolution_add_column(spark, tiny_events, tmp_path):
     """v1 write, add-column append, scan reads both with NULL-fill;
     time travel to v1 shows the v1 schema; drop/retype refused; a merge
@@ -209,13 +195,13 @@ def test_schema_evolution_add_column(spark, tiny_events, tmp_path):
     # at most 32 paths: more would add Spark's parallel file-listing job
     assert len(TBL.scan_files(spark, path)) <= 32
 
-    got, jobs = _build_jobs(spark, lambda: TBL.scan(spark, path))
+    got, jobs = build_jobs(spark, lambda: TBL.scan(spark, path))
     assert jobs == []
     head = StructType.fromJson(json.loads(TBL.current_snapshot(path)["schema"]))
     assert got.dtypes == [
         (f.name, f.dataType.simpleString()) for f in head.fields
     ] + [("entity_bucket", "int"), ("ts_day", "bigint")]
-    diff, jobs = _build_jobs(spark, lambda: TBL.snapshot_diff(spark, path, 1))
+    diff, jobs = build_jobs(spark, lambda: TBL.snapshot_diff(spark, path, 1))
     assert jobs == []
     assert diff.filter(
         (F.col("change_type") == "insert") & (F.col("quality") == 0.5)
@@ -606,41 +592,6 @@ def test_merge_leaves_unmatched_files_byte_identical(spark, tiny_events, tmp_pat
             assert after[rel] == digest, f"unmatched file {rel} was rewritten"
 
 
-def test_hot_entity_counts_from_manifests(spark, tmp_path):
-    """The manifests' per-file hot-entity sketches give exact counts for
-    dominant entities and a correct total, with zero data IO — and the
-    pipeline's manifest-driven hot routing picks the same entities as
-    the counts-pass route."""
-    import pandas as pd
-
-    from lbf_spark.plans import pipeline as P
-
-    path = str(tmp_path / "tbl_hot")
-    # 1 dominant entity (600 rows), 20 background entities (10 each)
-    rows = []
-    for i in range(600):
-        rows.append(("hot_e", 1000 + i))
-    for j in range(20):
-        for i in range(10):
-            rows.append((f"bg_{j:02d}", 5000 + j * 100 + i))
-    pdf = pd.DataFrame(rows, columns=["entity", "ts"])
-    df = spark.createDataFrame(pdf).withColumn("v", F.lit(1.0))
-    TBL.write_table(df, path, mode="overwrite", ts_unit_day=10_000)
-
-    meta = TBL.hot_entity_counts(spark, path)
-    assert meta is not None
-    assert meta["total"] == len(rows)
-    assert meta["entities"]["hot_e"] == 600  # exact: dominant everywhere
-
-    got = TBL.scan(spark, path)
-    cfg = P.FeatureConfig(table_path=path, hot_entity_threshold=100)
-    via_manifest = P._hot_entities(got, cfg)
-    via_counts = P._hot_entities(
-        got, P.FeatureConfig(hot_entity_threshold=100)
-    )
-    assert via_manifest == via_counts == ["hot_e"]
-
-
 def test_expire_snapshots_spares_unknown_files(spark, tiny_events, tmp_path):
     """expire_snapshots deletes only manifest-known unreachable files —
     an uncommitted concurrent writer's on-disk parts (in no manifest)
@@ -743,54 +694,6 @@ def test_overwrite_is_logical_not_physical(spark, tiny_events, tmp_path):
     res = TBL.remove_orphan_files(spark, path)
     assert res["n_orphans_deleted"] >= n_files_before
     assert TBL.scan(spark, path).count() == 10
-
-
-def test_hot_routing_manifest_lower_bounds_are_conservative(spark, tmp_path):
-    """The documented conservative edge of manifest-driven hot routing:
-    an entity just above threshold that is never top-8 in any file is
-    routed COLD by the sketch path (its count is invisible) while the
-    counts-pass path routes it hot — the manifest route must always
-    pick a SUBSET of the counts route (routing-only divergence; the
-    hot/rest branches are value-identical)."""
-    import pandas as pd
-
-    from lbf_spark.plans import pipeline as P
-
-    path = str(tmp_path / "tbl_warm")
-    rows = []
-    n_days = 30
-    for d in range(n_days):
-        ts0 = d * 10_000
-        rows.append(("warm_e", ts0 + 1))  # 1 row/day → never top-8
-        for k in range(8):  # 8 crowd entities, 2 rows/day each
-            rows.append((f"crowd_{k}", ts0 + 10 + k))
-            rows.append((f"crowd_{k}", ts0 + 20 + k))
-    pdf = pd.DataFrame(rows, columns=["entity", "ts"])
-    # one writer task → exactly one file per day, all entities together
-    # (parallel tasks would split days into thin files where warm_e can
-    # sneak into a top-8)
-    df = spark.createDataFrame(pdf).withColumn("v", F.lit(1.0)).repartition(1)
-    TBL.write_table(df, path, mode="overwrite", n_buckets=1,
-                    ts_unit_day=10_000)
-
-    meta = TBL.hot_entity_counts(spark, path)
-    assert meta is not None and meta["total"] == len(rows)
-    assert "warm_e" not in meta["entities"]  # crowded out of every top-8
-    for k in range(8):
-        assert meta["entities"][f"crowd_{k}"] == 2 * n_days  # exact
-
-    got = TBL.scan(spark, path)
-    thr = n_days - 5  # warm_e (30 rows) is above threshold in truth
-    via_manifest = P._hot_entities(
-        got, P.FeatureConfig(table_path=path, hot_entity_threshold=thr)
-    )
-    via_counts = P._hot_entities(
-        got, P.FeatureConfig(hot_entity_threshold=thr)
-    )
-    assert "warm_e" in via_counts  # ground truth: warm_e IS hot
-    assert "warm_e" not in via_manifest  # sketch lower bound: routed cold
-    assert set(via_manifest) == {f"crowd_{k}" for k in range(8)}
-    assert set(via_manifest) <= set(via_counts)  # conservative subset
 
 
 def test_snapshot_diff_appends_and_merge(spark, tiny_events, tmp_path):
@@ -1049,9 +952,8 @@ def test_snapshot_tags(spark, tiny_events, tmp_path):
 def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     """The pyarrow driver-side stats fast path must be BIT-IDENTICAL to
     the Spark read-back job it replaces for small local writes: same
-    keys, same [ts_min, ts_max, n_rows, hot] values, same top-8
-    ordering under count ties (desc count, asc str(entity)), null
-    entities counted in n_rows/ts bounds but never ranked."""
+    keys, same [ts_min, ts_max, n_rows] values, null entities counted
+    in n_rows and the ts bounds."""
     import pandas as pd
 
     def both_paths(rows, name, **kw):
@@ -1073,10 +975,13 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
         assert local == via_spark
         # the committed snapshot used one of the two — also identical
         assert snap["file_stats"] == via_spark
+        assert all(len(st) == 3 for st in local.values())
+        assert sum(st[2] for st in local.values()) == len(rows)
         return local
 
     rows = []
-    # >8 entities incl. ties and a null-entity group, spread over ts
+    # many entities with uneven counts and a null-entity group, spread
+    # over ts
     for i, (ent, n) in enumerate(
         [("e01", 5), ("e02", 5), ("e03", 4), ("e04", 4), ("e05", 3),
          ("e06", 3), ("e07", 2), ("e08", 2), ("e09", 2), ("e10", 1),
@@ -1084,15 +989,11 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
     ):
         for j in range(n):
             rows.append({"entity": ent, "ts": 1000 * i + j, "v": float(j)})
-    # hot ordering: ties broken by string order, capped at 8
-    for st in both_paths(rows, "stats_tbl").values():
-        assert len(st[3]) <= 8
-    # string-entity table exercises the str cast equivalence
+    both_paths(rows, "stats_tbl")
+    # string entities
     rows2 = [{"entity": f"s{i % 3}", "ts": i, "v": 0.0} for i in range(30)]
     both_paths(rows2, "stats_tbl2")
-    # long entities, negative ones included, in ONE file with a count
-    # tie straddling the top-8 cut: string order ("-10" < "-3" < "0" <
-    # "10" < "7") decides which of the count-2 entities make the cut
+    # long entities, negative ones included, in ONE file
     rows3 = [
         {"entity": ent, "ts": 100 * k + j, "v": 0.0}
         for k, (ent, n) in enumerate(
@@ -1102,8 +1003,7 @@ def test_file_stats_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
         for j in range(n)
     ]
     (st3,) = both_paths(rows3, "stats_tbl3", n_buckets=1).values()
-    assert st3[3] == {"-1": 3, "-10": 3, "-2": 3, "2": 3,
-                      "-3": 2, "-7": 2, "0": 2, "10": 2}
+    assert st3 == [0, 901, len(rows3)]
 
 
 def test_write_table_failed_land_releases_layout_cache(spark, tmp_path, monkeypatch):
@@ -1141,7 +1041,7 @@ def test_entity_scan_builds_without_a_job_and_prunes_buckets(spark, tmp_path):
     TBL.write_table(fixtures.events_to_spark(spark, ev_pd), path,
                     mode="overwrite", n_buckets=4, ts_unit_day=10_000)
     ents = sorted(ev_pd.entity.unique())[:2]
-    pruned, jobs = _build_jobs(spark, lambda: TBL.scan(spark, path, entities=ents))
+    pruned, jobs = build_jobs(spark, lambda: TBL.scan(spark, path, entities=ents))
     assert jobs == []
 
     keys = ["image_id", "entity", "ts", "entity_bucket"]
