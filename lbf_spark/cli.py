@@ -187,10 +187,7 @@ def _cmd_dedup(args) -> int:
             n=args.ngram, num_hashes=args.num_hashes, bands=args.bands,
             threshold=args.threshold,
         ).select("id_a", "id_b")
-    clusters = dedup.dup_clusters(
-        pairs, reliable=args.checkpoint_dir is not None,
-        checkpoint_dir=args.checkpoint_dir,
-    )
+    clusters = dedup.dup_clusters(pairs, checkpoint_dir=args.checkpoint_dir)
     out = (
         docs.select(F.col(args.id_col).alias("doc_id"))
         .join(clusters, "doc_id", "left")

@@ -151,18 +151,6 @@ def list_files_recursive(spark, path: str, suffix: str) -> list[dict]:
     return sorted(out, key=lambda d: d["path"])
 
 
-def count_files_recursive(spark, path: str, suffix: str) -> int:
-    fs, p, _ = _fs_path(spark, path)
-    if not fs.exists(p):
-        return 0
-    it = fs.listFiles(p, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(suffix):
-            n += 1
-    return n
-
-
 def mkdirs(spark, path: str) -> None:
     fs, p, _ = _fs_path(spark, path)
     fs.mkdirs(p)

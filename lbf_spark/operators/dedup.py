@@ -874,9 +874,7 @@ CLUSTER_BROADCAST_NODES = 2_000_000
 def dup_clusters(
     pairs: DataFrame,
     max_iters: int = 25,
-    reliable: bool = False,
     checkpoint_dir: str | None = None,
-    strict: bool = True,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (doc_id, cluster_id)
     with cluster_id = the smallest doc id in the component (the
@@ -900,14 +898,14 @@ def dup_clusters(
     Fault tolerance / memory:
 
     * Every round is lineage-TRUNCATED (``localCheckpoint`` by
-      default, reliable ``checkpoint`` with ``reliable=True``). This
-      is not optional: round k's plan references round k−1's plan
-      TWICE (once in the neighbor join, once directly), so without
-      truncation the logical plan tree DOUBLES per round — ~2^rounds
-      nodes — and a few dozen rounds OOM the driver just stringifying
-      the plan (observed at the 10× bench corpus). Truncation makes
-      each round's plan O(1).
-    * ``reliable=False`` (default, single-box): each superseded
+      default, reliable ``checkpoint`` when ``checkpoint_dir`` is
+      given). This is not optional: round k's plan references round
+      k−1's plan TWICE (once in the neighbor join, once directly), so
+      without truncation the logical plan tree DOUBLES per round —
+      ~2^rounds nodes — and a few dozen rounds OOM the driver just
+      stringifying the plan (observed at the 10× bench corpus).
+      Truncation makes each round's plan O(1).
+    * No ``checkpoint_dir`` (default, single-box): each superseded
       round's blocks are freed the moment the next round's checkpoint
       materializes (``util.free_local_checkpoint`` — the LogicalRDD's
       backing RDD unpersisted via py4j; the r7 builder note that this
@@ -919,24 +917,18 @@ def dup_clusters(
       accumulated storage + GC pressure). An evicted/lost block is
       NOT recoverable (local checkpoints truncate the recompute
       lineage too) — single-box semantics.
-    * ``reliable=True`` (cluster): rounds go through reliable
-      ``checkpoint()`` to ``checkpoint_dir`` (or the session's
-      pre-set one) — executor loss can NOT kill the run, the blocks
-      live on the DFS. This is the mode a 1000-executor job must use.
+    * ``checkpoint_dir`` (cluster): rounds go through reliable
+      ``checkpoint()`` to that directory — executor loss can NOT kill
+      the run, the blocks live on the DFS. This is the mode a
+      1000-executor job must use.
 
-    Raises (``strict=True``) or warns after ``max_iters`` rounds
-    without a fixpoint — silently returning half-propagated labels
-    would mislabel every component of diameter > max_iters.
+    Raises after ``max_iters`` rounds without a fixpoint — silently
+    returning half-propagated labels would mislabel every component of
+    diameter > max_iters.
     """
-    spark = pairs.sparkSession
+    reliable = checkpoint_dir is not None
     if reliable:
-        if checkpoint_dir is not None:
-            spark.sparkContext.setCheckpointDir(checkpoint_dir)
-        elif spark.sparkContext.getCheckpointDir() is None:
-            raise ValueError(
-                "dup_clusters(reliable=True) needs a checkpoint dir: pass "
-                "checkpoint_dir= or call sparkContext.setCheckpointDir first"
-            )
+        pairs.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
     def _materialize(df: DataFrame) -> DataFrame:
         if reliable:
@@ -948,9 +940,7 @@ def dup_clusters(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # pair lineage (LSH join + verify) executes exactly once
-    edges = edges.checkpoint(eager=True) if reliable else edges.localCheckpoint(
-        eager=True
-    )
+    edges = _materialize(edges)
     labels = _materialize(
         edges.select(F.col("src").alias("id")).distinct()
         .withColumn("label", F.col("id"))
@@ -1020,15 +1010,10 @@ def dup_clusters(
         # actions finish — scope-registered, freed by release_caches()
         _SCOPE.frames.append(ck)
     if not converged:
-        msg = (
+        raise RuntimeError(
             f"dup_clusters did not converge in max_iters={max_iters} rounds; "
             "labels for components of larger diameter are still propagating"
         )
-        if strict:
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, stacklevel=2)
     return labels.select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
     )

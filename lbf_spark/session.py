@@ -54,8 +54,15 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession tuned for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or ``local[*]``)
-    and ``shuffle_partitions`` to ``$LBF_SHUFFLE_PARTITIONS`` (or 32).
+    When a SparkContext is already running, its session is returned
+    with only what the caller passed (``shuffle_partitions``,
+    ``extra_conf``) set on it: the engine defaults were applied when it
+    was built, and re-applying them would undo settings made since.
+    ``app_name`` and ``master`` cannot change a running context.
+
+    Otherwise ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (or
+    ``local[*]``) and ``shuffle_partitions`` to
+    ``$LBF_SHUFFLE_PARTITIONS`` (or 32).
     When spark-submit started the driver, every key the launcher set
     (``--master``, ``--conf``, ``--driver-memory``, spark-defaults)
     keeps the launcher's value, and this function's settings, the
@@ -69,6 +76,13 @@ def get_spark(
     SparkContext keeps its own values, and the codegen cache, built
     once per JVM, also outlives a ``stop()`` + ``get_spark()`` restart.
     """
+    from pyspark import SparkContext
+
+    if SparkContext._active_spark_context is not None:
+        conf = dict(extra_conf or {})
+        if shuffle_partitions is not None:
+            conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+        return _build(conf)
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
@@ -134,12 +148,18 @@ def get_spark(
         "spark.ui.enabled": "false",
         **(extra_conf or {}),
     }
+    return _build(conf)
+
+
+def _build(conf: dict[str, str]) -> SparkSession:
+    """Create or fetch the session with ``conf`` set, minus the keys
+    spark-submit's launcher set, and ship the package to executors."""
     launcher = _launcher_keys()
     if launcher:
         # spark-submit already started the driver JVM with its heap, so
         # a filled-in driver memory could not apply and would only make
         # the reported conf overstate the heap
-        del conf["spark.driver.memory"]
+        conf.pop("spark.driver.memory", None)
     builder = SparkSession.builder
     for k, v in conf.items():
         if k not in launcher:

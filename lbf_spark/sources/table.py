@@ -93,6 +93,25 @@ def _parse_spec(spec: dict) -> tuple[int, int]:
     return n_buckets, ts_unit
 
 
+def _spec(n_buckets: int, ts_unit_day: int) -> dict:
+    """(n_buckets, ts_unit_day) → ``partition_spec`` manifest entry,
+    the inverse of ``_parse_spec``."""
+    return {
+        "entity_bucket": f"bucket({n_buckets}, entity)",
+        "ts_day": f"floor(ts / {ts_unit_day})",
+    }
+
+
+def _snap_names(spark, meta_dir: str) -> list[str]:
+    """The snapshot manifests' file names in ``meta_dir``, oldest first."""
+    from lbf_spark import fsio
+
+    return [
+        f for f in fsio.list_names(spark, meta_dir)
+        if f.startswith("snap-") and f.endswith(".json")
+    ]
+
+
 def _spec_generations(
     snaps: list[dict], snapshot_id: int | None = None
 ) -> set[tuple[int, int]]:
@@ -150,7 +169,7 @@ def write_table(
     layout_cols: list[str] | None = None,
     layout_bits: int = 8,
     layout_files: int = 8,
-    extra: dict | None = None,
+    batch_id: int | None = None,
 ) -> dict:
     """Partitioned write + snapshot manifest. Returns the snapshot.
 
@@ -169,10 +188,11 @@ def write_table(
     the leading key. The key column itself is dropped before write —
     the clustering is carried by row order.
 
-    ``extra`` fields merge into the manifest inside the SAME exclusive
-    commit (exactly-once sinks record their batch_id this way — a
-    post-commit patch would leave a crash window where the snapshot is
-    committed but not yet idempotency-tagged).
+    ``batch_id`` (a streaming sink's micro-batch id) is recorded in the
+    manifest with the raised ``batch_hwm`` inside the SAME exclusive
+    commit (see ``_commit``) — a post-commit patch would leave a crash
+    window where the snapshot is committed but not yet
+    idempotency-tagged.
 
     ``mode="overwrite"`` is LOGICAL (Iceberg semantics): the new
     snapshot's ``overwrite`` mode resets the visible file set at
@@ -183,10 +203,7 @@ def write_table(
     was decided."""
     from pyspark import StorageLevel
 
-    from lbf_spark import fsio
-
     spark = df.sparkSession
-    meta_dir = fsio.join(path, "metadata")
     cur = current_snapshot(path, spark)
     prev = cur if mode == "append" else None
     if prev is not None:
@@ -240,43 +257,13 @@ def write_table(
     finally:
         if _layout_cache is not None:
             _layout_cache.unpersist()
-    fsio.mkdirs(spark, meta_dir)
-    existing = [f for f in fsio.list_names(spark, meta_dir) if f.startswith("snap-") and f.endswith(".json")]
-    parent = existing[-1] if existing else None
-    # next id = last EXISTING id + 1, never len(existing)+1: snapshot
-    # expiration deletes prefix manifests, so after expire(keep_last=1)
-    # a count-based id would collide with (or sort before) the retained
-    # snapshot and append rows invisibly
-    if existing:
-        next_id = int(existing[-1].split("-")[1].split(".")[0]) + 1
-    else:
-        next_id = 1
-    schema_json = df.schema.json()
-    snapshot = dict(extra or {})
-    snapshot.update(
-        {
-            "snapshot_id": next_id,
-            "parent": parent,
-            "schema": schema_json,
-            "partition_spec": {
-                "entity_bucket": f"bucket({n_buckets}, entity)",
-                "ts_day": f"floor(ts / {ts_unit_day})",
-            },
-            "added_files": added,
-            "file_stats": _file_ts_stats(
-                spark, fsio.join(path, "data"), added, schema_json
-            ),
-            "n_data_files": fsio.count_files_recursive(
-                spark, fsio.join(path, "data"), ".parquet"
-            ),
-            "mode": mode,
-        }
+    # the head as listed AFTER the land: a snapshot another writer
+    # committed during the land becomes this one's parent, not a rival
+    return _commit(
+        spark, path, current_snapshot(path, spark), mode=mode,
+        schema=df.schema.json(), spec=_spec(n_buckets, ts_unit_day),
+        added=added, batch_id=batch_id,
     )
-    name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(
-        spark, fsio.join(meta_dir, name), snapshot, path, added, cur
-    )
-    return snapshot
 
 
 #: write-path physical mode: "staged" (stage-then-adopt — the safe
@@ -286,38 +273,30 @@ def write_table(
 #: as the control arm of the staged-write A/B benchmark).
 LAND_MODE = "staged"
 
-#: component timings (seconds) of the most recent write_table /
-#: merge_upsert on this driver: {"land": …, "stats": …, "commit": …}.
-#: Observability for the bench decomposition; not a public API.
-LAST_WRITE_PROFILE: dict = {}
-
-#: running totals of the same components since the last reset — the
-#: staged-write A/B sums a whole multi-write workload with these.
+#: running wall-time totals (seconds) of the table writes' components
+#: {"land": …, "stats": …, "commit": …} since the last reset —
+#: observability for the bench decomposition; not a public API.
 WRITE_PROFILE_TOTALS: dict = {}
 
 
 def reset_write_profile() -> None:
-    LAST_WRITE_PROFILE.clear()
     WRITE_PROFILE_TOTALS.clear()
 
 
 @contextlib.contextmanager
 def _timed(key: str):
-    """Record the wall time of the enclosed block as write-profile
-    component ``key``, in both the last-write and the running totals."""
+    """Add the wall time of the enclosed block to write-profile
+    component ``key``."""
     t0 = time.time()
     try:
         yield
     finally:
-        dt = time.time() - t0
-        LAST_WRITE_PROFILE[key] = round(dt, 4)
         WRITE_PROFILE_TOTALS[key] = round(
-            WRITE_PROFILE_TOTALS.get(key, 0.0) + dt, 4
+            WRITE_PROFILE_TOTALS.get(key, 0.0) + time.time() - t0, 4
         )
 
 
 def _land_data_files(spark, pdf: DataFrame, path: str) -> list[str]:
-    LAST_WRITE_PROFILE["mode"] = LAND_MODE
     with _timed("land"):
         if LAND_MODE == "direct":
             return _land_data_files_direct(spark, pdf, path)
@@ -386,36 +365,81 @@ def _land_data_files_staged(spark, pdf: DataFrame, path: str) -> list[str]:
     return sorted(parts)
 
 
-def _commit_or_cleanup(
-    spark, manifest_path: str, snapshot: dict, path: str, added: list[str],
-    head: dict | None,
-) -> None:
-    """Exclusive manifest commit; on losing the snapshot-id race,
-    best-effort delete the data files this attempt already moved into
-    ``data/`` so a retry starts clean, then raise ConcurrentWriteError.
+def batch_high_water(head: dict | None) -> int:
+    """The highest streaming batch id durable in a table whose latest
+    snapshot is ``head``; -1 when there is no batch history (or no
+    table). Every batch commit raises the manifest's ``batch_hwm`` and
+    every other commit carries the head's forward (``_commit``), so a
+    sink's replay check reads the latest manifest alone."""
+    return -1 if head is None else int(head.get("batch_hwm", -1))
 
-    ``head`` is the snapshot this commit follows. Its ``batch_hwm``
-    (the highest streaming batch id already durable in the table) is
-    carried into ``snapshot`` unless the commit sets its own, so a
+
+def _commit(
+    spark,
+    path: str,
+    head: dict | None,
+    *,
+    mode: str,
+    schema: str,
+    spec: dict,
+    added: list[str],
+    removed: list[str] | None = None,
+    batch_id: int | None = None,
+    rollback_of: int | None = None,
+) -> dict:
+    """Commit the snapshot that follows ``head`` (None: the table's
+    first) and return it — the one writer of the manifest format.
+
+    The snapshot gets id ``head + 1`` with ``head``'s manifest as its
+    parent, the per-file stats of ``added`` (read under ``schema``),
+    and ``removed_files``/``rollback_of`` when given. ``batch_id``
+    records a sink's micro-batch and raises ``batch_hwm`` to at least
+    it; any other commit carries ``head``'s ``batch_hwm``, so a
     compaction, spec evolution, rollback or plain write between two
-    sink batches keeps the sink's replay check a one-manifest read."""
+    sink batches keeps the sink's replay check a one-manifest read.
+
+    The manifest write is exclusive: on losing the snapshot-id race
+    this best-effort deletes the data files this attempt landed, so a
+    retry starts clean, and raises ConcurrentWriteError. A rollback's
+    ``added`` are re-added files other snapshots own: never deleted."""
     from lbf_spark import fsio
 
-    if head is not None and "batch_hwm" in head:
-        snapshot.setdefault("batch_hwm", head["batch_hwm"])
+    sid = head["snapshot_id"] + 1 if head is not None else 1
+    data_dir = fsio.join(path, "data")
+    snapshot = {
+        "snapshot_id": sid,
+        "parent": f"snap-{head['snapshot_id']:05d}.json" if head else None,
+        "schema": schema,
+        "partition_spec": spec,
+        "added_files": added,
+        "file_stats": _file_ts_stats(spark, data_dir, added, schema),
+        "mode": mode,
+    }
+    if removed is not None:
+        snapshot["removed_files"] = removed
+    if rollback_of is not None:
+        snapshot["rollback_of"] = rollback_of
+    if batch_id is not None:
+        snapshot["batch_id"] = batch_id
+        snapshot["batch_hwm"] = max(batch_high_water(head), batch_id)
+    elif head is not None and "batch_hwm" in head:
+        snapshot["batch_hwm"] = head["batch_hwm"]
     with _timed("commit"):
         try:  # optimistic concurrency: exactly one writer claims this id
             fsio.write_text_exclusive(
-                spark, manifest_path, json.dumps(snapshot, indent=1)
+                spark,
+                fsio.join(path, "metadata", f"snap-{sid:05d}.json"),
+                json.dumps(snapshot, indent=1),
             )
         except FileExistsError as e:
-            data_dir = fsio.join(path, "data")
-            for rel in added:
-                try:
-                    fsio.delete(spark, fsio.join(data_dir, rel))
-                except Exception:
-                    pass  # leftover becomes an orphan; remove_orphan_files reclaims
+            if mode != "rollback":
+                for rel in added:
+                    try:
+                        fsio.delete(spark, fsio.join(data_dir, rel))
+                    except Exception:
+                        pass  # leftover becomes an orphan; remove_orphan_files reclaims
             raise ConcurrentWriteError(str(e)) from e
+    return snapshot
 
 
 def _file_ts_stats(spark, data_dir: str, files: list[str], schema_json: str) -> dict:
@@ -525,9 +549,9 @@ def _read_snaps(spark, meta_dir: str) -> list[dict]:
     deletes the oldest manifests)."""
     from lbf_spark import fsio
 
-    names = [f for f in fsio.list_names(spark, meta_dir) if f.startswith("snap-") and f.endswith(".json")]
     snaps = [
-        json.loads(fsio.read_text(spark, fsio.join(meta_dir, n))) for n in names
+        json.loads(fsio.read_text(spark, fsio.join(meta_dir, n)))
+        for n in _snap_names(spark, meta_dir)
     ]
     ids = [s["snapshot_id"] for s in snaps]
     if ids and ids != list(range(ids[0], ids[0] + len(ids))):
@@ -596,10 +620,10 @@ def current_snapshot(path: str, spark: SparkSession | None = None) -> dict | Non
 
     spark = spark or SparkSession.getActiveSession()
     meta_dir = fsio.join(path, "metadata")
-    snaps = [f for f in fsio.list_names(spark, meta_dir) if f.startswith("snap-") and f.endswith(".json")]
-    if not snaps:
+    names = _snap_names(spark, meta_dir)
+    if not names:
         return None
-    return json.loads(fsio.read_text(spark, fsio.join(meta_dir, snaps[-1])))
+    return json.loads(fsio.read_text(spark, fsio.join(meta_dir, names[-1])))
 
 
 def incremental_files(
@@ -703,9 +727,7 @@ def snapshot_diff(
     return ins.unionByName(dele)
 
 
-def rollback(
-    spark: SparkSession, path: str, to_id: int, extra: dict | None = None
-) -> dict:
+def rollback(spark: SparkSession, path: str, to_id: int) -> dict:
     """Metadata-only rollback (Iceberg ``rollback_to_snapshot``): commit
     a NEW snapshot whose visible file set equals snapshot ``to_id``'s —
     bad appends/merges are undone by MOVING THE POINTER, never by
@@ -726,10 +748,11 @@ def rollback(
     Changelog consumers: ``incremental_files`` refuses to cross a
     rollback (re-added files were already delivered);
     ``snapshot_diff`` is exact across it (symmetric file-set
-    difference). A streaming sink's ``batch_hwm`` is carried forward:
-    the rollback undoes the rolled-back batches' data, not their
-    delivery, so replaying one of those batch ids stays a no-op; data
-    to restore is written again as a new batch or a plain write."""
+    difference). A streaming sink's ``batch_hwm`` is carried forward
+    (``_commit``): the rollback undoes the rolled-back batches' data,
+    not their delivery, so replaying one of those batch ids stays a
+    no-op; data to restore is written again as a new batch or a plain
+    write."""
     from lbf_spark import fsio
 
     meta_dir = fsio.join(path, "metadata")
@@ -750,33 +773,13 @@ def rollback(
     cur_set, tgt_set = set(current), set(target)
     re_added = [f for f in target if f not in cur_set]
     removed = [f for f in current if f not in tgt_set]
-    data_dir = fsio.join(path, "data")
-    snapshot = dict(extra or {})
-    snapshot.update(
-        {
-            "snapshot_id": head + 1,
-            "parent": f"snap-{head:05d}.json",
-            "schema": tgt_snap["schema"],
-            "partition_spec": tgt_snap["partition_spec"],
-            "added_files": re_added,
-            # stats for re-added files are recomputed, not copied: the
-            # source manifests may already be expired
-            "file_stats": _file_ts_stats(
-                spark, data_dir, re_added, tgt_snap["schema"]
-            ),
-            "removed_files": removed,
-            "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
-            "mode": "rollback",
-            "rollback_of": to_id,
-        }
+    # stats for re-added files are recomputed, not copied: the source
+    # manifests may already be expired
+    return _commit(
+        spark, path, snaps[-1], mode="rollback", schema=tgt_snap["schema"],
+        spec=tgt_snap["partition_spec"], added=re_added, removed=removed,
+        rollback_of=to_id,
     )
-    name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    # nothing was landed by this commit — on a lost race there are no
-    # data files to clean up
-    _commit_or_cleanup(
-        spark, fsio.join(meta_dir, name), snapshot, path, [], snaps[-1]
-    )
-    return snapshot
 
 
 def evolve_partition_spec(
@@ -818,24 +821,10 @@ def evolve_partition_spec(
             f"partition spec already (bucket={nb}, unit={unit}) — "
             "nothing to evolve"
         )
-    snapshot = {
-        "snapshot_id": snaps[-1]["snapshot_id"] + 1,
-        "parent": f"snap-{snaps[-1]['snapshot_id']:05d}.json",
-        "schema": snaps[-1]["schema"],
-        "partition_spec": {
-            "entity_bucket": f"bucket({nb}, entity)",
-            "ts_day": f"floor(ts / {unit})",
-        },
-        "added_files": [],
-        "file_stats": {},
-        "n_data_files": snaps[-1].get("n_data_files"),
-        "mode": "evolve",
-    }
-    name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(
-        spark, fsio.join(meta_dir, name), snapshot, path, [], snaps[-1]
+    return _commit(
+        spark, path, snaps[-1], mode="evolve", schema=snaps[-1]["schema"],
+        spec=_spec(nb, unit), added=[],
     )
-    return snapshot
 
 
 def merge_upsert(
@@ -844,7 +833,7 @@ def merge_upsert(
     changes: DataFrame,
     keys: list[str],
     delete_col: str | None = None,
-    extra: dict | None = None,
+    batch_id: int | None = None,
 ) -> dict:
     """Apply a changelog to the current snapshot — the write-side of
     q84's CDC latest-state semantics (Iceberg ``MERGE INTO`` with
@@ -860,7 +849,8 @@ def merge_upsert(
     untouched files carry over by reference. Replaced files stay on
     disk so pre-merge snapshots remain time-travelable; the new
     snapshot's manifest records them in ``removed_files`` and the
-    rewritten+inserted files in ``added_files``. Both reads take the
+    rewritten+inserted files in ``added_files``; ``batch_id`` is
+    recorded as in ``write_table``. Both reads take the
     head snapshot's manifest schema, so a file written before an
     add-column evolution reads (and is rewritten) with the new column
     NULL.
@@ -929,23 +919,10 @@ def merge_upsert(
         "entity_bucket", "ts_day"
     )
     new_files = _land_data_files(spark, pdf, path)
-    snapshot = dict(extra or {})
-    snapshot["snapshot_id"] = head["snapshot_id"] + 1
-    snapshot.update({
-        "parent": f"snap-{head['snapshot_id']:05d}.json",
-        "schema": head["schema"],
-        "partition_spec": spec,
-        "added_files": new_files,
-        "file_stats": _file_ts_stats(spark, data_dir, new_files, head["schema"]),
-        "removed_files": affected,
-        "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
-        "mode": "merge",
-    })
-    name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(
-        spark, fsio.join(meta_dir, name), snapshot, path, new_files, head
+    return _commit(
+        spark, path, head, mode="merge", schema=head["schema"], spec=spec,
+        added=new_files, removed=affected, batch_id=batch_id,
     )
-    return snapshot
 
 
 def scan(
@@ -1145,13 +1122,7 @@ def expire_snapshots(
         for g in _spec_generations([s])
     } - {own}
     if hist_gens:
-        oldest["spec_history"] = [
-            {
-                "entity_bucket": f"bucket({nb}, entity)",
-                "ts_day": f"floor(ts / {unit})",
-            }
-            for nb, unit in sorted(hist_gens)
-        ]
+        oldest["spec_history"] = [_spec(*g) for g in sorted(hist_gens)]
     fsio.write_text_atomic(
         spark,
         fsio.join(meta_dir, f"snap-{oldest['snapshot_id']:05d}.json"),
@@ -1253,20 +1224,9 @@ def compact_table(
     new_files = _land_data_files(
         spark, frag.repartition(n_out, "entity_bucket", "ts_day"), path
     )
-    snapshot = {
-        "snapshot_id": head["snapshot_id"] + 1,
-        "parent": f"snap-{head['snapshot_id']:05d}.json",
-        "schema": head["schema"],
-        "partition_spec": head["partition_spec"],
-        "added_files": new_files,
-        "file_stats": _file_ts_stats(spark, data_dir, new_files, head["schema"]),
-        "removed_files": sorted(doomed),
-        "n_data_files": fsio.count_files_recursive(spark, data_dir, ".parquet"),
-        "mode": "merge",
-    }
-    name = f"snap-{snapshot['snapshot_id']:05d}.json"
-    _commit_or_cleanup(
-        spark, fsio.join(meta_dir, name), snapshot, path, new_files, head
+    _commit(
+        spark, path, head, mode="merge", schema=head["schema"],
+        spec=head["partition_spec"], added=new_files, removed=sorted(doomed),
     )
     return {"n_rewritten_files": len(doomed), "n_new_files": len(new_files)}
 

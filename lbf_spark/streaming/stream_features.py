@@ -122,19 +122,6 @@ def run_stream_to_memory(
     q.awaitTermination()
 
 
-def _batch_high_water(prev: dict | None) -> int | None:
-    """Highest batch_id already durable in a table whose latest
-    snapshot is ``prev`` — O(1) in snapshot count: every batch commit
-    writes ``batch_hwm`` (max committed batch id so far) into its
-    manifest and every other table commit (compaction, spec evolution,
-    rollback, plain writes) carries the head's forward, so only the
-    LATEST manifest is consulted. Returns None when that manifest has
-    no ``batch_hwm`` (no batch history) or there is no table."""
-    if prev is None or "batch_hwm" not in prev:
-        return None
-    return int(prev["batch_hwm"])
-
-
 def table_batch_commit(
     batch_df: DataFrame,
     batch_id: int,
@@ -148,10 +135,10 @@ def table_batch_commit(
     the snapshot, or None if skipped/empty.
 
     ``batch_id`` rides in ``write_table``'s SINGLE exclusive manifest
-    commit (the ``extra`` fields) — never patched in afterwards: a
-    two-step commit-then-tag would leave a crash window where the
-    snapshot is durable but untagged, and the replayed batch would
-    append its rows a second time.
+    commit — never patched in afterwards: a two-step commit-then-tag
+    would leave a crash window where the snapshot is durable but
+    untagged, and the replayed batch would append its rows a second
+    time.
 
     The replay check is O(1) in snapshot count: foreachBatch batch ids
     are strictly increasing within a checkpoint, so a ``batch_hwm``
@@ -163,14 +150,11 @@ def table_batch_commit(
         return None
     spark = batch_df.sparkSession
     prev = TBL.current_snapshot(path, spark)
-    hwm = _batch_high_water(prev)
-    if hwm is not None and batch_id <= hwm:
+    if batch_id <= TBL.batch_high_water(prev):
         return None  # replayed batch: already durable (idempotence)
     return TBL.write_table(
         batch_df, path, mode="append" if prev is not None else "overwrite",
-        n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-        extra={"batch_id": batch_id,
-               "batch_hwm": max(hwm if hwm is not None else -1, batch_id)},
+        n_buckets=n_buckets, ts_unit_day=ts_unit_day, batch_id=batch_id,
     )
 
 
@@ -215,8 +199,7 @@ def cdc_batch_apply(
         return None
     spark = batch_df.sparkSession
     prev = TBL.current_snapshot(path, spark)
-    hwm = _batch_high_water(prev)
-    if hwm is not None and batch_id <= hwm:
+    if batch_id <= TBL.batch_high_water(prev):
         return None  # replayed batch: already durable (idempotence)
     if tiebreak_cols:
         order = [F.desc(ts_col)] + [F.desc(c) for c in tiebreak_cols]
@@ -252,8 +235,6 @@ def cdc_batch_apply(
             .filter((F.col("__rk") == 1) & guard.isNull())
             .drop("__rk", "__peers")
         )
-    extra = {"batch_id": batch_id,
-             "batch_hwm": max(hwm if hwm is not None else -1, batch_id)}
     if prev is None:  # bootstrap: first batch creates the table
         rows = latest
         if delete_col is not None:
@@ -262,10 +243,11 @@ def cdc_batch_apply(
             ).drop(delete_col)
         return TBL.write_table(
             rows, path, mode="overwrite",
-            n_buckets=n_buckets, ts_unit_day=ts_unit_day, extra=extra,
+            n_buckets=n_buckets, ts_unit_day=ts_unit_day, batch_id=batch_id,
         )
     return TBL.merge_upsert(
-        spark, path, latest, keys=keys, delete_col=delete_col, extra=extra,
+        spark, path, latest, keys=keys, delete_col=delete_col,
+        batch_id=batch_id,
     )
 
 
@@ -328,8 +310,7 @@ def incremental_feature_batch(
     keys = list(keys) if keys is not None else ["entity", "ts"]
     spark = batch_df.sparkSession
     raw_prev = TBL.current_snapshot(raw_path, spark)
-    raw_hwm = _batch_high_water(raw_prev)
-    if raw_hwm is not None and batch_id <= raw_hwm:
+    if batch_id <= TBL.batch_high_water(raw_prev):
         return None  # fully committed: replay no-op
 
     def guard_unique(df: DataFrame) -> None:
@@ -348,8 +329,7 @@ def incremental_feature_batch(
         guard_unique(batch_df)
         TBL.write_table(
             feature_fn(batch_df), feat_path, mode="overwrite",
-            n_buckets=n_buckets, ts_unit_day=ts_unit_day,
-            extra={"batch_id": batch_id, "batch_hwm": batch_id},
+            n_buckets=n_buckets, ts_unit_day=ts_unit_day, batch_id=batch_id,
         )
         return table_batch_commit(
             batch_df, batch_id, raw_path,
@@ -363,14 +343,9 @@ def incremental_feature_batch(
         base, batch_df, feature_fn, lookback=lookback, by="entity", order="ts"
     )
     feat_prev = TBL.current_snapshot(feat_path, spark)
-    feat_hwm = _batch_high_water(feat_prev)
-    if feat_hwm is None or batch_id > feat_hwm:
+    if batch_id > TBL.batch_high_water(feat_prev):
         TBL.merge_upsert(
-            spark, feat_path, refreshed, keys=keys,
-            extra={
-                "batch_id": batch_id,
-                "batch_hwm": max(feat_hwm if feat_hwm is not None else -1, batch_id),
-            },
+            spark, feat_path, refreshed, keys=keys, batch_id=batch_id,
         )
     return table_batch_commit(
         batch_df, batch_id, raw_path,

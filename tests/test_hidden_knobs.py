@@ -16,7 +16,8 @@ Driver-built frames come from ``util.local_frame`` (a LocalRelation),
 never ``createDataFrame(<list>)`` (a Python RDD).
 
 Table data files are read by one reader under the manifest's schema,
-and no read takes a glob path.
+no read takes a glob path, and one commit builds every snapshot
+manifest.
 
 And no public code that only tests reach: every public top-level name
 in ``lbf_spark`` must be referenced by production code or sit on
@@ -131,9 +132,9 @@ def test_one_session_factory():
     assert offenders == []
 
 
-def attribute_sites(source: str, attr: str) -> list[tuple[int, str]]:
-    """``(line, enclosing function)`` of every ``.<attr>`` reference in
-    ``source`` (``""`` at module level)."""
+def _sites(source: str, hit) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every node of ``source`` for
+    which ``hit(node)`` holds (``""`` at module level)."""
     found = []
 
     def visit(node, fn: str) -> None:
@@ -141,12 +142,39 @@ def attribute_sites(source: str, attr: str) -> list[tuple[int, str]]:
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 visit(child, child.name)
                 continue
-            if isinstance(child, ast.Attribute) and child.attr == attr:
+            if hit(child):
                 found.append((child.lineno, fn))
             visit(child, fn)
 
     visit(ast.parse(source), "")
     return sorted(found)
+
+
+def attribute_sites(source: str, attr: str) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every ``.<attr>`` reference in
+    ``source`` (``""`` at module level)."""
+    return _sites(
+        source, lambda n: isinstance(n, ast.Attribute) and n.attr == attr
+    )
+
+
+def key_store_sites(source: str, key: str) -> list[tuple[int, str]]:
+    """``(line, enclosing function)`` of every dict literal with the
+    string key ``key`` and every ``x[key] = …`` store in ``source``."""
+
+    def hit(n) -> bool:
+        if isinstance(n, ast.Dict):
+            return any(
+                isinstance(k, ast.Constant) and k.value == key for k in n.keys
+            )
+        return (
+            isinstance(n, ast.Subscript)
+            and isinstance(n.ctx, ast.Store)
+            and isinstance(n.slice, ast.Constant)
+            and n.slice.value == key
+        )
+
+    return _sites(source, hit)
 
 
 def test_driver_frames_go_through_local_frame():
@@ -188,6 +216,35 @@ def test_table_data_read_through_one_reader():
         str(path.relative_to(PKG.parent))
         for path in sorted(PKG.rglob("*.py"))
         if "mergeSchema" in path.read_text()
+    ] == []
+
+
+def test_one_commit_builds_snapshots():
+    """``table._commit`` is the one builder of a snapshot manifest: no
+    other function in ``sources/table.py`` sets a ``"snapshot_id"`` key
+    (``create_tag``'s ref file names the snapshot it pins), and no
+    manifest field is an unread ``n_data_files`` (a full listing of
+    ``data/`` on every commit)."""
+    sample = "\n".join([
+        "def _commit(head):",
+        "    return {'snapshot_id': head + 1}",
+        "def merge(snap):",
+        "    snap['snapshot_id'] = 2",
+        "    ok = snap['snapshot_id'], {'other': 1}",
+        "top = dict({'snapshot_id': 0})",
+    ])
+    assert key_store_sites(sample, "snapshot_id") == [
+        (2, "_commit"), (4, "merge"), (6, ""),
+    ]
+    table = PKG / "sources" / "table.py"
+    assert [
+        site for site in key_store_sites(table.read_text(), "snapshot_id")
+        if site[1] not in ("_commit", "create_tag")
+    ] == []
+    assert [
+        str(path.relative_to(PKG.parent))
+        for path in sorted(PKG.rglob("*.py"))
+        if "n_data_files" in path.read_text()
     ] == []
 
 

@@ -397,13 +397,13 @@ def test_dup_clusters_string_ids_long_chain(spark):
 
 
 def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
-    """reliable=True routes rounds through DFS checkpoint() files —
+    """A checkpoint_dir routes rounds through DFS checkpoint() files —
     same labels, blocks recoverable after executor loss at scale."""
     pairs = spark.createDataFrame(
         [(2, 1), (2, 3), (3, 4), (10, 11)], "id_a long, id_b long"
     )
     got = dedup.dup_clusters(
-        pairs, reliable=True, checkpoint_dir=str(tmp_path / "ckpt")
+        pairs, checkpoint_dir=str(tmp_path / "ckpt")
     ).toPandas().sort_values("doc_id")
     exp = {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
     assert dict(zip(got["doc_id"], got["cluster_id"])) == exp
@@ -412,10 +412,9 @@ def test_dup_clusters_reliable_checkpoint(spark, tmp_path):
     assert os.listdir(tmp_path / "ckpt")  # files actually landed there
 
 
-def test_dup_clusters_nonconvergence_raises_or_warns(spark):
-    """A diameter-4 path cannot converge in one round: strict mode must
-    raise instead of returning half-propagated labels; strict=False
-    warns and returns the partial result."""
+def test_dup_clusters_nonconvergence_raises(spark):
+    """A diameter-4 path cannot converge in one round: dup_clusters
+    must raise instead of returning half-propagated labels."""
     import pytest as _pytest
 
     pairs = spark.createDataFrame(
@@ -424,8 +423,6 @@ def test_dup_clusters_nonconvergence_raises_or_warns(spark):
     )
     with _pytest.raises(RuntimeError, match="did not converge"):
         dedup.dup_clusters(pairs, max_iters=1)
-    with _pytest.warns(UserWarning, match="did not converge"):
-        dedup.dup_clusters(pairs, max_iters=1, strict=False).collect()
 
 
 def test_gopher_quality_and_repetition(spark):

@@ -307,15 +307,7 @@ def test_hot_entities_counts_pass_auto_threshold(spark):
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["entity", "ts"])
     ).withColumn("v", F.lit(1.0))
-    # pinned here: an in-process CLI run in another test re-applies
-    # get_spark's default of 32 to the shared session
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        hot = P._hot_entities(df)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    assert hot == ["hot_e"]
+    assert P._hot_entities(df) == ["hot_e"]
 
 
 def test_tfidf_and_bm25_broadcast_small_sides(spark):

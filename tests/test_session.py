@@ -1,4 +1,5 @@
-"""Session defaults: the heap size and the generated-class cache."""
+"""Session defaults: the heap size, the generated-class cache, and a
+running session keeping its settings."""
 
 from lbf_spark import fixtures, session
 from lbf_spark.operators import dedup
@@ -46,3 +47,21 @@ def test_repeated_pass_compiles_no_code(spark, tiny_events, tiny_anchors):
     before, _ = codegen_counters(spark)
     assert one_pass() == 8
     assert codegen_counters(spark)[0] - before == 0
+
+
+def test_get_spark_keeps_a_running_sessions_settings(spark, tmp_path):
+    """A bare ``get_spark()`` and an in-process CLI run fetch the running
+    session without re-applying the engine defaults over it: the
+    fixture's 8 shuffle partitions and a split size set since stay."""
+    from lbf_spark.cli import main
+
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1m")
+    try:
+        assert session.get_spark().sparkContext is spark.sparkContext
+        assert main(["table", "tags", str(tmp_path / "no_table")]) == 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+        assert spark.conf.get(key) == "1m"
+    finally:
+        spark.conf.set(key, prev)

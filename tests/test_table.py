@@ -16,7 +16,7 @@ def test_write_scan_roundtrip_and_snapshots(spark, tiny_events, tmp_path):
     path = str(tmp_path / "tbl")
     ev = fixtures.events_to_spark(spark, tiny_events)
     snap1 = TBL.write_table(ev, path, mode="overwrite", ts_unit_day=10_000)
-    assert snap1["snapshot_id"] == 1 and snap1["n_data_files"] > 0
+    assert snap1["snapshot_id"] == 1 and snap1["added_files"]
 
     got = TBL.scan(spark, path)
     assert got.count() == len(tiny_events)
@@ -35,7 +35,7 @@ def test_table_file_uri_roundtrip(spark, tiny_events, tmp_path):
     path = "file://" + str(tmp_path / "tbl_uri")
     ev = fixtures.events_to_spark(spark, tiny_events)
     snap = TBL.write_table(ev, path, mode="overwrite", ts_unit_day=10_000)
-    assert snap["snapshot_id"] == 1 and snap["n_data_files"] > 0
+    assert snap["snapshot_id"] == 1 and snap["added_files"]
     assert TBL.scan(spark, path).count() == len(tiny_events)
     assert TBL.current_snapshot(path)["snapshot_id"] == 1
 
@@ -136,7 +136,9 @@ def test_merge_upsert_update_insert_delete(spark, tiny_events, tmp_path):
     snap = TBL.merge_upsert(spark, path, changes, keys=["image_id"], delete_col="__del")
     assert snap["mode"] == "merge" and snap["removed_files"]
     # untouched files carried by reference, not rewritten
-    assert len(snap["removed_files"]) < snap["n_data_files"]
+    assert len(snap["removed_files"]) < len(
+        TBL.scan_files(spark, path, snapshot_id=1)
+    )
 
     got = TBL.scan(spark, path).toPandas()
     assert len(got) == n0 - 3 + 2
@@ -443,6 +445,42 @@ def test_concurrent_snapshot_commit_loses_cleanly(
         .count()
     )
     assert got_cc == 20
+
+
+def test_rollback_losing_the_id_race_keeps_readded_files(
+    spark, tiny_events, tmp_path, monkeypatch
+):
+    """A rollback that loses the snapshot-id race raises
+    ConcurrentWriteError and deletes nothing: its added files are
+    RE-ADDED files that other snapshots own. The competitor is the same
+    rollback committed first, so both the new head and the target
+    snapshot read the files the loser re-added."""
+    import pytest as _pytest
+
+    from lbf_spark import fsio
+
+    path = str(tmp_path / "tbl_rb_race")
+    ev = fixtures.events_to_spark(spark, tiny_events)
+    TBL.write_table(ev, path, mode="overwrite", ts_unit_day=10_000)      # snap 1
+    n_rows = len(tiny_events)
+    TBL.merge_upsert(spark, path, ev.limit(5), keys=["image_id"])        # snap 2
+    re_added = TBL.rollback(spark, path, to_id=1)["added_files"]         # snap 3
+    assert re_added
+    # the losing rollback's listing has not seen the competitor's
+    # snap-00003, so it claims id 3 too
+    real_list = fsio.list_names
+
+    def stale_list(s, p):
+        return [n for n in real_list(s, p) if "snap-00003" not in n]
+
+    monkeypatch.setattr(fsio, "list_names", stale_list)
+    with _pytest.raises(TBL.ConcurrentWriteError, match="another writer"):
+        TBL.rollback(spark, path, to_id=1)
+    monkeypatch.undo()
+    assert TBL.current_snapshot(path, spark)["snapshot_id"] == 3
+    for sid in (None, 1):  # the head, then the rollback target
+        assert set(re_added) <= set(TBL.scan_files(spark, path, snapshot_id=sid))
+        assert TBL.scan(spark, path, snapshot_id=sid).count() == n_rows
 
 
 def test_merge_upsert_matches_pandas_oracle_seeded(spark, tiny_events, tmp_path):
